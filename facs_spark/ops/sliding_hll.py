@@ -77,20 +77,6 @@ def sliding_hll_raw_points(df: DataFrame, value_col: str,
             .drop("frac"))
 
 
-def sliding_hll_points(df: DataFrame, value_col: str,
-                       ts_col: str) -> DataFrame:
-    """(register, ts_us, rank) with per-(register, ts) max — the
-    deduplicated point set the frontier is a pure function of.
-
-    Partitioned by register ONLY (hash on a subset satisfies the
-    groupBy's clustering), so the downstream frontier window scan
-    reuses the same exchange."""
-    return (sliding_hll_raw_points(df, value_col, ts_col)
-            .repartition("register")
-            .groupBy("register", "ts_us")
-            .agg(F.max("rank").alias("rank")))
-
-
 def _frontier_kernel(iterator):
     """Partition-local LPFM frontier, fully vectorized.
 

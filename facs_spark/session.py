@@ -11,25 +11,105 @@ functions (cloudpickle then pickles them by reference).
 
 from __future__ import annotations
 
+import atexit
+import fcntl
 import os
+import shutil
 import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
 _SHIPPED_SESSIONS: set[int] = set()
+_PACKAGE_ZIP: str | None = None
+
+# Process-lifetime scratch: one mkdtemp root, plus the handoff dirs
+# this process has claimed (dir -> open, flock'ed fd).  Both go at
+# exit through one cleanup, registered by the first that needs it.
+_SCRATCH_ROOT: str | None = None
+_HANDOFFS: dict[str, int] = {}
+_OWNER_PID: int | None = None
 
 
-def repo_root() -> str:
-    return os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+def _cleanup() -> None:
+    if os.getpid() != _OWNER_PID:  # a forked child inherits the handler
+        return
+    for d, fd in _HANDOFFS.items():
+        shutil.rmtree(d, ignore_errors=True)
+        os.close(fd)
+    if _SCRATCH_ROOT is not None:
+        shutil.rmtree(_SCRATCH_ROOT, ignore_errors=True)
+
+
+def _register_cleanup() -> None:
+    global _OWNER_PID
+    if _OWNER_PID is None:
+        _OWNER_PID = os.getpid()
+        atexit.register(_cleanup)
+
+
+def _scratch(prefix: str) -> str:
+    """A fresh dir under this process's scratch root.
+
+    Staged fixtures, stream checkpoints and sink outputs must outlive
+    the query call that made them (the caller collects AFTER the query
+    function returns), so per-call cleanup is impossible; instead the
+    whole root is removed at process exit."""
+    global _SCRATCH_ROOT
+    if _SCRATCH_ROOT is None:
+        _register_cleanup()
+        _SCRATCH_ROOT = tempfile.mkdtemp(prefix="facs_spark_")
+    return tempfile.mkdtemp(prefix=prefix, dir=_SCRATCH_ROOT)
+
+
+def _handoff(name: str) -> str:
+    """Stable path of the data a query hands to its DuckDB oracle.
+
+    Pure: the oracle SQL embeds this path, so building it must not
+    create, lock or depend on the process.  The query side writes it
+    only after ``_claim_handoff``."""
+    return os.path.join(tempfile.gettempdir(), f"facs_spark_{name}",
+                        f"{name}.parquet")
+
+
+def _claim_handoff(path: str) -> str:
+    """Take the handoff dir of ``path`` for this process and return
+    ``path``.  An exclusive non-blocking ``flock`` on the dir keeps two
+    live processes from overwriting each other's data; the lock dies
+    with its holder, so a killed process's leftover dir is simply
+    reclaimed.  The dir is removed at exit."""
+    d = os.path.dirname(path)
+    if d in _HANDOFFS:
+        return path
+    _register_cleanup()
+    while True:
+        os.makedirs(d, exist_ok=True)
+        fd = os.open(d, os.O_RDONLY | os.O_DIRECTORY)
+        try:
+            fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            os.close(fd)
+            raise RuntimeError(
+                f"handoff dir {d} is held by another live process; "
+                "run it with a different TMPDIR") from None
+        try:
+            st = os.stat(d)
+            locked = os.fstat(fd)
+            if (st.st_dev, st.st_ino) == (locked.st_dev, locked.st_ino):
+                _HANDOFFS[d] = fd
+                return path
+        except FileNotFoundError:
+            pass
+        # the exiting holder removed the dir between our open and lock
+        os.close(fd)
 
 
 def package_zip() -> str:
-    """Zip the facs_spark package into a temp file (cached per process)."""
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    out = os.path.join(tempfile.gettempdir(),
-                       f"facs_spark_pkg_{os.getpid()}.zip")
-    if not os.path.exists(out):
+    """Zip the facs_spark package into scratch (once per process)."""
+    global _PACKAGE_ZIP
+    if _PACKAGE_ZIP is None:
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        out = os.path.join(_scratch("pkg_"), "facs_spark.zip")
         with zipfile.ZipFile(out, "w", zipfile.ZIP_DEFLATED) as zf:
             for base, _dirs, files in os.walk(pkg_dir):
                 for f in files:
@@ -37,7 +117,8 @@ def package_zip() -> str:
                         full = os.path.join(base, f)
                         rel = os.path.relpath(full, os.path.dirname(pkg_dir))
                         zf.write(full, rel)
-    return out
+        _PACKAGE_ZIP = out
+    return _PACKAGE_ZIP
 
 
 def ensure_shipped(spark: SparkSession) -> None:

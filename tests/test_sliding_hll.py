@@ -10,7 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from facs_spark.ops.sliding_hll import (hll_estimate, sliding_hll_frontier,
-                                        sliding_hll_points,
+                                        sliding_hll_raw_points,
                                         windows_from_frontier)
 from facs_spark.session import get_spark
 
@@ -34,9 +34,11 @@ def _events(spark, n=20_000, users=5_000, seed=13):
 def test_frontier_answers_any_window_exactly(spark):
     """For arbitrary thresholds, max-rank-per-register computed from
     the frontier equals the one computed from ALL points — the LPFM
-    guarantee that makes the sketch a lossless window summary."""
+    guarantee that makes the sketch a lossless window summary.  The
+    naive reference scans the raw points: the per-register max over
+    them equals the max over the per-(register, ts) deduplicated set."""
     ev = _events(spark)
-    pts = sliding_hll_points(ev, "user_id", "ts").toPandas()
+    pts = sliding_hll_raw_points(ev, "user_id", "ts").toPandas()
     fr = sliding_hll_frontier(ev, "user_id", "ts").collect()
     thrs = [int(np.quantile(pts["ts_us"], q))
             for q in (0.0, 0.2, 0.5, 0.8, 0.99)]

@@ -4,7 +4,8 @@ The production entry (SURVEY §7.6): build a sketch over an input
 table with per-split checkpoints, so a killed job resumes without
 rescanning completed splits.
 
-    spark-submit --py-files /tmp/facs_spark_pkg_*.zip \
+    zip -r facs_spark.zip facs_spark -i '*.py'
+    spark-submit --py-files facs_spark.zip \
         tools/run_pipeline.py \
         --input /data/pages.parquet --column text \
         --sketch bloom --k 15 --error-rate 0.0005 \
