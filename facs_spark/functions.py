@@ -21,6 +21,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
 from .session import ensure_shipped
+from .sketch.hashing import ascii_lower, length_group_matrices
 
 
 def _sketch_of(blob: bytes, cache: dict):
@@ -36,141 +37,75 @@ def _sketch_of(blob: bytes, cache: dict):
     return sk
 
 
+def _reader(return_type: str, fn, blobs: int = 1):
+    """The one SQL reader body: a pandas UDF returning
+    ``fn(sketch, ..., *args)`` per row, where the first ``blobs``
+    columns are sketch blobs, each distinct one deserialized once per
+    Arrow batch."""
+    @pandas_udf(return_type)
+    def read(*cols: pd.Series) -> pd.Series:
+        cache: dict = {}
+        return pd.Series([
+            fn(*(_sketch_of(b, cache) for b in row[:blobs]), *row[blobs:])
+            for row in zip(*cols)])
+    return read
+
+
+def _key(k):
+    """Integral keys hash as int64, anything else as its str."""
+    return int(k) if isinstance(k, (int, np.integer)) else str(k)
+
+
+def _estimate(sk):
+    return sk.estimate()
+
+
+def _quantile(sk, q):
+    return sk.quantile(float(q))
+
+
+def _contains(sk, k):
+    return bool(sk.contains_batch([_key(k)])[0])
+
+
+def _bloom_contains(sk, k):
+    # SAME normalization as the build side: byte-level ASCII tolower,
+    # never unicode str.lower()
+    enc = [ascii_lower(("" if k is None else str(k)).encode("utf-8"))]
+    hit = False
+    for _idx, mat in length_group_matrices(enc):
+        hit = bool(sk.contains_batch(mat)[0])
+    return hit
+
+
+# SQL name -> (return type, fn[, leading blob columns]) for ``_reader``
+_READERS = {
+    "hll_estimate": ("double", _estimate),
+    "theta_estimate": ("double", _estimate),
+    "ams_f2": ("double", _estimate),
+    "kll_quantile": ("double", _quantile),
+    "tdigest_quantile": ("double", _quantile),
+    "cms_count": ("long", lambda sk, k: int(sk.query_batch([k])[0])),
+    "theta_intersect": ("double", lambda a, b: a.intersect_estimate(b), 2),
+    "theta_difference": ("double", lambda a, b: a.difference_estimate(b),
+                         2),
+    "bloom_contains": ("boolean", _bloom_contains),
+    "mg_estimate": ("long", lambda sk, k: int(sk.estimate(_key(k)))),
+    # MG's error_bound is a property (N/(k+1)), not a method
+    "mg_error_bound": ("long", lambda sk: int(sk.error_bound)),
+    "cs_estimate": ("double", lambda sk, k: float(sk.estimate(_key(k)))),
+    "cs_error_bound": ("double", lambda sk: float(sk.error_bound())),
+    # cuckoo blobs answer through the same probe (dispatch is by magic
+    # inside sketch_from_bytes); a distinct name keeps SQL readable
+    "cbf_contains": ("boolean", _contains),
+    "cuckoo_contains": ("boolean", _contains),
+}
+
+
 def register_sql_functions(spark: SparkSession) -> None:
     ensure_shipped(spark)
-
-    @pandas_udf("double")
-    def hll_estimate(blobs: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([_sketch_of(b, cache).estimate() for b in blobs])
-
-    @pandas_udf("double")
-    def kll_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([_sketch_of(b, cache).quantile(float(q))
-                          for b, q in zip(blobs, qs)])
-
-    @pandas_udf("double")
-    def tdigest_quantile(blobs: pd.Series, qs: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([_sketch_of(b, cache).quantile(float(q))
-                          for b, q in zip(blobs, qs)])
-
-    @pandas_udf("long")
-    def cms_count(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for b, k in zip(blobs, keys):
-            sk = _sketch_of(b, cache)
-            out.append(int(sk.query_batch([k])[0]))
-        return pd.Series(out)
-
-    @pandas_udf("double")
-    def theta_estimate(blobs: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([_sketch_of(b, cache).estimate() for b in blobs])
-
-    @pandas_udf("double")
-    def theta_intersect(a: pd.Series, b: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([
-            _sketch_of(x, cache).intersect_estimate(_sketch_of(y, cache))
-            for x, y in zip(a, b)])
-
-    @pandas_udf("double")
-    def theta_difference(a: pd.Series, b: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([
-            _sketch_of(x, cache).difference_estimate(_sketch_of(y, cache))
-            for x, y in zip(a, b)])
-
-    @pandas_udf("boolean")
-    def bloom_contains(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        from facs_spark.sketch.hashing import (ascii_lower,
-                                               length_group_matrices)
-        cache: dict = {}
-        out = []
-        for b, k in zip(blobs, keys):
-            sk = _sketch_of(b, cache)
-            # SAME normalization as the build side: byte-level ASCII
-            # tolower, never unicode str.lower()
-            enc = [ascii_lower(("" if k is None else str(k))
-                               .encode("utf-8"))]
-            hit = False
-            for _idx, mat in length_group_matrices(enc):
-                hit = bool(sk.contains_batch(mat)[0])
-            out.append(hit)
-        return pd.Series(out)
-
-    @pandas_udf("long")
-    def mg_estimate(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for b, k in zip(blobs, keys):
-            sk = _sketch_of(b, cache)
-            key = int(k) if isinstance(k, (int, np.integer)) else str(k)
-            out.append(int(sk.estimate(key)))
-        return pd.Series(out)
-
-    @pandas_udf("long")
-    def mg_error_bound(blobs: pd.Series) -> pd.Series:
-        cache: dict = {}
-        # MG's error_bound is a property (N/(k+1)), not a method
-        return pd.Series([int(_sketch_of(b, cache).error_bound)
-                          for b in blobs])
-
-    @pandas_udf("double")
-    def ams_f2(blobs: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([_sketch_of(b, cache).estimate() for b in blobs])
-
-    @pandas_udf("double")
-    def cs_estimate(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for b, k in zip(blobs, keys):
-            sk = _sketch_of(b, cache)
-            key = int(k) if isinstance(k, (int, np.integer)) else str(k)
-            out.append(float(sk.estimate(key)))
-        return pd.Series(out)
-
-    @pandas_udf("double")
-    def cs_error_bound(blobs: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([float(_sketch_of(b, cache).error_bound())
-                          for b in blobs])
-
-    @pandas_udf("boolean")
-    def cbf_contains(blobs: pd.Series, keys: pd.Series) -> pd.Series:
-        cache: dict = {}
-        out = []
-        for b, k in zip(blobs, keys):
-            sk = _sketch_of(b, cache)
-            key = np.asarray([int(k)], dtype=np.int64) \
-                if isinstance(k, (int, np.integer)) else [str(k)]
-            out.append(bool(sk.contains_batch(key)[0]))
-        return pd.Series(out)
-
-    # cuckoo blobs answer through the same shape (dispatch is by
-    # magic inside sketch_from_bytes, so one probe UDF would do —
-    # a distinct name keeps SQL self-documenting)
-    cuckoo_contains = cbf_contains
-
-    spark.udf.register("mg_estimate", mg_estimate)
-    spark.udf.register("mg_error_bound", mg_error_bound)
-    spark.udf.register("ams_f2", ams_f2)
-    spark.udf.register("cs_estimate", cs_estimate)
-    spark.udf.register("cs_error_bound", cs_error_bound)
-    spark.udf.register("cbf_contains", cbf_contains)
-    spark.udf.register("cuckoo_contains", cuckoo_contains)
-    spark.udf.register("hll_estimate", hll_estimate)
-    spark.udf.register("kll_quantile", kll_quantile)
-    spark.udf.register("tdigest_quantile", tdigest_quantile)
-    spark.udf.register("cms_count", cms_count)
-    spark.udf.register("bloom_contains", bloom_contains)
-    spark.udf.register("theta_estimate", theta_estimate)
-    spark.udf.register("theta_intersect", theta_intersect)
-    spark.udf.register("theta_difference", theta_difference)
+    for name, spec in _READERS.items():
+        spark.udf.register(name, _reader(*spec))
     for name, udf in sketch_agg_udfs().items():
         spark.udf.register(name, udf)
 
@@ -201,23 +136,23 @@ def sketch_agg_udf(spec):
 
 def sketch_agg_udfs() -> dict:
     """Default-parameter grouped-agg builders for SQL registration."""
+    return {name: sketch_agg_udf(spec)
+            for name, spec in _agg_specs().items()}
+
+
+def _agg_specs() -> dict:
+    """SQL name -> the default ``SketchSpec`` its builder uses."""
     from .ops.sketch_agg import SketchSpec
     return {
-        "hll_agg": sketch_agg_udf(SketchSpec.make("hll", "_", p=14)),
-        "kll_agg": sketch_agg_udf(SketchSpec.make("kll", "_", k=200)),
-        "tdigest_agg": sketch_agg_udf(
-            SketchSpec.make("tdigest", "_", delta=200.0)),
-        "theta_agg": sketch_agg_udf(
-            SketchSpec.make("theta", "_", k=4096)),
-        "mg_agg": sketch_agg_udf(SketchSpec.make("mg", "_", k=1024)),
-        "ams_agg": sketch_agg_udf(
-            SketchSpec.make("ams", "_", r=5, c=256, seed=0)),
-        "cs_agg": sketch_agg_udf(
-            SketchSpec.make("cs", "_", r=5, c=2048, seed=0)),
-        "cbf_agg": sketch_agg_udf(
-            SketchSpec.make("cbf", "_", capacity=1_000_000,
-                            error_rate=1e-6)),
-        "cuckoo_agg": sketch_agg_udf(
-            SketchSpec.make("cuckoo", "_", capacity=1_000_000,
-                            fbits=32)),
+        "hll_agg": SketchSpec.make("hll", "_", p=14),
+        "kll_agg": SketchSpec.make("kll", "_", k=200),
+        "tdigest_agg": SketchSpec.make("tdigest", "_", delta=200.0),
+        "theta_agg": SketchSpec.make("theta", "_", k=4096),
+        "mg_agg": SketchSpec.make("mg", "_", k=1024),
+        "ams_agg": SketchSpec.make("ams", "_", r=5, c=256, seed=0),
+        "cs_agg": SketchSpec.make("cs", "_", r=5, c=2048, seed=0),
+        "cbf_agg": SketchSpec.make("cbf", "_", capacity=1_000_000,
+                                   error_rate=1e-6),
+        "cuckoo_agg": SketchSpec.make("cuckoo", "_", capacity=1_000_000,
+                                      fbits=32),
     }

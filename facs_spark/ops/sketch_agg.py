@@ -143,14 +143,15 @@ class SketchSpec:
             return p.get("r", 5) * p.get("c", 2048) * 8 + 64
         if self.kind == "cbf":
             from ..sketch.cbf import CountingBloom
-            probe = CountingBloom.create(
+            m, _k = CountingBloom.size_for(
                 capacity=p.get("capacity", 1_000_000),
                 error_rate=p.get("error_rate", 0.0005))
-            return probe.m * 2 + 64
+            return m * 2 + 64
         if self.kind == "cuckoo":
-            b, load = p.get("b", 4), p.get("load", 0.84)
-            need = max(1, int(p.get("capacity", 1_000_000) / (b * load)))
-            m = 1 << max(1, (need - 1).bit_length())
+            from ..sketch.cuckoo import CuckooFilter
+            b = p.get("b", 4)
+            m = CuckooFilter.buckets_for(p.get("capacity", 1_000_000), b,
+                                         p.get("load", 0.84))
             return m * b * 4 + 64
         return 64 * 1024  # t-digest/KLL: small, bounded
 

@@ -3707,6 +3707,33 @@ FROM (SELECT COUNT(*) AS cnt
 """
 
 
+def _member_orders(spark: SparkSession, orders: DataFrame, filt,
+                   group_col: str) -> DataFrame:
+    """Broadcast a membership filter (q84's CBF, q92's cuckoo), probe
+    ``o_custkey`` map-side, and count member orders per ``group_col``:
+    no join exchange, only the per-group counters shuffle."""
+    bc = spark.sparkContext.broadcast(filt.to_bytes())
+
+    def probe_kernel(iterator):
+        import numpy as np
+        import pandas as pd
+        from facs_spark.sketch import sketch_from_bytes as sfb
+        probe = sfb(bc.value)
+        for batch in iterator:
+            keys = batch["o_custkey"].to_numpy(dtype=np.int64)
+            yield pd.DataFrame({group_col: batch[group_col],
+                                "is_member": probe.contains_batch(keys)})
+
+    from .session import ensure_shipped
+    ensure_shipped(spark)
+    probed = orders.select("o_custkey", group_col).mapInPandas(
+        probe_kernel, schema=f"{group_col} string, is_member boolean")
+    return (probed.filter(F.col("is_member"))
+            .groupBy(group_col)
+            .agg(F.count(F.lit(1)).alias("n_orders"))
+            .orderBy(group_col))
+
+
 # =====================================================================
 # q84 — counting-Bloom revocation semi-join (sketch/cbf.py): the
 # reference's remove flow (`facs/remove.c:34-96`) needs a full filter
@@ -3733,26 +3760,7 @@ def q84_cbf_revoked_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
                allowed.filter(F.col("c_custkey") % 7 == 0).collect()]
     if revoked:
         cbf.remove_batch(np.asarray(revoked, dtype=np.int64))
-    bc = spark.sparkContext.broadcast(cbf.to_bytes())
-
-    def probe_kernel(iterator):
-        import pandas as pd
-        from facs_spark.sketch import sketch_from_bytes as sfb
-        filt = sfb(bc.value)
-        for batch in iterator:
-            keys = batch["o_custkey"].to_numpy(dtype=np.int64)
-            yield pd.DataFrame({
-                "o_orderpriority": batch["o_orderpriority"],
-                "is_member": filt.contains_batch(keys)})
-
-    from .session import ensure_shipped
-    ensure_shipped(spark)
-    probed = orders.select("o_custkey", "o_orderpriority").mapInPandas(
-        probe_kernel, schema="o_orderpriority string, is_member boolean")
-    return (probed.filter(F.col("is_member"))
-            .groupBy("o_orderpriority")
-            .agg(F.count(F.lit(1)).alias("n_orders"))
-            .orderBy("o_orderpriority"))
+    return _member_orders(spark, orders, cbf, "o_orderpriority")
 
 
 Q84_SQL = """
@@ -4175,26 +4183,7 @@ def q92_cuckoo_revoked_filter(spark: SparkSession,
         found = ck.remove_batch(np.asarray(revoked, dtype=np.int64))
         if not bool(found.all()):
             raise AssertionError("revoked key missing from filter")
-    bc = spark.sparkContext.broadcast(ck.to_bytes())
-
-    def probe_kernel(iterator):
-        import pandas as pd
-        from facs_spark.sketch import sketch_from_bytes as sfb
-        filt = sfb(bc.value)
-        for batch in iterator:
-            keys = batch["o_custkey"].to_numpy(dtype=np.int64)
-            yield pd.DataFrame({
-                "o_orderstatus": batch["o_orderstatus"],
-                "is_member": filt.contains_batch(keys)})
-
-    from .session import ensure_shipped
-    ensure_shipped(spark)
-    probed = orders.select("o_custkey", "o_orderstatus").mapInPandas(
-        probe_kernel, schema="o_orderstatus string, is_member boolean")
-    return (probed.filter(F.col("is_member"))
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"))
-            .orderBy("o_orderstatus"))
+    return _member_orders(spark, orders, ck, "o_orderstatus")
 
 
 Q92_SQL = """

@@ -34,11 +34,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .base import frame, unframe
+from .base import frame, pack_counters, unframe, unpack_counters
 from .hashing import splitmix64
 
 _MAGIC = b"FSAM"
-_VERSION = 1
 _HDR = struct.Struct("<IIQQ")  # r, c, seed, total
 
 
@@ -142,15 +141,17 @@ class AmsF2:
         return self
 
     # -- wire --------------------------------------------------------
+    # header | counters, dense (v1) or sparse (v2) by density — see
+    # ``base.pack_counters``.  Every key moves every counter, so in
+    # practice only empty partials ship sparse.
     def to_bytes(self) -> bytes:
-        return frame(_MAGIC, _VERSION,
-                     _HDR.pack(self.r, self.c, self.seed, self.total)
-                     + self.z.tobytes())
+        version, body = pack_counters(self.z)
+        return frame(_MAGIC, version,
+                     _HDR.pack(self.r, self.c, self.seed, self.total) + body)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "AmsF2":
-        _v, payload = unframe(_MAGIC, blob)
+        version, payload = unframe(_MAGIC, blob)
         r, c, seed, total = _HDR.unpack_from(payload)
-        z = np.frombuffer(payload, dtype=np.int64, count=r * c,
-                          offset=_HDR.size).copy()
+        z = unpack_counters(version, payload, _HDR.size, np.int64, r * c)
         return cls(r=r, c=c, seed=seed, total=total, z=z)

@@ -10,6 +10,19 @@ merge is the operation this engine adds to distribute it.
 Serialization frame (all sketches): ``magic(4s) | version(u16) |
 payload`` where payload is sketch-specific.  Blobs travel through
 Spark as ``BinaryType`` columns.
+
+Counter-array sketches (HLL, count-min, counting Bloom, cuckoo,
+Count-Sketch, AMS) write ``header | counters``, where the frame
+version says how the counters are laid out (``pack_counters``):
+
+* v1 dense: the raw C-order array bytes;
+* v2 sparse: ``u32 count | u32 idx[count] | values[count]`` with
+  flat indices of the nonzero counters, chosen whenever it is under
+  a quarter of the dense size.
+
+Partials from small partitions or groups are mostly zeros, so the
+shuffle and the SQL readers move only the observed counters; merge
+and query always run dense in memory.
 """
 
 from __future__ import annotations
@@ -62,3 +75,47 @@ def unpack_array(buf: bytes, offset: int = 0) -> tuple[np.ndarray, int]:
     nbytes = size * np.dtype(dt).itemsize
     a = np.frombuffer(buf, dtype=dt, count=size, offset=offset).copy()
     return a, offset + nbytes
+
+
+# sparse must save >= 4x in bytes: its decode scatters into a zeroed
+# dense array, which a smaller saving does not pay for
+_SPARSE_SAVING = 4
+_COUNT = struct.Struct("<I")
+
+
+def pack_counters(arr: np.ndarray) -> tuple[int, bytes]:
+    """(frame version, payload) for a counter array: v2 sparse when
+    that is under 1/``_SPARSE_SAVING`` of the dense bytes (and flat
+    indices fit u32), else v1 dense."""
+    flat = arr.ravel()
+    nz = np.flatnonzero(flat)
+    sparse_bytes = _COUNT.size + nz.size * (4 + flat.itemsize)
+    if flat.size < (1 << 32) and sparse_bytes < flat.nbytes // _SPARSE_SAVING:
+        return 2, (_COUNT.pack(nz.size) + nz.astype(np.uint32).tobytes()
+                   + flat[nz].tobytes())
+    return 1, flat.tobytes()
+
+
+def unpack_counters(version: int, payload: bytes, offset: int, dtype,
+                    shape) -> np.ndarray:
+    """Inverse of ``pack_counters``: a fresh writable array of
+    ``shape`` decoded from ``payload[offset:]``."""
+    dtype = np.dtype(dtype)
+    size = int(np.prod(shape))
+    if version == 1:
+        return np.frombuffer(payload, dtype=dtype, count=size,
+                             offset=offset).reshape(shape).copy()
+    if version == 2:
+        (count,) = _COUNT.unpack_from(payload, offset)
+        offset += _COUNT.size
+        idx = np.frombuffer(payload, dtype=np.uint32, count=count,
+                            offset=offset)
+        vals = np.frombuffer(payload, dtype=dtype, count=count,
+                             offset=offset + 4 * count)
+        out = np.zeros(size, dtype=dtype)
+        out[idx] = vals
+        return out.reshape(shape)
+    # fail loudly on a layout from a newer release: parsing it as
+    # dense counters would silently corrupt the sketch
+    raise ValueError(f"unsupported counter frame version {version} "
+                     "(this release reads v1 dense / v2 sparse)")

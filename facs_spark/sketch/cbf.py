@@ -33,11 +33,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .base import frame, unframe
+from .base import frame, pack_counters, unframe, unpack_counters
 from .hashing import splitmix64
 
 _MAGIC = b"FSCB"
-_VERSION = 1
 _HDR = struct.Struct("<QIQBB")  # m, k, inserts, saturated, underflowed
 
 _MAX = np.uint16(65535)
@@ -61,14 +60,20 @@ class CountingBloom:
 
     MAGIC = _MAGIC
 
-    @classmethod
-    def create(cls, capacity: int, error_rate: float = 0.0005
-               ) -> "CountingBloom":
-        """Standard sizing: m = −n·ln(p)/ln(2)², k = m/n·ln(2)."""
+    @staticmethod
+    def size_for(capacity: int, error_rate: float = 0.0005
+                 ) -> tuple[int, int]:
+        """Standard sizing (m, k): m = −n·ln(p)/ln(2)², k = m/n·ln(2)."""
         n = max(int(capacity), 1)
         m = max(int(math.ceil(-n * math.log(error_rate)
                               / (math.log(2) ** 2))), 8)
         k = max(int(round(m / n * math.log(2))), 1)
+        return m, k
+
+    @classmethod
+    def create(cls, capacity: int, error_rate: float = 0.0005
+               ) -> "CountingBloom":
+        m, k = cls.size_for(capacity, error_rate)
         return cls(m=m, k=k)
 
     def __post_init__(self):
@@ -153,19 +158,23 @@ class CountingBloom:
         return self
 
     # -- wire --------------------------------------------------------
+    # header | counters, dense (v1) or sparse (v2) by density — see
+    # ``base.pack_counters``.  At SQL sizing (1M keys, p=1e-6) the
+    # dense array is 57.5 MB, so a filter over a few keys ships sparse.
     def to_bytes(self) -> bytes:
-        return frame(_MAGIC, _VERSION,
+        version, body = pack_counters(self.counters)
+        return frame(_MAGIC, version,
                      _HDR.pack(self.m, self.k, self.inserts & (2**64 - 1),
                                int(self.saturated), int(self.underflowed))
-                     + self.counters.tobytes())
+                     + body)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CountingBloom":
-        _v, payload = unframe(_MAGIC, blob)
+        version, payload = unframe(_MAGIC, blob)
         m, k, inserts, sat, under = _HDR.unpack_from(payload)
         if inserts >= 2 ** 63:
             inserts -= 2 ** 64
-        counters = np.frombuffer(payload, dtype=np.uint16, count=m,
-                                 offset=_HDR.size).copy()
+        counters = unpack_counters(version, payload, _HDR.size,
+                                   np.uint16, m)
         return cls(m=m, k=k, inserts=inserts, saturated=bool(sat),
                    underflowed=bool(under), counters=counters)

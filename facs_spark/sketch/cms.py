@@ -21,11 +21,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .base import frame, unframe
+from .base import frame, pack_counters, unframe, unpack_counters
 from .hashing import splitmix64
 
 _MAGIC = b"FSCM"
-_VERSION = 1
 _HDR = struct.Struct("<IIQ")  # d, w, total
 
 
@@ -101,41 +100,17 @@ class CountMinSketch:
                               table=self.table + other.table)
 
     # -- io ----------------------------------------------------------
-    # Two wire formats, density-chosen like the HLL blobs: dense v1
-    # (d·w int64 ≈ 1.1 MB at default ε=1e-4) vs sparse v2 (12 bytes
-    # per NONZERO counter: u32 flat index + u64 count).  Partial
-    # sketches from small partitions/groups are mostly zeros, so the
-    # grouped/partial shuffle ships the observed counters, not the
-    # whole table; merge always runs dense in memory.
+    # d, w, total | table, dense (v1, d·w int64 ≈ 1.1 MB at default
+    # ε=1e-4) or sparse (v2, 12 bytes per NONZERO counter) by density
+    # — see ``base.pack_counters``.
     def to_bytes(self) -> bytes:
-        nz = np.flatnonzero(self.table)
-        if (self.d * self.w < (1 << 32)  # u32 flat-index range
-                and nz.size * 12 + 4 < self.d * self.w * 8 // 4):
-            payload = (_HDR.pack(self.d, self.w, self.total)
-                       + struct.pack("<I", nz.size)
-                       + nz.astype(np.uint32).tobytes()
-                       + self.table.ravel()[nz].tobytes())
-            return frame(_MAGIC, 2, payload)
-        return frame(_MAGIC, _VERSION,
-                     _HDR.pack(self.d, self.w, self.total) + self.table.tobytes())
+        version, body = pack_counters(self.table)
+        return frame(_MAGIC, version,
+                     _HDR.pack(self.d, self.w, self.total) + body)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CountMinSketch":
         version, payload = unframe(_MAGIC, blob)
-        if version not in (1, 2):
-            raise ValueError(
-                f"unsupported CMS frame version {version} (this release "
-                "reads v1 dense / v2 sparse)")
         d, w, total = _HDR.unpack_from(payload)
-        if version == 2:
-            (count,) = struct.unpack_from("<I", payload, _HDR.size)
-            off = _HDR.size + 4
-            idx = np.frombuffer(payload, dtype=np.uint32, offset=off,
-                                count=count).astype(np.int64)
-            vals = np.frombuffer(payload, dtype=np.int64,
-                                 offset=off + 4 * count, count=count)
-            table = np.zeros(d * w, dtype=np.int64)
-            table[idx] = vals
-            return cls(d=d, w=w, total=total, table=table.reshape(d, w))
-        table = np.frombuffer(payload, dtype=np.int64, offset=_HDR.size).copy()
-        return cls(d=d, w=w, total=total, table=table.reshape(d, w))
+        return cls(d=d, w=w, total=total, table=unpack_counters(
+            version, payload, _HDR.size, np.int64, (d, w)))

@@ -38,11 +38,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .base import frame, unframe
+from .base import frame, pack_counters, unframe, unpack_counters
 from .hashing import splitmix64
 
 _MAGIC = b"FSCK"
-_VERSION = 1
 _HDR = struct.Struct("<QIIQQB")  # m, b, fbits, seed, inserts, full
 _MAX_KICKS = 500
 
@@ -50,6 +49,16 @@ _MAX_KICKS = 500
 def _key_hash(values) -> np.ndarray:
     from .hashing import key_hash_batch
     return key_hash_batch(values, 0)
+
+
+def _swap_first(row: np.ndarray, want, put) -> bool:
+    """Overwrite the bucket's first slot holding ``want`` with
+    ``put`` (0 == empty: insert is want=0, delete is put=0)."""
+    hit = row == want
+    if hit.any():
+        row[hit.argmax()] = put
+        return True
+    return False
 
 
 @dataclass
@@ -72,16 +81,21 @@ class CuckooFilter:
 
     MAGIC = _MAGIC
 
+    @staticmethod
+    def buckets_for(capacity: int, b: int = 4, load: float = 0.84) -> int:
+        """Power-of-two bucket count holding ``capacity`` keys at
+        target load factor (0.84 default leaves kick headroom below
+        the 0.95 feasibility ceiling of b=4 tables)."""
+        need = max(1, int(capacity / (b * load)))
+        return 1 << max(1, (need - 1).bit_length())
+
     @classmethod
     def create(cls, capacity: int, fbits: int = 16, b: int = 4,
                load: float = 0.84, seed: int = 0) -> "CuckooFilter":
-        """Size for ``capacity`` keys at target load factor (0.84
-        default leaves kick headroom below the 0.95 feasibility
-        ceiling of b=4 tables; size for the UNION when partials will
-        merge)."""
-        need = max(1, int(capacity / (b * load)))
-        m = 1 << max(1, (need - 1).bit_length())
-        return cls(m=m, b=b, fbits=fbits, seed=seed)
+        """Size for ``capacity`` keys (size for the UNION when
+        partials will merge)."""
+        return cls(m=cls.buckets_for(capacity, b, load), b=b,
+                   fbits=fbits, seed=seed)
 
     def __post_init__(self):
         if self.m & (self.m - 1) or self.m <= 0:
@@ -117,15 +131,8 @@ class CuckooFilter:
 
     # -- insert ------------------------------------------------------
     def _insert_fp(self, fp: int, i1: int, i2: int) -> bool:
-        row = self.table[i1]
-        slot = np.flatnonzero(row == 0)
-        if slot.size:
-            row[slot[0]] = fp
-            return True
-        row = self.table[i2]
-        slot = np.flatnonzero(row == 0)
-        if slot.size:
-            row[slot[0]] = fp
+        if _swap_first(self.table[i1], 0, fp) \
+                or _swap_first(self.table[i2], 0, fp):
             return True
         # kick walk: deterministic victim choice from a counter-seeded
         # splitmix stream, so identical inputs rebuild identical tables
@@ -138,10 +145,7 @@ class CuckooFilter:
             s = r % self.b
             cur, self.table[i, s] = self.table[i, s], cur
             i = int(self._alt(np.array([i]), np.array([cur]))[0])
-            row = self.table[i]
-            slot = np.flatnonzero(row == 0)
-            if slot.size:
-                row[slot[0]] = cur
+            if _swap_first(self.table[i], 0, cur):
                 return True
         self.full = True
         return False
@@ -178,9 +182,7 @@ class CuckooFilter:
         out = np.zeros(fp.size, dtype=bool)
         for j in range(fp.size):
             for i in (int(i1[j]), int(i2[j])):
-                slot = np.flatnonzero(self.table[i] == fp[j])
-                if slot.size:
-                    self.table[i, slot[0]] = 0
+                if _swap_first(self.table[i], fp[j], 0):
                     self.inserts -= 1
                     out[j] = True
                     break
@@ -232,17 +234,21 @@ class CuckooFilter:
         return self
 
     # -- wire --------------------------------------------------------
+    # header | table, dense (v1) or sparse (v2) by occupancy — see
+    # ``base.pack_counters``; a filter sized for 1M keys but holding
+    # a few ships only its occupied slots.
     def to_bytes(self) -> bytes:
-        return frame(_MAGIC, _VERSION,
+        version, body = pack_counters(self.table)
+        return frame(_MAGIC, version,
                      _HDR.pack(self.m, self.b, self.fbits, self.seed,
                                self.inserts, int(self.full))
-                     + self.table.tobytes())
+                     + body)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "CuckooFilter":
-        _v, payload = unframe(_MAGIC, blob)
+        version, payload = unframe(_MAGIC, blob)
         m, b, fbits, seed, inserts, full = _HDR.unpack_from(payload)
-        table = np.frombuffer(payload, dtype=np.uint32, count=m * b,
-                              offset=_HDR.size).reshape(m, b).copy()
+        table = unpack_counters(version, payload, _HDR.size, np.uint32,
+                                (m, b))
         return cls(m=m, b=b, fbits=fbits, seed=seed, inserts=inserts,
                    full=bool(full), table=table)

@@ -18,11 +18,10 @@ from dataclasses import dataclass, field
 
 import numpy as np
 
-from .base import frame, unframe
+from .base import frame, pack_counters, unframe, unpack_counters
 from .hashing import splitmix64
 
 _MAGIC = b"FSHL"
-_VERSION = 1
 _HDR = struct.Struct("<B")
 
 
@@ -113,14 +112,9 @@ class HyperLogLog:
 
     # -- io ----------------------------------------------------------
     #
-    # Two wire formats, auto-chosen by density (merge/estimate always
-    # run dense in memory — only the BLOB is sparse):
-    #
-    # * v1 dense: p | m register bytes — 16 KiB at p=14 regardless of
-    #   cardinality.
-    # * v2 sparse: p | u32 count | u32 idx[] | u8 rank[] — 5 bytes per
-    #   NONZERO register.  Chosen when count < m/8, i.e. cardinality
-    #   below ~m/8 distincts.
+    # p | registers, dense (v1, 16 KiB at p=14 regardless of
+    # cardinality) or sparse (v2, 5 bytes per NONZERO register) by
+    # density — see ``base.pack_counters``.
     #
     # Why it matters at scale: grouped sketches shuffle one partial
     # blob per (group, partition).  With zipf-skewed group keys (hosts,
@@ -129,35 +123,12 @@ class HyperLogLog:
     # O(observed registers), a 100-3000× blob reduction for small
     # groups (tested), while hot groups stay dense.
     def to_bytes(self) -> bytes:
-        nz = np.flatnonzero(self.registers)
-        if nz.size * 5 + 4 < self.m // 8:
-            payload = (_HDR.pack(self.p)
-                       + struct.pack("<I", nz.size)
-                       + nz.astype(np.uint32).tobytes()
-                       + self.registers[nz].tobytes())
-            return frame(_MAGIC, 2, payload)
-        return frame(_MAGIC, _VERSION,
-                     _HDR.pack(self.p) + self.registers.tobytes())
+        version, body = pack_counters(self.registers)
+        return frame(_MAGIC, version, _HDR.pack(self.p) + body)
 
     @classmethod
     def from_bytes(cls, blob: bytes) -> "HyperLogLog":
         version, payload = unframe(_MAGIC, blob)
-        if version not in (1, 2):
-            # fail loudly on formats from a NEWER release — silently
-            # parsing an unknown layout as dense registers corrupts
-            raise ValueError(
-                f"unsupported HLL frame version {version} (this release "
-                "reads v1 dense / v2 sparse)")
         (p,) = _HDR.unpack_from(payload)
-        if version == 2:
-            (count,) = struct.unpack_from("<I", payload, _HDR.size)
-            off = _HDR.size + 4
-            idx = np.frombuffer(payload, dtype=np.uint32, offset=off,
-                                count=count).astype(np.int64)
-            ranks = np.frombuffer(payload, dtype=np.uint8,
-                                  offset=off + 4 * count, count=count)
-            regs = np.zeros(1 << p, dtype=np.uint8)
-            regs[idx] = ranks
-            return cls(p=p, registers=regs)
-        regs = np.frombuffer(payload, dtype=np.uint8, offset=_HDR.size).copy()
-        return cls(p=p, registers=regs)
+        return cls(p=p, registers=unpack_counters(
+            version, payload, _HDR.size, np.uint8, 1 << p))

@@ -23,7 +23,14 @@ def test_blob_bytes_estimates_match_reality():
         SketchSpec.make("cms", "x", epsilon=1e-3, delta=0.05),
         SketchSpec.make("tdigest", "x"),
         SketchSpec.make("kll", "x"),
+        SketchSpec.make("cbf", "x", capacity=10_000, error_rate=1e-3),
+        SketchSpec.make("cuckoo", "x", capacity=10_000),
+        SketchSpec.make("cs", "x", r=5, c=1024),
+        SketchSpec.make("ams", "x", r=5, c=128),
     ]
+    # keys that make each counter-array sketch serialize dense
+    dense_fill = {"hll": 200_000, "cms": 200_000, "cbf": 20_000,
+                  "cuckoo": 8_000, "cs": 50_000, "ams": 2_000}
     import numpy as np
     for spec in specs:
         est = spec.blob_bytes()
@@ -32,14 +39,35 @@ def test_blob_bytes_estimates_match_reality():
         # blob_bytes is the WORST-CASE bound used for merge-group
         # sizing: it must never undershoot the actual blob
         assert est >= real, f"{spec.kind}: est {est} < {real}"
-        # bloom/hll/cms estimates should be tight vs the DENSE form
-        # (low-density hll/cms blobs now auto-serialize sparse, far
-        # below the bound — that is the point of the sparse format)
-        if spec.kind in ("bloom", "hll", "cms"):
-            if spec.kind in ("hll", "cms"):
-                sk.update_batch(np.arange(200_000, dtype=np.int64))
+        # estimates should be tight vs the DENSE form (low-density
+        # counter arrays auto-serialize sparse, far below the bound —
+        # that is the point of the sparse format)
+        if spec.kind == "bloom" or spec.kind in dense_fill:
+            if spec.kind in dense_fill:
+                sk.update_batch(np.arange(dense_fill[spec.kind],
+                                          dtype=np.int64))
             dense = len(sk.to_bytes())
+            assert est >= dense, f"{spec.kind}: est {est} < {dense}"
             assert abs(est - dense) <= dense * 0.1 + 128, spec.kind
+
+
+def test_cbf_blob_bytes_does_not_allocate():
+    """Sizing a counting Bloom's blob reads (m, k) from the sizing
+    formula; it must not build the 57.5 MB counter array of the SQL
+    default (1M keys, p=1e-6)."""
+    import tracemalloc
+
+    from facs_spark.sketch.cbf import CountingBloom
+    spec = SketchSpec.make("cbf", "x", capacity=1_000_000, error_rate=1e-6)
+    tracemalloc.start()
+    try:
+        est = spec.blob_bytes()
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 1 << 20, peak
+    m, _k = CountingBloom.size_for(1_000_000, 1e-6)
+    assert est == m * 2 + 64
 
 
 def test_suggestion_tables_reference_values():

@@ -7,9 +7,11 @@ import math
 import numpy as np
 import pytest
 
-from facs_spark.sketch import (BloomFilter, CountMinSketch, HyperLogLog, KLL,
-                               TDigest, facs_sizing, find_close_prime,
-                               is_prime, sketch_from_bytes, standard_sizing)
+from facs_spark.sketch import (AmsF2, BloomFilter, CountingBloom,
+                               CountMinSketch, CountSketch, CuckooFilter,
+                               HyperLogLog, KLL, TDigest, facs_sizing,
+                               find_close_prime, is_prime, sketch_from_bytes,
+                               standard_sizing)
 
 rng = np.random.default_rng(7)
 
@@ -351,55 +353,78 @@ def test_merge_repartition_invariance_property():
                 assert abs(true_rank - q) <= 0.02
 
 
-def test_hll_sparse_blob_roundtrip_and_size():
-    """Low-cardinality HLL blobs serialize sparse (5 B per nonzero
-    register, ~100-3000x smaller than dense at p=14) and round-trip
-    bit-identically; high-cardinality blobs stay dense; merge through
-    either wire format is unchanged."""
-    from facs_spark.sketch.hll import HyperLogLog
-    small = HyperLogLog(p=14)
-    small.update_batch(np.arange(50, dtype=np.int64))
-    blob = small.to_bytes()
-    assert len(blob) < 600, f"sparse blob {len(blob)} B"  # vs 16 KiB dense
-    back = HyperLogLog.from_bytes(blob)
-    assert (back.registers == small.registers).all()
-
-    big = HyperLogLog(p=14)
-    big.update_batch(np.arange(100_000, dtype=np.int64))
-    dense_blob = big.to_bytes()
-    assert len(dense_blob) >= (1 << 14), "high cardinality must stay dense"
-    assert (HyperLogLog.from_bytes(dense_blob).registers
-            == big.registers).all()
-
-    merged = HyperLogLog.from_bytes(blob).merge(
-        HyperLogLog.from_bytes(dense_blob))
-    direct = small.merge(big)
-    assert (merged.registers == direct.registers).all()
-    assert abs(merged.estimate() - direct.estimate()) == 0.0
+# kind -> (new sketch, low-density keys, high-density keys, counter attr)
+_COUNTER_SKETCHES = {
+    "hll": (lambda: HyperLogLog(p=14), np.arange(50),
+            np.arange(100_000), "registers"),
+    "cms": (CountMinSketch, [f"tok{i}" for i in range(200)],
+            [f"t{i % 60000}" for i in range(120_000)], "table"),
+    "cbf": (lambda: CountingBloom.create(20_000, 1e-3), np.arange(167),
+            np.arange(10_000, 30_000), "counters"),
+    "cuckoo": (lambda: CuckooFilter.create(4096), np.arange(167),
+               np.arange(10_000, 12_000), "table"),
+    "cs": (CountSketch, np.arange(50), np.arange(20_000), "z"),
+    # every key moves every AMS counter: only an empty partial is sparse
+    "ams": (AmsF2, np.arange(0), np.arange(1_000), "z"),
+}
 
 
-def test_cms_sparse_blob_roundtrip_and_size():
-    """Sparse CMS wire format: small-count partials serialize as
-    (index, count) pairs instead of the full ~1.1 MB table, round-trip
-    bit-identically, and merge across formats unchanged."""
-    from facs_spark.sketch.cms import CountMinSketch
-    small = CountMinSketch()
-    small.update_batch([f"tok{i}" for i in range(200)])
-    blob = small.to_bytes()
-    dense_size = small.d * small.w * 8
-    assert len(blob) < dense_size // 50, (len(blob), dense_size)
-    back = CountMinSketch.from_bytes(blob)
-    assert (back.table == small.table).all() and back.total == small.total
+@pytest.mark.parametrize("kind", sorted(_COUNTER_SKETCHES))
+def test_counter_sketch_wire_format(kind):
+    """One wire codec for every counter-array sketch: low-density
+    blobs ship sparse (< 1/4 of the dense array), round-trip
+    bit-identically, high-density blobs stay dense, merge across the
+    two formats equals a direct merge, and an unknown frame version
+    raises instead of being parsed as dense counters."""
+    import struct
 
-    big = CountMinSketch()
-    big.update_batch([f"t{i % 60000}" for i in range(120_000)])
-    bb = big.to_bytes()
-    assert (CountMinSketch.from_bytes(bb).table == big.table).all()
-    merged = CountMinSketch.from_bytes(blob).merge(
-        CountMinSketch.from_bytes(bb))
-    direct = small.merge(big)
-    assert (merged.table == direct.table).all()
-    assert merged.total == direct.total
+    new, low_keys, high_keys, attr = _COUNTER_SKETCHES[kind]
+    low, high = new(), new()
+    low.update_batch(low_keys)
+    high.update_batch(high_keys)
+    cls = type(low)
+
+    arr = getattr(low, attr)
+    dense_blob = high.to_bytes()
+    assert struct.unpack_from("<H", dense_blob, 4)[0] == 1
+    header = len(dense_blob) - arr.nbytes
+    assert cls.from_bytes(dense_blob).to_bytes() == dense_blob
+
+    blob = low.to_bytes()
+    assert len(blob) < arr.nbytes // 4, (len(blob), arr.nbytes)
+    # sparse costs a u32 index per NONZERO counter plus its value
+    nnz = np.count_nonzero(arr)
+    assert len(blob) == header + 4 + nnz * (4 + arr.itemsize)
+    back = cls.from_bytes(blob)
+    assert (getattr(back, attr) == arr).all()
+    assert back.to_bytes() == blob
+
+    merged = cls.from_bytes(blob).merge(cls.from_bytes(dense_blob))
+    direct = low.merge(high)  # in-place for some kinds: run it last
+    assert (getattr(merged, attr) == getattr(direct, attr)).all()
+    assert merged.to_bytes() == direct.to_bytes()
+
+    bad = bytearray(blob)
+    struct.pack_into("<H", bad, 4, 3)
+    with pytest.raises(ValueError, match="version 3"):
+        cls.from_bytes(bytes(bad))
+
+
+def test_sql_default_filter_blobs_are_sparse():
+    """cbf_agg / cuckoo_agg at their SQL defaults (sized for 1M keys)
+    over 167 keys ship only the touched counters: the dense forms are
+    57.5 MB and 8.4 MB, which SQL readers then copied once per row."""
+    import pandas as pd
+    from facs_spark.functions import _agg_specs
+
+    keys = pd.Series(np.arange(167, dtype=np.int64))
+    for name, limit in (("cbf_agg", 64 << 10), ("cuckoo_agg", 8 << 10)):
+        spec = _agg_specs()[name]
+        sk = spec.new_sketch()
+        spec.update(sk, keys)
+        blob = sk.to_bytes()
+        assert len(blob) < limit, (name, len(blob))
+        assert sketch_from_bytes(blob).contains_batch(keys.to_numpy()).all()
 
 
 def test_theta_sketch_estimate_merge_intersection():
