@@ -63,20 +63,20 @@ class ClassifyResult:
 
 def classify_batch(texts, bloom: BloomFilter, k: int, tole_rate: float,
                    lowercase: bool = True,
-                   canonicalize=None, cache: dict | None = None) -> ClassifyResult:
+                   canonicalize=None) -> ClassifyResult:
     """Classify a batch of page texts against a broadcast Bloom filter.
 
     ``canonicalize``: optional ``texts -> texts`` second-pass transform
     (the reverse-complement analogue); pages still clean after the
     forward pass are re-checked in canonicalized space.
     """
-    res = _classify_once(texts, bloom, k, tole_rate, lowercase, cache)
+    res = _classify_once(texts, bloom, k, tole_rate, lowercase)
     if canonicalize is not None:
         clean = ~res.contaminated
         if clean.any():
             texts_arr = np.asarray(texts, dtype=object)
             res2 = _classify_once(canonicalize(texts_arr[clean]), bloom, k,
-                                  tole_rate, lowercase, cache)
+                                  tole_rate, lowercase)
             # merge: a clean page flips if its canonical form scores;
             # per-page score is the best of the two passes (the
             # reference returns the passing check's result), match_time
@@ -90,7 +90,7 @@ def classify_batch(texts, bloom: BloomFilter, k: int, tole_rate: float,
 
 
 def _classify_once(texts, bloom: BloomFilter, k: int, tole_rate: float,
-                   lowercase: bool, cache: dict | None = None) -> ClassifyResult:
+                   lowercase: bool) -> ClassifyResult:
     # Lazy materialization, mirroring the reference's two-phase scan:
     # only stride-k probe windows are ever built for clean pages; the
     # full stride-1 window set is built ONLY for escalated pages.
@@ -107,7 +107,7 @@ def _classify_once(texts, bloom: BloomFilter, k: int, tole_rate: float,
     # Phase 1: quick pass — probe only stride-k positions.
     q_doc, q_pos = quick_probe_positions_batch(lengths, k)
     q_hits = bloom.contains_batch(
-        windows_at(buf, offsets[:-1][q_doc] + q_pos, k), cache=cache)
+        windows_at(buf, offsets[:-1][q_doc] + q_pos, k))
     np.logical_or.at(escalated, q_doc, q_hits)
 
     if escalated.any():
@@ -117,7 +117,7 @@ def _classify_once(texts, bloom: BloomFilter, k: int, tole_rate: float,
         sub_idx, f_pos = flat_positions(n_wins)
         f_doc = esc[sub_idx]
         f_hits = bloom.contains_batch(
-            windows_at(buf, offsets[:-1][f_doc] + f_pos, k), cache=cache)
+            windows_at(buf, offsets[:-1][f_doc] + f_pos, k))
         # match_time per doc
         np.add.at(match_time, f_doc, f_hits.astype(np.int64))
         # run starts: hit with no hit at previous window of same doc

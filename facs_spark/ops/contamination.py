@@ -66,7 +66,7 @@ _KERNEL_BATCH = 2500  # cache-resident slice; see session.py batch note
 
 
 def _classify_kernel(bc_blob, passthrough: tuple[str, ...], text_col: str,
-                     k: int, tole_rate: float, memoize: bool = False,
+                     k: int, tole_rate: float,
                      canonicalize: str | None = None):
     canon_fn = CANONICALIZERS[canonicalize] if canonicalize else None
 
@@ -74,15 +74,11 @@ def _classify_kernel(bc_blob, passthrough: tuple[str, ...], text_col: str,
         blob = bc_blob.value
         bloom = (BloomFilter.from_banks([bytes(b) for b in blob])
                  if isinstance(blob, list) else BloomFilter.from_bytes(blob))
-        # optional cross-batch probe memo: wins on boilerplate-heavy
-        # corpora with large k; per-batch dedup already covers the rest
-        memo: dict | None = {} if memoize else None
         for batch in iterator:
             for lo in range(0, len(batch), _KERNEL_BATCH):
                 sub = batch.iloc[lo:lo + _KERNEL_BATCH]
                 res = classify_batch(sub[text_col].tolist(), bloom, k,
-                                     tole_rate, cache=memo,
-                                     canonicalize=canon_fn)
+                                     tole_rate, canonicalize=canon_fn)
                 out = {c: sub[c] for c in passthrough}
                 out["contaminated"] = res.contaminated
                 out["match_score"] = res.score
@@ -99,7 +95,7 @@ def classify_pages(df: DataFrame, bloom: BloomFilter,
                    passthrough: tuple[str, ...] = (),
                    tole_rate: float | None = None,
                    sample_fraction: float | None = None,
-                   seed: int = 42, memoize: bool = False,
+                   seed: int = 42,
                    canonicalize: str | None = None,
                    max_bank_bytes: int | None = None) -> DataFrame:
     """Classify pages against a broadcast Bloom filter.
@@ -131,7 +127,7 @@ def classify_pages(df: DataFrame, bloom: BloomFilter,
     pass_schema = ", ".join(f"{c} {dtypes[c]}" for c in cols)
     schema = (pass_schema + ", " if pass_schema else "") + CLASSIFY_COLS
     return sel.mapInPandas(
-        _classify_kernel(bc, cols, text_col, k, tole, memoize=memoize,
+        _classify_kernel(bc, cols, text_col, k, tole,
                          canonicalize=canonicalize),
         schema=schema)
 

@@ -90,6 +90,9 @@ def _frontier_kernel(iterator):
     import pandas as pd
     regs, tss, rks = [], [], []
     for batch in iterator:
+        # a NULL value or timestamp gives a NULL register/ts/rank,
+        # which never contributes a rank
+        batch = batch.dropna()
         regs.append(batch["register"].to_numpy(dtype=np.int64))
         tss.append(batch["ts_us"].to_numpy(dtype=np.int64))
         rks.append(batch["rank"].to_numpy(dtype=np.int64))

@@ -592,7 +592,8 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
         import numpy as np
         import pandas as pd
         for batch in iterator:
-            texts = batch[text_col].tolist()
+            null = batch[text_col].isna().to_numpy()
+            texts = batch[text_col].where(~null, "").tolist()
             ndocs = len(texts)
             if ndocs == 0:
                 continue
@@ -618,7 +619,15 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
                 out[f"{n}_chars"] = counts[si]
             out["dominant_script"] = np.array(names, dtype=object)[dom_idx]
             out["script_chars"] = counts.sum(axis=0)
-            yield pd.DataFrame(out)
+            pdf = pd.DataFrame(out)
+            if null.any():
+                # NULL text -> NULL counts and script, as SQL's
+                # regexp_count(NULL) is NULL
+                nulled = [c for c in out if c != id_col]
+                pdf = pdf.astype({c: "Int64" for c in nulled
+                                  if c != "dominant_script"})
+                pdf.loc[null, nulled] = None
+            yield pdf
 
     from ..session import ensure_parallelism
     schema = (f"{id_col} long, "

@@ -130,11 +130,15 @@ def ensure_shipped(spark: SparkSession) -> None:
     _SHIPPED_SESSIONS.add(key)
 
 
-# A pandas-UDF task costs ~50-100 ms of fixed overhead (task launch,
-# Arrow channel, python-worker round-trip) regardless of rows, so a
-# kernel partition is only worth scheduling once it carries at least
-# this many plan-stat bytes.  ~2 MiB of text is ~0.1 s of shingle
-# kernel — comparable to the overhead, the break-even point.
+# A pandas-UDF task has a fixed cost regardless of rows (task launch,
+# Arrow channel, python-worker round-trip).  Measured for a trivial
+# one-row mapInPandas on a reused worker at local[4] (4-core host):
+# job submit -> UDF start 279 ms median and 257 ms of worker CPU per
+# task before the worker-side zip-directory cache in facs_spark/
+# __init__.py, 55 ms and 33 ms with it.  A kernel partition is only
+# worth scheduling once it carries at least this many plan-stat
+# bytes; ~2 MiB of text is ~0.1 s of shingle kernel.  The constant
+# predates the cache and has not been re-tuned against these numbers.
 _KERNEL_SPLIT_BYTES = 2 << 20
 
 # Catalyst's size estimate for a file scan is the COMPRESSED file

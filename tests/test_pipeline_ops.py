@@ -1792,6 +1792,24 @@ def test_script_profile_counts_and_dominant(spark):
     assert got[5].script_chars == 0 and got[5].dominant_script == "arabic"
 
 
+def test_script_profile_null_text(spark):
+    """NULL text gets NULL counts and a NULL dominant_script (as
+    regexp_count(NULL) is NULL); the non-null rows sharing its batch
+    come out exactly as they do without the NULLs."""
+    from facs_spark.ops.textstats import script_profile
+    rows = [(1, "привет hello"), (2, None), (3, "你好"), (4, ""),
+            (5, None), (6, "αβ ab")]
+    df = spark.createDataFrame(rows, "doc_id long, text string") \
+        .coalesce(1)
+    got = {r.doc_id: r.asDict() for r in
+           script_profile(df, "doc_id", "text").collect()}
+    want = {r.doc_id: r.asDict() for r in script_profile(
+        df.where("text IS NOT NULL"), "doc_id", "text").collect()}
+    for i in (2, 5):
+        assert set(got.pop(i).values()) == {i, None}
+    assert got == want
+
+
 def test_hashed_linear_score_replayable_and_mapside(spark):
     """Scores replay exactly from the md5 convention in pure python,
     and the plan is one explode + one agg — no join, no second

@@ -103,19 +103,20 @@ def test_rank_expr_string_vs_bits(spark):
         assert rank == want, (frac, rank, want)
 
 
-def test_streaming_frontier_equals_batch(spark, tmp_path):
-    """Three micro-batches folded through the state store produce the
-    EXACT batch frontier (the q99 stream ≡ batch guarantee)."""
+def _frontier_rows(df):
+    return sorted((r["register"], r["ts_us"], r["rank"]) for r in df.collect())
+
+
+def _stream_frontier(spark, ev, tmp_path, sink):
+    """Fold ``ev`` (ts, user_id) through ``streaming_sliding_hll`` as
+    three single-file micro-batches; return the drained frontier."""
     import glob
     import shutil
 
-    from facs_spark.ops.sliding_hll import (sliding_hll_frontier,
-                                            sliding_hll_raw_points)
     from facs_spark.streaming.monitor import run_monitor_once
     from facs_spark.streaming.stateful import streaming_sliding_hll
 
-    ev = _events(spark, n=3_000, users=800).withColumn(
-        "rid", F.monotonically_increasing_id())
+    ev = ev.withColumn("rid", F.monotonically_increasing_id())
     src = tmp_path / "src"
     src.mkdir()
     for i in range(3):
@@ -131,17 +132,43 @@ def test_streaming_frontier_equals_batch(spark, tmp_path):
     out = streaming_sliding_hll(
         sliding_hll_raw_points(stream, "user_id", "ts"))
     run_monitor_once(out, str(tmp_path / "ckpt"),
-                     query_name="shll_test_sink", output_mode="update")
-    got = spark.sql("""
+                     query_name=sink, output_mode="update")
+    got = _frontier_rows(spark.sql(f"""
         SELECT register, ts_us, rank
         FROM (SELECT *, MAX(points_seen)
                         OVER (PARTITION BY register) AS mx
-              FROM shll_test_sink)
-        WHERE points_seen = mx""")
-    stream_fr = sorted((r["register"], r["ts_us"], r["rank"])
-                       for r in got.collect())
-    spark.catalog.dropTempView("shll_test_sink")
-    batch_fr = sorted((r["register"], r["ts_us"], r["rank"])
-                      for r in sliding_hll_frontier(
-                          ev.drop("rid"), "user_id", "ts").collect())
+              FROM {sink})
+        WHERE points_seen = mx"""))
+    spark.catalog.dropTempView(sink)
+    return got
+
+
+def test_streaming_frontier_equals_batch(spark, tmp_path):
+    """Three micro-batches folded through the state store produce the
+    EXACT batch frontier (the q99 stream ≡ batch guarantee)."""
+    ev = _events(spark, n=3_000, users=800)
+    stream_fr = _stream_frontier(spark, ev, tmp_path, "shll_test_sink")
+    batch_fr = _frontier_rows(sliding_hll_frontier(ev, "user_id", "ts"))
     assert stream_fr == batch_fr
+
+
+def _null_events(spark):
+    """``_events`` with every 5th value and every 7th timestamp NULL."""
+    import pandas as pd
+    pdf = _events(spark, n=3_000, users=800).toPandas()
+    pdf["user_id"] = pdf["user_id"].astype("Int64")
+    pdf.loc[::5, "user_id"] = pd.NA
+    pdf.loc[3::7, "ts"] = pd.NaT
+    return spark.createDataFrame(pdf, "ts timestamp, user_id long")
+
+
+def test_frontier_skips_null_rows(spark, tmp_path):
+    """A NULL value or timestamp never contributes a rank: the batch
+    and the streaming frontier over input with NULLs both equal the
+    batch frontier over the null-filtered input."""
+    ev = _null_events(spark)
+    assert ev.where("user_id IS NULL OR ts IS NULL").count() > 0
+    want = _frontier_rows(sliding_hll_frontier(ev.dropna(), "user_id", "ts"))
+    assert want
+    assert _frontier_rows(sliding_hll_frontier(ev, "user_id", "ts")) == want
+    assert _stream_frontier(spark, ev, tmp_path, "shll_null_sink") == want
