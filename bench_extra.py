@@ -7,10 +7,13 @@ Usage:
         [--sf /root/testdata/sf1.0] [--trials 3] [--explain DIR]
 
 Per query: builds the DataFrame, times ``df.collect()`` (same
-methodology as bench.py's run_queries), reports each trial and the
-median.  With --explain DIR, also writes ``<query>.txt`` containing
-``df.explain("formatted")`` output (the plan evidence committed under
-plans/r07/).
+methodology as bench.py's run_queries), reports each trial, the
+median and the Spark jobs each trial fired (building the DataFrame
+included).  Every job of a query runs in job group
+``bench_extra:<query>``; a stream's micro-batch jobs run in the
+stream's own group and are not counted.  With --explain DIR, also writes
+``<query>.txt`` containing ``df.explain("formatted")`` output (the
+plan evidence committed under plans/r07/).
 """
 
 from __future__ import annotations
@@ -71,8 +74,11 @@ def main() -> None:
         _b._warm_streaming(spark)
 
     out = {}
+    sc = spark.sparkContext
     for name in names:
         fn = qs[name]
+        group = f"bench_extra:{name}"
+        sc.setJobGroup(group, group)
         if explain_dir:
             os.makedirs(explain_dir, exist_ok=True)
             df = fn(spark, sf_dir)
@@ -92,19 +98,20 @@ def main() -> None:
                        "child, materialized once) ==\n" + _fmt(pre))
             with open(os.path.join(explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(txt)
-        ts = []
+        ts, jobs = [], []
         if trials == 0:
-            out[name] = {"median": None, "trials": []}
+            out[name] = {"median": None, "trials": [], "jobs": []}
             continue
         for _ in range(trials):
-            spark.sparkContext.setJobDescription(f"bench_extra:{name}")
+            before = len(sc.statusTracker().getJobIdsForGroup(group))
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
             df.collect()
             ts.append(round(time.perf_counter() - t0, 3))
-            spark.sparkContext.setJobDescription(None)
+            jobs.append(len(sc.statusTracker().getJobIdsForGroup(group))
+                        - before)
         out[name] = {"median": round(statistics.median(ts), 3),
-                     "trials": ts}
+                     "jobs": jobs, "trials": ts}
         print(json.dumps({name: out[name]}), flush=True)
     print(json.dumps({"sf_dir": sf_dir, "cpus": cpus,
                       "load_1m": round(os.getloadavg()[0], 1),

@@ -86,22 +86,6 @@ def shingle_batch(texts, k: int, lowercase: bool = True) -> ShingleBatch:
                         doc_offsets=offsets[:-1])
 
 
-def quick_probe_positions(length: int, k: int) -> np.ndarray:
-    """Stride-k probe positions of the reference's quick pass.
-
-    Probes at 0, k, 2k, …; when the remainder is nonzero the final
-    probe is right-aligned to ``length - k`` (``facs/tool.c:66-90``).
-    Returns 0-based window starts; empty for length < k.
-    """
-    if length < k:
-        return np.empty(0, dtype=np.int64)
-    n_full = length // k
-    pos = np.arange(n_full, dtype=np.int64) * k
-    if length % k != 0:
-        pos = np.concatenate([pos, np.array([length - k], dtype=np.int64)])
-    return pos
-
-
 def flat_positions(counts: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
     """(doc_idx, within-doc ordinal) for ragged per-doc counts."""
     n = counts.size
@@ -134,15 +118,3 @@ def windows_at(buf: np.ndarray, abs_pos: np.ndarray, k: int) -> np.ndarray:
     if abs_pos.size == 0 or buf.size < k:
         return np.empty((0, k), dtype=np.uint8)
     return sliding_window_view(buf, k)[abs_pos]
-
-
-def quick_probe_mask(sb: ShingleBatch, k: int) -> np.ndarray:
-    """Boolean mask over ``sb.windows`` marking quick-pass probes.
-
-    Vectorized over the whole batch: position p is a probe iff
-    ``p % k == 0`` or (doc has a remainder and ``p == L-k``).
-    """
-    L = sb.doc_lengths[sb.doc_idx]
-    is_stride = (sb.win_pos % k) == 0
-    is_tail = ((L % k) != 0) & (sb.win_pos == (L - k))
-    return is_stride | is_tail

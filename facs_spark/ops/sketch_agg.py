@@ -27,7 +27,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..session import ensure_parallelism, ensure_shipped
+from ..session import _parallel, ensure_shipped
 from ..sketch import (BloomFilter, CountMinSketch, HyperLogLog, KLL, TDigest,
                       sketch_from_bytes)
 
@@ -247,14 +247,21 @@ def partial_sketches(df: DataFrame, spec: SketchSpec) -> DataFrame:
     its row count, so 1,000 partials of a 200 MB filter would move
     200 GB through the merge for no accuracy gain.
     """
+    return _partials(df, spec)[0]
+
+
+def _partials(df: DataFrame, spec: SketchSpec):
+    """``partial_sketches`` plus its partition count — the number of
+    partial rows — taken from the one plan-to-RDD conversion
+    ``ensure_parallelism`` makes."""
     ensure_shipped(df.sparkSession)
-    sel = ensure_parallelism(df.select(spec.column))
+    sel, n = _parallel(df.select(spec.column))
     blob = spec.blob_bytes()
     if blob >= (16 << 20):
         max_partials = max(4, (2 << 30) // blob)
-        if sel.rdd.getNumPartitions() > max_partials:
-            sel = sel.coalesce(max_partials)
-    return sel.mapInPandas(_partial_builder(spec), schema=PARTIAL_SCHEMA)
+        if n > max_partials:
+            sel, n = sel.coalesce(max_partials), max_partials
+    return sel.mapInPandas(_partial_builder(spec), schema=PARTIAL_SCHEMA), n
 
 
 # ---------------------------------------------------------------- merge
@@ -289,8 +296,12 @@ def tree_merge(partials: DataFrame, fanin: int = 64,
     row — so the whole tree executes in a single pass at the final
     collect: no ``count()`` re-running the input scan, and no caching
     of fat sketch blobs (persisting 64 × 200 MB Bloom partials OOMs
-    the JVM).  Pass ``n_partials`` when the input is NOT
-    one-row-per-partition (e.g. a checkpoint parquet).
+    the JVM).  Pass ``n_partials`` when the partial count is already
+    known (``build_sketch`` takes it from ``ensure_parallelism``'s
+    plan-to-RDD conversion, so the plan is not converted a second
+    time) or when the input is NOT one-row-per-partition (e.g. a
+    checkpoint parquet); without it the partials' plan is planned
+    and converted to an RDD just to count them.
     """
     level = partials
     n = n_partials if n_partials is not None \
@@ -321,9 +332,15 @@ def build_sketch(df: DataFrame, spec: SketchSpec, fanin: int = 64):
     cap each group at ~128 MB of blobs.  Measured on 32 × 29 MB
     partials: fanin 64 → 46 s (driver collect dominates), fanin 4 →
     8.3 s (executor-side merges, 2-blob collect).
+
+    The plan is converted to an RDD once, to size its partitions; the
+    partial count that conversion yields sizes the merge tree, so the
+    final collect is the build's only job.  An empty input gives an
+    empty sketch and 0 rows.
     """
     eff_fanin = max(2, min(fanin, (128 << 20) // max(spec.blob_bytes(), 1)))
-    return tree_merge(partial_sketches(df, spec), fanin=eff_fanin)
+    partials, n = _partials(df, spec)
+    return tree_merge(partials, fanin=eff_fanin, n_partials=n)
 
 
 # ---------------------------------------------------------------- grouped

@@ -567,16 +567,19 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
     and per-doc counts fall out of ``np.add.reduceat`` — one pass
     over the bytes instead of the old five JVM ``regexp_count``
     scans (which dominated q78: 5 full regex passes + a struct
-    array_sort argmax per row).  The argmax tie-break (count desc,
-    name asc) is ``np.argmax`` over the alphabetically-ordered
-    class list.  Returns (id, <script>_chars..., dominant_script,
-    script_chars).
+    array_sort argmax per row).  The dominant script is the highest
+    count, ties going to the alphabetically first name, whatever the
+    order of ``SCRIPT_CLASSES``.  Returns (id, <script>_chars...,
+    dominant_script, script_chars).
     """
     # codepoint ranges straight from SCRIPT_CLASSES (shared with the
     # oracle): "A-Za-zÀ-ɏ" → [(65,90),(97,122),(192,591)], others are
     # single blocks
     ranges = []
     names = [n for n, _ in SCRIPT_CLASSES]
+    # np.argmax keeps the first maximum: scan the classes in name
+    # order so a tie goes to the alphabetically first script
+    by_name = np.argsort(names, kind="stable")
     for _name, cls in SCRIPT_CLASSES:
         rs, i = [], 0
         while i < len(cls):
@@ -613,7 +616,7 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
                 cs = np.zeros(cp.size + 1, dtype=np.int64)
                 np.cumsum(mask, out=cs[1:])
                 counts[si] = cs[offs + lens] - cs[offs]
-            dom_idx = np.argmax(counts, axis=0)
+            dom_idx = by_name[np.argmax(counts[by_name], axis=0)]
             out = {id_col: batch[id_col].to_numpy()}
             for si, n in enumerate(names):
                 out[f"{n}_chars"] = counts[si]

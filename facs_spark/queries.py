@@ -18,6 +18,7 @@ import os
 import shutil
 import time
 import uuid
+import weakref
 from contextlib import contextmanager
 from datetime import timedelta
 
@@ -40,8 +41,47 @@ REF_SOURCE = "src0"
 EXACT_E = 1e-9
 
 
+# Per-session cache of the schemas Spark inferred for parquet paths.
+# Inference fires one footer-reading job per read (~0.1 s); a known
+# schema handed to the reader fires none.  An entry is keyed on
+# (name, inode, size, mtime) of every file under the path and on the
+# session's SQL conf, so a rewritten file or a changed conf is
+# inferred again.  Only metadata is cached, never data.
+_SCHEMAS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _files_key(spark: SparkSession, path: str) -> tuple:
+    """(relative name, inode, size, mtime_ns) of every file under
+    ``path``; OSError when the path is not a local one that stats."""
+    if not (spark.sparkContext._jsc.hadoopConfiguration()
+            .get("fs.defaultFS", "file:///").startswith("file:")):
+        raise OSError(f"{path} does not resolve on the local file system")
+
+    def entry(full: str) -> tuple:
+        st = os.stat(full)
+        return (os.path.relpath(full, path), st.st_ino, st.st_size,
+                st.st_mtime_ns)
+
+    if not os.path.isdir(path):
+        return (entry(path),)
+    return tuple(sorted(entry(os.path.join(base, f))
+                        for base, _dirs, files in os.walk(path)
+                        for f in files))
+
+
 def _read(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        key = (path, _files_key(spark, path), spark._jsparkSession
+               .sessionState().conf().getAllConfs().hashCode())
+    except OSError:  # Spark infers, as for any path it alone can list
+        return spark.read.parquet(path)
+    schemas = _SCHEMAS.setdefault(spark, {})
+    if key not in schemas:
+        df = spark.read.parquet(path)
+        schemas[key] = df.schema
+        return df
+    return spark.read.schema(schemas[key]).parquet(path)
 
 
 # =====================================================================
@@ -83,11 +123,12 @@ ORDER BY l_returnflag, l_linestatus
 def q02_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = _read(spark, sf_dir, "part")
     li = _read(spark, sf_dir, "lineitem")
-    n_keys = part.count()
+    # one action sizes the Bloom and offsets the alien probes
+    n_keys, max_pk = part.agg(F.count(F.lit(1)),
+                              F.max("p_partkey")).collect()[0]
     bloom, _ = build_sketch(part, SketchSpec.make(
         "bloom", "p_partkey", prep="raw", k=8, capacity=max(n_keys, 1),
         error_rate=EXACT_E))
-    max_pk = part.agg(F.max("p_partkey")).collect()[0][0]
     probes = li.select(
         "l_returnflag",
         F.when(F.col("l_orderkey") % 2 == 0, F.col("l_partkey"))
@@ -253,25 +294,24 @@ FROM docs_all ORDER BY doc_id""")
 # (1.04/√m); output is (lang, exact_distinct, within_bound).
 # =====================================================================
 def q05_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import pandas as pd
     docs = _read(spark, sf_dir, "documents")
-    g = grouped_sketches(docs, ["lang"], SketchSpec.make("hll", "doc_id", p=14))
-
-    def estimate(pdf):
-        import pandas as pd
-        from facs_spark.sketch import sketch_from_bytes as sfb
-        ests = [sfb(bytes(b)).estimate() for b in pdf["sketch"]]
-        return pd.DataFrame({"lang": pdf["lang"], "hll_est": ests})
-
-    ests = g.groupBy("lang").applyInPandas(estimate, "lang string, hll_est double")
-    exact = docs.groupBy("lang").agg(
-        F.countDistinct("doc_id").alias("exact_distinct"))
+    # one 16 KB blob and one exact row per lang: finish on the driver
+    hll = {r["lang"]: sketch_from_bytes(bytes(r["sketch"])).estimate()
+           for r in grouped_sketches(docs, ["lang"], SketchSpec.make(
+               "hll", "doc_id", p=14)).collect()}
+    exact = {r["lang"]: r["exact_distinct"] for r in docs.groupBy("lang")
+             .agg(F.countDistinct("doc_id").alias("exact_distinct"))
+             .collect()}
     bound = 3 * 1.04 / (2 ** 7)  # 3σ at p=14 (m=16384, √m=128)
-    return (exact.join(ests, "lang")
-            .select("lang", "exact_distinct",
-                    (F.abs(F.col("hll_est") - F.col("exact_distinct"))
-                     <= F.lit(bound) * F.col("exact_distinct") + F.lit(1.0)
-                     ).alias("within_bound"))
-            .orderBy("lang"))
+    # as an inner join on lang did, leave a NULL lang out
+    langs = sorted(g for g in exact if g is not None)
+    return spark.createDataFrame(pd.DataFrame({
+        "lang": langs,
+        "exact_distinct": [exact[g] for g in langs],
+        "within_bound": [abs(hll[g] - exact[g]) <= bound * exact[g] + 1.0
+                         for g in langs],
+    }), "lang string, exact_distinct long, within_bound boolean")
 
 
 Q05_SQL = """
@@ -304,7 +344,7 @@ def q06_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                               e <= r["exact_count"] + bound)
                          for e, r in zip(ests, rows)],
     })
-    return spark.createDataFrame(pdf).orderBy(F.desc("exact_count"), "token")
+    return spark.createDataFrame(pdf)  # rows come in top's order
 
 
 Q06_SQL = """
@@ -325,17 +365,18 @@ LIMIT 10
 def _quantile_rank_check(spark, df, col, qs, sketch_kind, bound, **params):
     import pandas as pd
     sk, _n = build_sketch(df, SketchSpec.make(sketch_kind, col, **params))
-    n = df.filter(F.col(col).isNotNull()).count()
+    qs = sorted(qs)
     ests = [float(sk.quantile(q)) for q in qs]
     conds = [F.sum((F.col(col) <= e).cast("long")).alias(f"r{i}")
              for i, e in enumerate(ests)]
-    ranks = df.filter(F.col(col).isNotNull()).agg(*conds).collect()[0]
+    n, *ranks = df.filter(F.col(col).isNotNull()).agg(
+        F.count(F.lit(1)), *conds).collect()[0]
     out = pd.DataFrame({
         "q": qs,
         "within_bound": [bool(abs(ranks[i] / n - q) <= bound)
                          for i, q in enumerate(qs)],
     })
-    return spark.createDataFrame(out).orderBy("q")
+    return spark.createDataFrame(out)  # sorted on q; keeps row order
 
 
 QUANTILES = [0.01, 0.25, 0.5, 0.75, 0.99]
@@ -3533,7 +3574,7 @@ def q80_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                          for est, r in zip(mg.query_batch(
                              [r["token"] for r in rows]), rows)],
     })
-    return spark.createDataFrame(pdf).orderBy(F.desc("exact_count"), "token")
+    return spark.createDataFrame(pdf)  # rows come in top's order
 
 
 Q80_SQL = """

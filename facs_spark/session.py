@@ -176,8 +176,14 @@ def ensure_parallelism(df, min_partitions: int | None = None):
     (100 TB scans already have ~10⁶ splits) and this is a no-op — no
     gratuitous shuffle.
     """
+    return _parallel(df, min_partitions)[0]
+
+
+def _parallel(df, min_partitions: int | None = None):
+    """``ensure_parallelism`` plus the partition count of the frame it
+    returns (None for a stream), from its one plan-to-RDD conversion."""
     if df.isStreaming:  # micro-batch sizing is the trigger's job
-        return df
+        return df, None
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     if min_partitions is not None:
@@ -187,9 +193,10 @@ def ensure_parallelism(df, min_partitions: int | None = None):
         target = cores if size is None else max(
             1, min(cores, -(-int(size * _COMPRESSION_FACTOR)
                             // _KERNEL_SPLIT_BYTES)))
-    if df.rdd.getNumPartitions() < target:
-        return df.repartition(target)
-    return df
+    n = df.rdd.getNumPartitions()
+    if n < target:
+        return df.repartition(target), target
+    return df, n
 
 
 def get_spark(app_name: str = "facs_spark", cpus: int | None = None,

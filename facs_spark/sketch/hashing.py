@@ -110,49 +110,6 @@ def hash3_matrix(keys: np.ndarray, level: int | np.ndarray) -> np.ndarray:
     return c
 
 
-def hash3_scalar(key: bytes, level: int) -> int:
-    """Reference (unvectorized) hash3 for testing the matrix kernel."""
-    M = 0xFFFFFFFFFFFFFFFF
-
-    def mix(a, b, c):
-        a = (a - b) & M; a = (a - c) & M; a ^= c >> 43
-        b = (b - c) & M; b = (b - a) & M; b ^= (a << 9) & M
-        c = (c - a) & M; c = (c - b) & M; c ^= b >> 8
-        a = (a - b) & M; a = (a - c) & M; a ^= c >> 38
-        b = (b - c) & M; b = (b - a) & M; b ^= (a << 23) & M
-        c = (c - a) & M; c = (c - b) & M; c ^= b >> 5
-        a = (a - b) & M; a = (a - c) & M; a ^= c >> 35
-        b = (b - c) & M; b = (b - a) & M; b ^= (a << 49) & M
-        c = (c - a) & M; c = (c - b) & M; c ^= b >> 11
-        a = (a - b) & M; a = (a - c) & M; a ^= c >> 12
-        b = (b - c) & M; b = (b - a) & M; b ^= (a << 18) & M
-        c = (c - a) & M; c = (c - b) & M; c ^= b >> 22
-        return a, b, c
-
-    a = b = level & M
-    c = 0x9E3779B97F4A7C13
-    length = len(key)
-    pos, rem = 0, length
-    while rem >= 24:
-        a = (a + int.from_bytes(key[pos : pos + 8], "little")) & M
-        b = (b + int.from_bytes(key[pos + 8 : pos + 16], "little")) & M
-        c = (c + int.from_bytes(key[pos + 16 : pos + 24], "little")) & M
-        a, b, c = mix(a, b, c)
-        pos += 24
-        rem -= 24
-    c = (c + length) & M
-    for j in range(rem - 1, -1, -1):
-        byte = key[pos + j]
-        if j >= 16:
-            c = (c + (byte << (8 * (j - 16) + 8))) & M
-        elif j >= 8:
-            b = (b + (byte << (8 * (j - 8)))) & M
-        else:
-            a = (a + (byte << (8 * j))) & M
-    a, b, c = mix(a, b, c)
-    return c
-
-
 def hash5_matrix(keys: np.ndarray, seed: int) -> np.ndarray:
     """facs ``hash5``: hash3 masked to 36 bits (facs/lookup8.c:548-554)."""
     return hash3_matrix(keys, seed) & _MASK36

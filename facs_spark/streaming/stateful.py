@@ -76,15 +76,6 @@ def streaming_grouped_sketch(pages: DataFrame, spec,
                                     GroupStateTimeout.NoTimeout))
 
 
-def streaming_grouped_hll(pages: DataFrame, key_col: str = "lang",
-                          value_col: str = "url", p: int = 12) -> DataFrame:
-    """Per-group running HLL distinct count over a stream (the
-    ``streaming_grouped_sketch`` special case the monitor uses)."""
-    from ..ops.sketch_agg import SketchSpec
-    return streaming_grouped_sketch(
-        pages, SketchSpec.make("hll", value_col, p=p), key_col=key_col)
-
-
 def streaming_window_ones(rows: DataFrame, key_col: str,
                           ts_col: str, id_col: str, bit_col: str,
                           n: int = 1024, r: int = 8) -> DataFrame:

@@ -5,8 +5,8 @@ Python, plus end-to-end zero-false-negative / FPR checks."""
 import numpy as np
 
 from facs_spark.kernels.classify import classify_batch
-from facs_spark.kernels.shingle import (quick_probe_positions, shingle_batch,
-                                        quick_probe_mask)
+from facs_spark.kernels.shingle import (quick_probe_positions_batch,
+                                        shingle_batch)
 from facs_spark.sketch.bloom import BloomFilter
 from facs_spark.sketch.prob import cdf, erf_as, get_mu, get_sigma
 
@@ -28,6 +28,27 @@ def exact_member_set(texts, k):
         for i in range(len(b) - k + 1):
             grams.add(bytes(b[i:i + k]))
     return grams
+
+
+def quick_probe_positions(length, k):
+    """Stride-k probe positions of the reference's quick pass, one doc
+    at a time: 0, k, 2k, ..., with the final probe right-aligned to
+    ``length - k`` when the remainder is nonzero (facs/tool.c:66-90);
+    empty for length < k."""
+    if length < k:
+        return np.empty(0, dtype=np.int64)
+    pos = list(range(0, length - k + 1, k))
+    if length % k:
+        pos.append(length - k)
+    return np.array(pos, dtype=np.int64)
+
+
+def quick_probe_mask(sb, k):
+    """Per-window restatement over a ShingleBatch: a window is a probe
+    iff its position is a multiple of k or, when the doc has a
+    remainder, it is the right-aligned tail window."""
+    L = sb.doc_lengths[sb.doc_idx]
+    return ((sb.win_pos % k) == 0) | (((L % k) != 0) & (sb.win_pos == L - k))
 
 
 def sequential_oracle(text, member, k, tole):
@@ -78,6 +99,11 @@ def test_quick_probe_positions_match_reference_trace():
     assert quick_probe_positions(3, 3).tolist() == [0]
     assert quick_probe_positions(4, 3).tolist() == [0, 1]
     assert quick_probe_positions(2, 3).tolist() == []
+    # the batch kernel classify_batch probes with gives the same traces
+    lengths = np.array([10, 9, 3, 4, 2])
+    doc, pos = quick_probe_positions_batch(lengths, 3)
+    for i, L in enumerate(lengths):
+        assert pos[doc == i].tolist() == quick_probe_positions(L, 3).tolist()
 
 
 def test_classify_matches_sequential_oracle():

@@ -71,3 +71,71 @@ def test_rows_only_queries_run(spark):
         df = qs[name](spark, SF)
         assert df.columns, name
         assert df.count() >= 0
+
+
+def _jobs(spark, group: str, fn):
+    """(fn's result, number of Spark jobs it fired)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_read_reuses_inferred_schema_until_file_changes(spark, tmp_path):
+    """A second ``_read`` of an unchanged parquet file fires no job; a
+    file rewritten under the same path is read with its new schema."""
+    from facs_spark.queries import _read
+    path = tmp_path / "t.parquet"
+    pdf = pd.DataFrame({"a": [1, 2, 3], "b": ["x", "y", None]})
+    pdf.to_parquet(path)
+    first = _read(spark, str(tmp_path), "t")
+    again, jobs = _jobs(spark, "read_again",
+                        lambda: _read(spark, str(tmp_path), "t"))
+    assert jobs == 0
+    assert again.schema == first.schema
+    assert again.toPandas().equals(pdf)
+
+    wider = pdf.assign(c=[0.5, 1.5, 2.5])
+    wider.to_parquet(path)
+    new = _read(spark, str(tmp_path), "t")
+    assert new.columns == ["a", "b", "c"]
+    assert new.toPandas().equals(wider)
+    _df, jobs = _jobs(spark, "read_wider",
+                      lambda: _read(spark, str(tmp_path), "t"))
+    assert jobs == 0
+
+
+def test_sketch_queries_build_without_side_jobs(spark):
+    """A warm pass over the sketch_queries benchmark's five queries
+    fires at most 6 jobs per query, final plans included: schemas come
+    from the cache, side actions are fused, tiny results finish on the
+    driver."""
+    names = ("q02_bloom_semijoin", "q03_contamination_report",
+             "q05_hll_distinct", "q06_cms_heavy_hitters",
+             "q08_kll_quantiles")
+    qs = entry_mod.queries()
+    for name in names:  # warm: first reads infer their schemas
+        qs[name](spark, SF).toPandas()
+    counts = {name: _jobs(spark, f"warm_{name}",
+                          lambda: qs[name](spark, SF).toPandas())[1]
+              for name in names}
+    assert sum(counts.values()) <= 6 * len(names), counts
+
+
+def test_q05_skips_null_lang(spark, tmp_path):
+    """NULL-lang documents are left out of q05, as the inner join of
+    exact and estimated counts used to leave them out; every other
+    lang keeps its exact count within the HLL bound."""
+    docs = pd.read_parquet(f"{SF}/documents.parquet")
+    docs.loc[docs["doc_id"] % 5 == 0, "lang"] = None
+    docs.to_parquet(tmp_path / "documents.parquet")
+    got = entry_mod.queries()["q05_hll_distinct"](
+        spark, str(tmp_path)).toPandas()
+    want = (docs.dropna(subset=["lang"]).groupby("lang")["doc_id"]
+            .nunique().rename("exact_distinct").reset_index())
+    assert got["lang"].tolist() == want["lang"].tolist()
+    assert got["exact_distinct"].tolist() == want["exact_distinct"].tolist()
+    assert got["within_bound"].all()

@@ -1792,6 +1792,20 @@ def test_script_profile_counts_and_dominant(spark):
     assert got[5].script_chars == 0 and got[5].dominant_script == "arabic"
 
 
+def test_script_profile_tie_break_ignores_class_order(spark, monkeypatch):
+    """A count tie goes to the alphabetically first script name, also
+    when SCRIPT_CLASSES is not listed in name order."""
+    from facs_spark.ops import textstats
+    rows = [(1, "αβ ab"), (2, "привет αβγδεζ"), (3, "123")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    want = {1: "greek", 2: "cyrillic", 3: "arabic"}
+    monkeypatch.setattr(textstats, "SCRIPT_CLASSES",
+                        tuple(reversed(textstats.SCRIPT_CLASSES)))
+    got = {r.doc_id: r.dominant_script for r in
+           textstats.script_profile(df, "doc_id", "text").collect()}
+    assert got == want
+
+
 def test_script_profile_null_text(spark):
     """NULL text gets NULL counts and a NULL dominant_script (as
     regexp_count(NULL) is NULL); the non-null rows sharing its batch

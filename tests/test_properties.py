@@ -5,7 +5,8 @@ import numpy as np
 from hypothesis import given, settings, strategies as st
 
 from facs_spark.sketch import BloomFilter, CountMinSketch, HyperLogLog
-from facs_spark.sketch.hashing import hash3_matrix, hash3_scalar
+from facs_spark.sketch.hashing import hash3_matrix
+from test_hashing import hash3_scalar
 
 
 @settings(max_examples=60, deadline=None)

@@ -86,11 +86,12 @@ def test_streaming_grouped_hll_state(spark, pages_dir, tmp_path):
     cumulatively; the final per-lang estimate matches the batch
     countDistinct within the published bound."""
     from facs_spark.streaming.monitor import stream_pages
-    from facs_spark.streaming.stateful import streaming_grouped_hll
+    from facs_spark.ops.sketch_agg import SketchSpec
+    from facs_spark.streaming.stateful import streaming_grouped_sketch
 
     stream = stream_pages(spark, f"{pages_dir}/*.parquet")
-    running = streaming_grouped_hll(stream, key_col="lang",
-                                    value_col="url", p=12)
+    running = streaming_grouped_sketch(
+        stream, SketchSpec.make("hll", "url", p=12), key_col="lang")
     q = (running.writeStream.outputMode("update").format("memory")
          .queryName("hll_state")
          .option("checkpointLocation", str(tmp_path / "ckpt2"))
