@@ -71,9 +71,7 @@ def _classify_kernel(bc_blob, passthrough: tuple[str, ...], text_col: str,
     canon_fn = CANONICALIZERS[canonicalize] if canonicalize else None
 
     def run(iterator):
-        blob = bc_blob.value
-        bloom = (BloomFilter.from_banks([bytes(b) for b in blob])
-                 if isinstance(blob, list) else BloomFilter.from_bytes(blob))
+        bloom = BloomFilter.from_payload(bc_blob.value)
         for batch in iterator:
             for lo in range(0, len(batch), _KERNEL_BATCH):
                 sub = batch.iloc[lo:lo + _KERNEL_BATCH]
@@ -111,15 +109,7 @@ def classify_pages(df: DataFrame, bloom: BloomFilter,
     tole = mco_suggestion(k) if tole_rate is None else tole_rate
     if sample_fraction is not None and sample_fraction < 1.0:
         df = df.sample(fraction=sample_fraction, seed=seed)
-    blob = bloom.to_bytes()
-    # Oversized filters ship as banked blobs (JVM arrays cap at 2 GB;
-    # SURVEY §4 physical notes).  Auto-banks past 1 GiB, or force with
-    # max_bank_bytes for testing.
-    if max_bank_bytes or len(blob) > (1 << 30):
-        bc = spark.sparkContext.broadcast(
-            bloom.split_banks(max_bank_bytes or (1 << 30)))
-    else:
-        bc = spark.sparkContext.broadcast(blob)
+    bc = spark.sparkContext.broadcast(bloom.to_payload(max_bank_bytes))
     cols = tuple(passthrough)
     select_cols = list(dict.fromkeys(cols + (text_col,)))
     sel = ensure_parallelism(df.select(*select_cols))
@@ -296,9 +286,7 @@ def _multi_kernel(bc_blobs, names: tuple[str, ...],
     canon_fn = CANONICALIZERS[canonicalize] if canonicalize else None
 
     def run(iterator):
-        blooms = [BloomFilter.from_banks([bytes(x) for x in b])
-                  if isinstance(b, list) else BloomFilter.from_bytes(b)
-                  for b in bc_blobs.value]
+        blooms = [BloomFilter.from_payload(b) for b in bc_blobs.value]
         for batch in iterator:
             for lo in range(0, len(batch), _KERNEL_BATCH):
                 sub = batch.iloc[lo:lo + _KERNEL_BATCH]
@@ -341,15 +329,8 @@ def classify_multi(df: DataFrame, blooms: dict[str, BloomFilter],
     # same banked path as classify_pages: any filter whose blob tops
     # 1 GiB ships as bank slices (JVM byte arrays cap at 2 GB), so a
     # wide filter that works single-filter also works in a screen
-    payloads = []
-    for n in names:
-        blob = blooms[n].to_bytes()
-        if max_bank_bytes or len(blob) > (1 << 30):
-            payloads.append(blooms[n].split_banks(
-                max_bank_bytes or (1 << 30)))
-        else:
-            payloads.append(blob)
-    bc = spark.sparkContext.broadcast(payloads)
+    bc = spark.sparkContext.broadcast(
+        [blooms[n].to_payload(max_bank_bytes) for n in names])
     cols = tuple(passthrough)
     select_cols = list(dict.fromkeys(cols + (text_col,)))
     sel = ensure_parallelism(df.select(*select_cols))

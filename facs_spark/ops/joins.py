@@ -26,17 +26,33 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import ensure_parallelism, ensure_shipped
+from ..sketch import BloomFilter
+from ..sketch.hashing import raw_key_matrices
 from .sketch_agg import SketchSpec, build_sketch
 
 _PRUNABLE = ("inner", "left_semi", "leftsemi", "semi")
+
+
+def _probe_masks(payload, key: str, iterator):
+    """(batch, membership mask) per pandas batch, probing ``key``
+    against the Bloom ``payload`` through the SAME encoding as the
+    build side (raw_key_matrices) — a divergent copy here would prune
+    rows with real join partners."""
+    bf = BloomFilter.from_payload(payload)
+    for batch in iterator:
+        mask = np.zeros(len(batch), dtype=bool)
+        for idx, mat in raw_key_matrices(batch[key]):
+            mask[idx] = bf.contains_batch(mat)
+        yield batch, mask
 
 
 def bloom_key_filter(df: DataFrame, key: str, blob: bytes | list,
                      spark=None, key_range: tuple | None = None
                      ) -> DataFrame:
     """Filter ``df`` to rows whose ``key`` is (probably) in the Bloom
-    filter ``blob`` — the map-side half of ``bloom_prejoin``, exposed
-    for pipelines that reuse one filter across several scans.
+    filter ``blob`` (``BloomFilter.to_payload()``: one blob or banks)
+    — the map-side half of ``bloom_prejoin``, exposed for pipelines
+    that reuse one filter across several scans.
 
     ``key_range=(mn, mx)``: the build side's key min/max, applied as a
     Catalyst ``BETWEEN`` *before* the Bloom kernel.  The Bloom probe
@@ -61,18 +77,7 @@ def bloom_key_filter(df: DataFrame, key: str, blob: bytes | list,
     schema = df.schema
 
     def kernel(iterator):
-        from facs_spark.sketch import BloomFilter
-        from facs_spark.sketch.hashing import raw_key_matrices
-        b = bc.value
-        bf = (BloomFilter.from_banks([bytes(x) for x in b])
-              if isinstance(b, list) else BloomFilter.from_bytes(bytes(b)))
-        for batch in iterator:
-            # probe through the SAME encoding as the build side
-            # (raw_key_matrices) — a divergent copy here would prune
-            # rows with real join partners
-            mask = np.zeros(len(batch), dtype=bool)
-            for idx, mat in raw_key_matrices(batch[key]):
-                mask[idx] = bf.contains_batch(mat)
+        for batch, mask in _probe_masks(bc.value, key, iterator):
             yield batch[mask]
 
     return ensure_parallelism(df).mapInPandas(kernel, schema=schema)
@@ -96,15 +101,7 @@ def bloom_key_flag(df: DataFrame, key: str, blob: bytes | list,
                         + [StructField(flag_col, BooleanType())])
 
     def kernel(iterator):
-        from facs_spark.sketch import BloomFilter
-        from facs_spark.sketch.hashing import raw_key_matrices
-        b = bc.value
-        bf = (BloomFilter.from_banks([bytes(x) for x in b])
-              if isinstance(b, list) else BloomFilter.from_bytes(bytes(b)))
-        for batch in iterator:
-            mask = np.zeros(len(batch), dtype=bool)
-            for idx, mat in raw_key_matrices(batch[key]):
-                mask[idx] = bf.contains_batch(mat)
+        for batch, mask in _probe_masks(bc.value, key, iterator):
             out = batch.copy()
             out[flag_col] = mask
             yield out
@@ -143,10 +140,8 @@ def bloom_anti_join(probe: DataFrame, build: DataFrame, key: str,
     bloom, _rows = build_sketch(build.select(key), spec)
     if bloom is None:
         return probe
-    blob = bloom.to_bytes()
-    banked = bloom.split_banks(1 << 30) if len(blob) > (1 << 30) else blob
     flag = "_bloom_maybe"
-    flagged = bloom_key_flag(probe, key, banked, flag_col=flag)
+    flagged = bloom_key_flag(probe, key, bloom.to_payload(), flag_col=flag)
     definite_new = flagged.where(~F.col(flag)).drop(flag)
     maybe = flagged.where(F.col(flag)).drop(flag)
     verified_new = maybe.join(build.select(key), key, "left_anti")
@@ -208,9 +203,8 @@ def bloom_prejoin(probe: DataFrame, build: DataFrame, key: str,
     bloom, _rows = build_sketch(build.select(key), spec)
     if bloom is None:
         bloom = spec.new_sketch()
-    blob = bloom.to_bytes()
-    banked = bloom.split_banks(1 << 30) if len(blob) > (1 << 30) else blob
-    pruned = bloom_key_filter(probe, key, banked, key_range=key_range)
+    pruned = bloom_key_filter(probe, key, bloom.to_payload(),
+                              key_range=key_range)
     return pruned.join(build, key, how)
 
 

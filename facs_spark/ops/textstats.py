@@ -538,17 +538,17 @@ def lm_doc_score_cms(df: DataFrame, id_col: str = "doc_id",
         kernel, schema=f"{id_col} long, n_tokens long, lm_score double")
 
 
-# Unicode-block classes per script — shared verbatim with the q78
-# oracle (plain character-class ranges: identical meaning in Java
-# regex and RE2).  Coarse by design: block membership, not the full
+# Unicode-block codepoint ranges (inclusive) per script — the same
+# blocks as the q78 oracle's character classes ("[؀-ۿ]", ...,
+# "[A-Za-zÀ-ɏ]").  Coarse by design: block membership, not the full
 # Unicode Script property (fine for corpus routing; ICU-grade script
 # detection slots in the same shape).
-SCRIPT_CLASSES: tuple[tuple[str, str], ...] = (
-    ("arabic", "؀-ۿ"),
-    ("cjk", "一-鿿"),
-    ("cyrillic", "Ѐ-ӿ"),
-    ("greek", "Ͱ-Ͽ"),
-    ("latin", "A-Za-zÀ-ɏ"),
+SCRIPT_CLASSES: tuple[tuple[str, tuple[tuple[int, int], ...]], ...] = (
+    ("arabic", ((0x0600, 0x06FF),)),
+    ("cjk", ((0x4E00, 0x9FFF),)),
+    ("cyrillic", ((0x0400, 0x04FF),)),
+    ("greek", ((0x0370, 0x03FF),)),
+    ("latin", ((0x41, 0x5A), (0x61, 0x7A), (0xC0, 0x24F))),
 )
 
 
@@ -572,24 +572,11 @@ def script_profile(df: DataFrame, id_col: str = "doc_id",
     order of ``SCRIPT_CLASSES``.  Returns (id, <script>_chars...,
     dominant_script, script_chars).
     """
-    # codepoint ranges straight from SCRIPT_CLASSES (shared with the
-    # oracle): "A-Za-zÀ-ɏ" → [(65,90),(97,122),(192,591)], others are
-    # single blocks
-    ranges = []
     names = [n for n, _ in SCRIPT_CLASSES]
+    ranges = [rs for _, rs in SCRIPT_CLASSES]
     # np.argmax keeps the first maximum: scan the classes in name
     # order so a tie goes to the alphabetically first script
     by_name = np.argsort(names, kind="stable")
-    for _name, cls in SCRIPT_CLASSES:
-        rs, i = [], 0
-        while i < len(cls):
-            if i + 2 < len(cls) and cls[i + 1] == "-":
-                rs.append((ord(cls[i]), ord(cls[i + 2])))
-                i += 3
-            else:
-                rs.append((ord(cls[i]), ord(cls[i])))
-                i += 1
-        ranges.append(tuple(rs))
 
     def kernel(iterator):
         import numpy as np

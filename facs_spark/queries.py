@@ -14,7 +14,9 @@ north rule, and the oracle asserts it must hold (`true`).
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
+import re
 import shutil
 import time
 import uuid
@@ -22,13 +24,63 @@ import weakref
 from contextlib import contextmanager
 from datetime import timedelta
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.window import Window
 
+from .io.snapshots import (plan_files, read_snaptable, snapshots,
+                           write_snaptable)
+from .io.warc import read_warc, write_warc
+from .ops.checkpoint import incremental_snaptable_sketch
+from .ops.chunking import chunk_text, pack_tokens
+from .ops.clustering import kmeans_assign, kmeans_fit
 from .ops.contamination import (build_reference_bloom, classify_pages,
-                                contamination_counters)
-from .ops.sketch_agg import SketchSpec, build_sketch, grouped_sketches
-from .session import _claim_handoff, _handoff, _scratch
-from .sketch import sketch_from_bytes
+                                classify_pages_shuffle,
+                                contamination_counters,
+                                token_containment_grid)
+from .ops.dedup import (bbit_minhash_corpus, dedup_clusters,
+                        duplicate_spans, exact_dedup, minhash_dedup,
+                        ngram_jaccard_pairs, simhash_fingerprints,
+                        simhash_near_pairs)
+from .ops.joins import (bloom_anti_join, bloom_prejoin, bucketed_join,
+                        stage_bucketed)
+from .ops.multimodal import (frame_sample_plan, image_channel_stats,
+                             media_metadata, synth_media)
+from .ops.pipeline import decontaminate
+from .ops.sampling import (cap_per_group, deterministic_shuffle,
+                           group_stat_filter, hash_split, hex_threshold,
+                           kmv_bottom_k, priority_sample,
+                           quantile_buckets, rebalance_sources,
+                           stratified_sample, temperature_rebalance,
+                           weighted_sample)
+from .ops.scrub import PII_PATTERNS, normalize_text, scrub_pii
+from .ops.selection import dsir_select, dsir_weights
+from .ops.similarity import (brute_force_topk, cosine_neardup_pairs,
+                             ivf_topk, lsh_bucket_topk, semantic_dedup)
+from .ops.sketch_agg import (SketchSpec, build_sketch, grouped_overlap,
+                             grouped_sketches)
+from .ops.skew import salted_join
+from .ops.sliding_hll import (sliding_hll_frontier, sliding_hll_raw_points,
+                              windows_from_frontier)
+from .ops.temporal import asof_join, band_count_min, sessionize
+from .ops.textstats import (GOPHER_STOPWORDS, LANG_MARKERS, bm25_topk,
+                            doc_digests, gopher_rules, hashed_linear_score,
+                            lang_id, lm_doc_score, lm_doc_score_bigram,
+                            quality_score, repetition_ratio,
+                            script_profile, token_counts, token_entropy)
+from .ops.urls import canonicalize_url, line_dedup, registrable_domain
+from .session import (_claim_handoff, _handoff, _scratch,
+                      ensure_parallelism, ensure_shipped)
+from .sketch import (BloomFilter, DDSketch, MomentsSketch, ThetaSketch,
+                     sketch_from_bytes)
+from .streaming.monitor import (run_monitor_once, streaming_dedup,
+                                streaming_sessions, windowed_event_counts)
+from .streaming.stateful import (streaming_priority_sample,
+                                 streaming_sliding_hll,
+                                 streaming_window_ones)
 
 # Flagship parameters (k per kmer_suggestion for small inputs,
 # tole per mco_suggestion(15) — facs/suggestions.c:35-82).
@@ -146,7 +198,6 @@ def q02_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "l_returnflag": batch["l_returnflag"],
                 "is_member": bf.contains_batch(keys)})
 
-    from .session import ensure_shipped
     ensure_shipped(spark)
     probed = probes.mapInPandas(probe_kernel,
                                 schema="l_returnflag string, is_member boolean")
@@ -294,7 +345,6 @@ FROM docs_all ORDER BY doc_id""")
 # (1.04/√m); output is (lang, exact_distinct, within_bound).
 # =====================================================================
 def q05_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
     docs = _read(spark, sf_dir, "documents")
     # one 16 KB blob and one exact row per lang: finish on the driver
     hll = {r["lang"]: sketch_from_bytes(bytes(r["sketch"])).estimate()
@@ -334,7 +384,6 @@ def q06_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = (tokens.groupBy("token").agg(F.count(F.lit(1)).alias("exact_count"))
            .orderBy(F.desc("exact_count"), "token").limit(10))
     rows = top.collect()
-    import pandas as pd
     ests = cms.query_batch([r["token"] for r in rows])
     bound = cms.error_bound
     pdf = pd.DataFrame({
@@ -363,7 +412,6 @@ LIMIT 10
 # asserts |rank − q| ≤ bound.
 # =====================================================================
 def _quantile_rank_check(spark, df, col, qs, sketch_kind, bound, **params):
-    import pandas as pd
     sk, _n = build_sketch(df, SketchSpec.make(sketch_kind, col, **params))
     qs = sorted(qs)
     ests = [float(sk.quantile(q)) for q in qs]
@@ -406,7 +454,6 @@ Q08_SQL = _QUANTILE_SQL
 # duplicate (user_id, event_type) groups with the kept representative.
 # =====================================================================
 def q09_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.dedup import exact_dedup
     ev = _read(spark, sf_dir, "events")
     return (exact_dedup(ev, ["user_id", "event_type"], "event_id")
             .filter(F.col("dup_count") > 1)
@@ -435,7 +482,6 @@ NEARDUP_THRESHOLD = 0.8
 
 
 def q10_minhash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.dedup import minhash_dedup
     docs = _read(spark, sf_dir, "documents")
     pairs = minhash_dedup(docs, "doc_id", "text",
                           threshold=NEARDUP_THRESHOLD,
@@ -585,7 +631,6 @@ def _drain_stream(spark: SparkSession, qname: str, out: DataFrame,
     a plain distributed read (measured on q47: 13.1 s → 8.3 s at
     sf1.0, drain 10.1 → 4.5 s).
     """
-    from .streaming.monitor import run_monitor_once
     ckpt = _scratch(qname + "_ckpt_")
     try:
         with _stream_state_partitions(spark):
@@ -622,7 +667,6 @@ def q11_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew cap with its rep-pair contract stays the pipeline default —
     a >cap cell would legitimately elide non-rep pairs and mismatch
     a brute-force oracle by design)."""
-    from .ops.dedup import simhash_fingerprints, simhash_near_pairs
     docs = _read(spark, sf_dir, "documents")
     fp_path = _claim_handoff(_handoff("q11_fp"))
     (simhash_fingerprints(docs, "doc_id", "text", shingle_n=2)
@@ -634,6 +678,9 @@ def q11_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("id_a", "id_b"))
 
 
+# q11: the query materializes its fingerprints to parquet at call
+# time; the oracle recomputes exact all-pairs Hamming from that
+# parquet with bit_count(xor())
 def _q11_sql() -> str:
     """Exact all-pairs Hamming over the materialized fingerprints —
     DuckDB's ``bit_count``/``xor`` make the quadratic ground truth
@@ -650,7 +697,6 @@ ORDER BY id_a, id_b
 
 
 def q12_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.dedup import ngram_jaccard_pairs
     docs = _read(spark, sf_dir, "documents")
     # max_df=None: this is the oracle-checked EXACT verifier, so it
     # must match the uncapped SQL at any scale factor; the default
@@ -676,9 +722,6 @@ TOPK_K = 5
 
 
 def q13_embedding_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    from .ops.similarity import brute_force_topk
     emb = _read(spark, sf_dir, "embeddings")
     qrows = (emb.filter(F.col("vec_id") < TOPK_QUERIES)
              .select("vec_id", "embedding").collect())
@@ -721,7 +764,6 @@ FROM ranked WHERE rk <= {TOPK_K} ORDER BY query_id, neighbor_id
 # digests (JVM-side expressions; exact SQL oracles).
 # =====================================================================
 def q14_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import lang_id
     docs = _read(spark, sf_dir, "documents")
     return (lang_id(docs).groupBy("lang_guess")
             .agg(F.count(F.lit(1)).alias("n_docs"))
@@ -751,11 +793,11 @@ best AS (
 )
 SELECT lang_guess, COUNT(*) AS n_docs FROM best
 GROUP BY lang_guess ORDER BY lang_guess
-"""
+""".format(markers=",\n         ".join(
+    _marker_sql(c, m) for c, m in LANG_MARKERS.items()))
 
 
 def q15_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import quality_score
     docs = _read(spark, sf_dir, "documents")
     return _sorted_once(
         quality_score(docs)
@@ -797,7 +839,6 @@ FROM scored ORDER BY doc_id
 
 
 def q16_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import token_counts
     docs = _read(spark, sf_dir, "documents")
     return (token_counts(docs)
             .groupBy()
@@ -817,7 +858,6 @@ FROM documents
 
 
 def q17_doc_digests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import doc_digests
     docs = _read(spark, sf_dir, "documents")
     return _sorted_once(doc_digests(docs, "doc_id", "text")
                         .select("doc_id", "md5", "text_len"), "doc_id")
@@ -835,7 +875,6 @@ FROM documents ORDER BY doc_id
 # and oracle-checked via the deterministic container header).
 # =====================================================================
 def q18_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.multimodal import media_metadata, synth_media
     docs = _read(spark, sf_dir, "documents").select("doc_id")
     media = synth_media(docs, "doc_id")
     return _sorted_once(
@@ -854,7 +893,6 @@ FROM documents ORDER BY doc_id
 
 
 def q19_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.multimodal import frame_sample_plan
     docs = (_read(spark, sf_dir, "documents")
             .select("doc_id", (F.col("n_chars") * 10).alias("duration_ms")))
     plan = frame_sample_plan(docs, "doc_id", "duration_ms", fps=1.0,
@@ -877,7 +915,6 @@ ORDER BY doc_id, frame_idx
 # q20 — window function breadth: top-3 events by value per user.
 # =====================================================================
 def q20_window_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
     ev = _read(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(F.desc("value"),
                                               F.asc("event_id"))
@@ -917,11 +954,6 @@ ANN_EVAL_QUERIES = 200
 
 
 def q21_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
-    from pyspark.sql.window import Window
-
-    from .ops.similarity import brute_force_topk, lsh_bucket_topk
     emb = _read(spark, sf_dir, "embeddings")
     n = emb.count()
     # bits=None → resolution derived from the row count (expected
@@ -949,6 +981,7 @@ def q21_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("query_id"))
 
 
+# per-query recall-vs-exact booleans, oracle asserts TRUE
 Q21_SQL = f"""
 SELECT vec_id AS query_id, TRUE AS within_bound
 FROM embeddings WHERE vec_id < {ANN_EVAL_QUERIES} ORDER BY query_id
@@ -961,9 +994,6 @@ FROM embeddings WHERE vec_id < {ANN_EVAL_QUERIES} ORDER BY query_id
 # aggregate (SURVEY §2.10).
 # =====================================================================
 def q22_grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .ops.sketch_agg import SketchSpec, grouped_sketches
     docs = _read(spark, sf_dir, "documents")
     g = grouped_sketches(docs, ["lang"], SketchSpec.make("kll", "n_chars",
                                                          k=200)).collect()
@@ -1008,7 +1038,6 @@ ORDER BY lang, q
 # path must produce byte-identical aggregates to the unsalted plan.
 # =====================================================================
 def q23_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.skew import salted_join
     li = _read(spark, sf_dir, "lineitem")
     part = _read(spark, sf_dir, "part").select("p_partkey", "p_brand")
     joined = salted_join(li.withColumnRenamed("l_partkey", "p_partkey"),
@@ -1123,7 +1152,6 @@ SELECT
 # Oracle: DuckDB recursive CTE reachability → min reachable id.
 # =====================================================================
 def q27_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.dedup import dedup_clusters, minhash_dedup
     docs = _read(spark, sf_dir, "documents")
     pairs = minhash_dedup(docs, "doc_id", "text", threshold=0.8)
     return (dedup_clusters(pairs)
@@ -1153,7 +1181,6 @@ FROM reach GROUP BY src ORDER BY doc_id
 # memory).  Semantically identical to q04, so it shares q04's oracle.
 # =====================================================================
 def q29_classify_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.contamination import classify_pages_shuffle
     docs = _read(spark, sf_dir, "documents")
     ref = docs.filter(F.col("source") == REF_SOURCE)
     out = classify_pages_shuffle(docs, ref, id_col="doc_id",
@@ -1162,6 +1189,10 @@ def q29_classify_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sorted_once(
         out.select("doc_id", "escalated", "contaminated",
                    "match_time", "match_score"), "doc_id")
+
+
+# same semantics as q04 by construction → same oracle
+Q29_SQL = Q04_SQL
 
 
 # =====================================================================
@@ -1279,7 +1310,6 @@ def _q38_stage(spark, sf_dir: str):
 
 def q38_stream_watermarked_counts(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
-    from .streaming.monitor import windowed_event_counts
     ev = _read_stream(spark, _q38_src(spark, sf_dir))
     agg = windowed_event_counts(ev, ts_col="ts", window="1 day",
                                 watermark="2 days")
@@ -1340,7 +1370,6 @@ def _q47_stage(spark, sf_dir: str):
 
 
 def q47_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming.monitor import streaming_sessions
     ev = _read_stream(spark, _q47_src(spark, sf_dir))
     sess = streaming_sessions(ev, "ts", gap=SESSION_GAP,
                               watermark="1 hour")
@@ -1390,7 +1419,6 @@ ORDER BY user_id, start_s
 # oracle — engine-vs-engine on the same inclusive-tie semantics.
 # =====================================================================
 def q39_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.temporal import asof_join
     ev = _read(spark, sf_dir, "events")
     left = ev.filter(F.col("event_id") % 2 == 1) \
              .select("event_id", "user_id", "ts")
@@ -1427,7 +1455,6 @@ ORDER BY l.event_id
 # SQL; epoch seconds via truncating casts both engines share.
 # =====================================================================
 def q40_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.temporal import sessionize
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = _read(spark, sf_dir, "events").select("user_id", "ts")
     sess = sessionize(ev, "user_id", "ts", gap="30 minutes")
@@ -1460,7 +1487,6 @@ def q41_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (110M join rows → 200k output rows at sf1.0; §8 of the
     # optimization guide: move decisions, not pair explosions).
     # range_join itself stays the general pair-producing op.
-    from .ops.temporal import band_count_min
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = (_read(spark, sf_dir, "events")
           .withColumn("ep", F.col("ts").cast("timestamp").cast("long")))
@@ -1612,7 +1638,6 @@ ORDER BY o_orderpriority
 # build side (one brand ≈ 4% of parts) makes the pruning material.
 # =====================================================================
 def q34_bloom_prejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.joins import bloom_prejoin
     li = (_read(spark, sf_dir, "lineitem")
           .select(F.col("l_partkey").alias("p_partkey"),
                   "l_quantity", "l_extendedprice"))
@@ -1680,7 +1705,6 @@ def _with_twins(emb: DataFrame, cache_key: str | None = None):
 
 
 def q32_cosine_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.similarity import cosine_neardup_pairs
     emb = _read(spark, sf_dir, "embeddings")
     both, _off, n = _with_twins(emb, cache_key=sf_dir)
     pairs = cosine_neardup_pairs(both, "vec_id", "embedding",
@@ -1697,9 +1721,6 @@ FROM embeddings WHERE vec_id < {N_TWINS} ORDER BY id_a
 
 
 def q33_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from .ops.similarity import ivf_topk
     emb = _read(spark, sf_dir, "embeddings")
     both, off, n = _with_twins(emb, cache_key=sf_dir)
     ann = ivf_topk(both, "vec_id", "embedding", k=3, nprobe=2,
@@ -1732,9 +1753,6 @@ FROM embeddings WHERE vec_id < {N_TWINS} ORDER BY query_id
 # exact set sizes in SQL.
 # =====================================================================
 def q37_theta_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .ops.sketch_agg import SketchSpec, build_sketch
     cust = _read(spark, sf_dir, "customer").select("c_custkey")
     orders = _read(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey"))
@@ -1782,8 +1800,6 @@ SELECT
 # scale the same gates are the probabilistic d2 guarantee.
 # =====================================================================
 def q46_sharded_overlap_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sketch_agg import grouped_overlap
-    from .sketch.theta import ThetaSketch
     docs = _read(spark, sf_dir, "documents")
     spec = SketchSpec.make("theta", "text", prep="tokens", k=512)
     ov = grouped_overlap(docs, "source", spec, shards=4)
@@ -1863,7 +1879,6 @@ def q35_cap_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (host+lang); the oracle replays the identical two-column
     # partition and md5 ordering, so the SELECTION (not just the
     # sizes) must match row for row
-    from .ops.sampling import cap_per_group
     docs = _read(spark, sf_dir, "documents")
     capped = cap_per_group(docs, ["lang", "source"], "doc_id",
                            cap=CAP_PER_LANG, seed=0)
@@ -1891,7 +1906,6 @@ ORDER BY lang, source, doc_id
 # shingle construction q10/q12 already rely on).
 # =====================================================================
 def q44_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import repetition_ratio
     docs = _read(spark, sf_dir, "documents")
     out = repetition_ratio(docs, "doc_id", "text", shingle_n=3)
     return _sorted_once(
@@ -1935,7 +1949,6 @@ ORDER BY t.doc_id
 # engines compute identically).
 # =====================================================================
 def q45_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import weighted_sample
     docs = _read(spark, sf_dir, "documents")
     prob = F.length("text") / F.lit(400.0)
     out = weighted_sample(docs, prob, "doc_id", seed=11)
@@ -1966,7 +1979,6 @@ _Q42_FRACS = {"en": 0.5, "de": 0.25, "fr": 1.0}
 
 
 def q42_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import stratified_sample
     docs = _read(spark, sf_dir, "documents")
     out = stratified_sample(docs, "lang", _Q42_FRACS, "doc_id", seed=5)
     return _sorted_once(out.select("lang", "doc_id"),
@@ -1974,7 +1986,6 @@ def q42_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q42_sql() -> str:
-    from .ops.sampling import hex_threshold
     cases = " ".join(
         f"WHEN lang = '{k}' AND substr(md5('5:' || CAST(doc_id AS "
         f"VARCHAR)), 1, 13) < '{hex_threshold(v)}' THEN TRUE"
@@ -1988,7 +1999,6 @@ _Q43_WEIGHTS = {"train": 0.8, "val": 0.1, "test": 0.1}
 
 
 def q43_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import hash_split
     docs = _read(spark, sf_dir, "documents")
     out = hash_split(docs, "doc_id", _Q43_WEIGHTS, seed=9)
     return (out.groupBy("split")
@@ -2003,7 +2013,6 @@ def _q43_sql() -> str:
     # 0.8 + 0.1 is 0.9000000000000001 in IEEE, and a hand-written
     # hex_threshold(0.9) could disagree by a few 2^-52 units, exactly
     # where a row's draw might land
-    from .ops.sampling import hex_threshold
     total = float(sum(_Q43_WEIGHTS.values()))
     names = list(_Q43_WEIGHTS)
     cum, thr = 0.0, []
@@ -2027,7 +2036,6 @@ FROM assigned GROUP BY split ORDER BY split
 
 
 def q36_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import deterministic_shuffle
     docs = _read(spark, sf_dir, "documents")
     # the head of the permutation proves the order (the driver compare
     # is order-insensitive, so "the same 20 rows are first" is the
@@ -2065,8 +2073,6 @@ Q48_LO, Q48_HI = 100, 249
 
 
 def _q48_stage(spark, sf_dir: str) -> str:
-    from .io.snapshots import write_snaptable
-
     def fill(root):
         docs = _read(spark, sf_dir, "documents")
         mid = int(docs.agg(F.max("doc_id")).collect()[0][0]) // 2
@@ -2080,7 +2086,6 @@ def _q48_stage(spark, sf_dir: str) -> str:
 
 
 def q48_snaptable_pruned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .io.snapshots import plan_files, read_snaptable
     tgt = "snap:" + _q48_stage(spark, sf_dir)
     prune = [("doc_id", Q48_LO, Q48_HI)]
     _, skipped = plan_files(tgt, prune=prune)
@@ -2112,9 +2117,6 @@ Q49_BUCKETS = 8
 
 
 def _q49_stage(spark, sf_dir: str) -> tuple:
-    import hashlib
-
-    from .ops.joins import stage_bucketed
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     names = (f"q49_customer_{tag}", f"q49_orders_{tag}")
 
@@ -2131,7 +2133,6 @@ def _q49_stage(spark, sf_dir: str) -> tuple:
 
 
 def q49_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.joins import bucketed_join
     cust_t, ord_t = _q49_stage(spark, sf_dir)
     j = bucketed_join(spark, cust_t, ord_t, "c_custkey")
     cents = F.round(F.col("o_totalprice") * 100).cast("long")
@@ -2165,7 +2166,6 @@ Q50_K = 10
 
 
 def q50_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import bm25_topk
     docs = _read(spark, sf_dir, "documents")
     return bm25_topk(docs, list(Q50_TERMS), id_col="doc_id",
                      text_col="text", k=Q50_K)
@@ -2212,7 +2212,6 @@ LIMIT {Q50_K}
 # O(stream)); asserted in tests/test_streaming.py.
 # =====================================================================
 def q51_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .streaming.monitor import streaming_dedup
     src = _ltz_events_stage(spark, "q51_src", sf_dir, lambda ev: [
         ("0_all", ev), ("1_replay", ev.filter(_fresh_tail(ev)))])
     deduped = streaming_dedup(_read_stream(spark, src),
@@ -2246,8 +2245,6 @@ FROM events GROUP BY event_type ORDER BY event_type
 # (asserted in tests/test_helpers.py); the oracle gates the bound.
 # =====================================================================
 def q52_incremental_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.checkpoint import incremental_snaptable_sketch
-    from .ops.sketch_agg import SketchSpec
     root = _q48_stage(spark, sf_dir)
     # process-cached like the snaptable: re-runs resume from it
     ckpt = _stage("q52_ckpt", sf_dir, lambda _d: None) + "/state"
@@ -2290,7 +2287,6 @@ SUBSTR_L = 8
 
 
 def q53_substring_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.dedup import duplicate_spans
     docs = _read(spark, sf_dir, "documents")
     spans = duplicate_spans(docs, "doc_id", "text",
                             min_tokens=SUBSTR_L)
@@ -2348,7 +2344,6 @@ FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start
 # expression code — no shuffle beyond the final count.
 # =====================================================================
 def q54_url_canonical_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.urls import canonicalize_url, registrable_domain
     docs = _read(spark, sf_dir, "documents")
     messy = docs.select(
         F.concat(
@@ -2432,7 +2427,6 @@ Q54_SQL = _Q54_CANON_SQL.replace(
 # min(struct) agg; text crosses exactly one shuffle (the rebuild).
 # =====================================================================
 def q55_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.urls import line_dedup
     docs = _read(spark, sf_dir, "documents")
     n = docs.agg(F.max("doc_id")).collect()[0][0] + 1
     nxt = docs.select(((F.col("doc_id") - 1 + n) % n).alias("doc_id"),
@@ -2490,7 +2484,6 @@ DECON_L = 13
 
 
 def q56_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.pipeline import decontaminate
     docs = _read(spark, sf_dir, "documents")
     eval_set = docs.filter(F.col("doc_id") % 10 == 7)
     return (decontaminate(docs, eval_set, n_tokens=DECON_L)
@@ -2533,8 +2526,6 @@ _Q57_EPOCH = 1704067200  # 2024-01-01T00:00:00Z
 
 
 def _q57_stage(spark, sf_dir: str) -> str:
-    from .io.warc import write_warc
-
     def fill(d):
         docs = _read(spark, sf_dir, "documents")
         pages = docs.select(
@@ -2550,7 +2541,6 @@ def _q57_stage(spark, sf_dir: str) -> str:
 
 
 def q57_warc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .io.warc import read_warc
     root = _q57_stage(spark, sf_dir)
     recs = read_warc(spark, root + "/part-*.warc",
                      split_bytes=256 * 1024)
@@ -2589,7 +2579,6 @@ FROM documents ORDER BY doc_id
 # machinery, not float luck.
 # =====================================================================
 def q58_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.similarity import semantic_dedup
     emb = _read(spark, sf_dir, "embeddings")
     both, _off, _n = _with_twins(emb, cache_key=sf_dir)
     out = semantic_dedup(both, "vec_id", "embedding",
@@ -2621,7 +2610,6 @@ REBAL_SEED = 3
 
 
 def q59_rebalance_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import rebalance_sources
     docs = _read(spark, sf_dir, "documents")
     out = rebalance_sources(docs, "lang", "doc_id", REBAL_TARGETS,
                             seed=REBAL_SEED)
@@ -2699,7 +2687,6 @@ _PII_TEXT_SQL = """
 
 
 def q60_scrub_pii(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.scrub import scrub_pii
     docs = (_read(spark, sf_dir, "documents")
             .select("doc_id", _pii_text_spark().alias("text")))
     return _sorted_once(scrub_pii(docs), "doc_id")
@@ -2709,7 +2696,6 @@ def _q60_sql():
     """One CTE per pattern, each counting on the PREVIOUS step's text
     (mirroring scrub_pii's sequential count-then-replace) and
     carrying every earlier count column forward."""
-    from .ops.scrub import PII_PATTERNS
     steps = []
     for i, (name, pat, repl) in enumerate(PII_PATTERNS):
         src = "text" if i == 0 else "t"
@@ -2760,14 +2746,12 @@ _GOPHER_TEXT_SQL = """
 
 
 def q61_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import gopher_rules
     docs = (_read(spark, sf_dir, "documents")
             .select("doc_id", _gopher_text_spark().alias("text")))
     return _sorted_once(gopher_rules(docs).drop("text"), "doc_id")
 
 
 def _q61_sql():
-    from .ops.textstats import GOPHER_STOPWORDS
     stop = " + ".join(
         f"CASE WHEN regexp_matches(lower(text), '\\b{w}\\b') THEN 1 "
         "ELSE 0 END" for w in GOPHER_STOPWORDS)
@@ -2816,7 +2800,6 @@ FROM r ORDER BY doc_id
 # tokenization; ln/avg rounded to 6 decimals on both sides.
 # =====================================================================
 def q62_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import lm_doc_score
     docs = _read(spark, sf_dir, "documents")
     return lm_doc_score(docs).orderBy("doc_id")
 
@@ -2845,7 +2828,6 @@ GROUP BY doc_id ORDER BY doc_id
 # oracle.
 # =====================================================================
 def q63_domain_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import group_stat_filter
     docs = (_read(spark, sf_dir, "documents")
             .select("doc_id", "n_chars",
                     F.concat(F.lit("site"),
@@ -2887,10 +2869,6 @@ ORDER BY d.doc_id
 # are where they claim to be.
 # =====================================================================
 def q64_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .ops.sampling import quantile_buckets
-    from .ops.textstats import lm_doc_score
     docs = _read(spark, sf_dir, "documents")
     # materialize the LM scores once: quantile_buckets' t-digest
     # build AND the bucket-count agg below both consume them, and
@@ -2931,7 +2909,6 @@ FROM range(1, 4) t(r) ORDER BY bucket
 # list_slice/array_to_string over the same single-space tokens.
 # =====================================================================
 def q65_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.chunking import chunk_text
     docs = _read(spark, sf_dir, "documents")
     return _sorted_once(
         chunk_text(docs, "doc_id", "text", width=32, stride=24),
@@ -2967,7 +2944,6 @@ FROM idx ORDER BY doc_id, chunk_id
 # window cumsum exactly.
 # =====================================================================
 def q66_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.chunking import pack_tokens
     docs = _read(spark, sf_dir, "documents")
     packed = pack_tokens(docs, "doc_id", "text", budget=512, shards=4)
     return (packed.groupBy("shard", "bin")
@@ -3007,7 +2983,6 @@ FROM cum GROUP BY 1, 2 ORDER BY shard, bin
 # both sides so float last-ulp order can't flip it.
 # =====================================================================
 def q67_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.selection import dsir_weights
     docs = _read(spark, sf_dir, "documents")
     out = dsir_weights(docs, target=F.col("lang") == "en",
                        id_col="doc_id", text_col="text",
@@ -3054,7 +3029,6 @@ GROUP BY doc_id ORDER BY doc_id
 # divergence cannot flip membership.
 # =====================================================================
 def q68_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.selection import dsir_select
     docs = _read(spark, sf_dir, "documents")
     out = dsir_select(docs, target=F.col("lang") == "en", k=100,
                       seed=7, prefix=3, alpha=0.5)
@@ -3112,7 +3086,6 @@ Q69_SEED = 11
 
 
 def q69_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import temperature_rebalance
     docs = _read(spark, sf_dir, "documents")
     out = temperature_rebalance(docs, "lang", "doc_id", alpha=0.5,
                                 seed=Q69_SEED)
@@ -3151,7 +3124,6 @@ ORDER BY d.doc_id
 # runs.
 # =====================================================================
 def q70_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.joins import bloom_anti_join
     docs = _read(spark, sf_dir, "documents")
     keyed = docs.select(
         "doc_id",
@@ -3184,7 +3156,6 @@ ORDER BY doc_id
 # single-space tokens (list_zip pair construction, ROUND 6).
 # =====================================================================
 def q71_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import lm_doc_score_bigram
     docs = _read(spark, sf_dir, "documents")
     return (lm_doc_score_bigram(docs)
             .select("doc_id",
@@ -3226,9 +3197,6 @@ GROUP BY doc_id ORDER BY doc_id
 # mis-summed centroids) breaks monotonicity immediately.
 # =====================================================================
 def q72_kmeans_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .ops.clustering import kmeans_assign, kmeans_fit
     emb = _read(spark, sf_dir, "embeddings")
     n = emb.count()
     cents, inertia = kmeans_fit(emb, "vec_id", "embedding",
@@ -3264,7 +3232,6 @@ FROM range(1, 5) t(r) ORDER BY iteration
 # the keep flag derives from the rounded value on both sides.
 # =====================================================================
 def q73_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import token_entropy
     docs = _read(spark, sf_dir, "documents")
     return token_entropy(docs, min_entropy=1.0).orderBy("doc_id")
 
@@ -3295,7 +3262,6 @@ FROM agg ORDER BY doc_id
 # from the documents table.
 # =====================================================================
 def q74_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .io.snapshots import read_snaptable, snapshots
     root = _q48_stage(spark, sf_dir)
     tgt = "snap:" + root
     hist = snapshots(root)
@@ -3334,10 +3300,6 @@ FROM documents, m WHERE doc_id > mid
 # engines (numpy argmin = first index; SQL orders by d2, cluster).
 # =====================================================================
 def q75_kmeans_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from .ops.clustering import kmeans_assign, kmeans_fit
     emb = _read(spark, sf_dir, "embeddings")
     cents, _ = kmeans_fit(emb, "vec_id", "embedding", k=8, n_iters=4,
                           seed=3, init="parallel")
@@ -3353,6 +3315,9 @@ def q75_kmeans_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy("cluster"))
 
 
+# q75: the query materializes its fitted centroids to parquet at call
+# time; the oracle replays nearest-centroid assignment from those
+# exact doubles (q11's handoff pattern)
 def _q75_sql() -> str:
     return f"""
 WITH c AS (SELECT cluster, d, v
@@ -3383,7 +3348,6 @@ FROM best WHERE rn = 1 GROUP BY cluster ORDER BY cluster
 # metadata pattern upgraded from header parsing to decoded bytes.
 # =====================================================================
 def q76_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.multimodal import image_channel_stats, synth_media
     docs = _read(spark, sf_dir, "documents").select("doc_id")
     media = synth_media(docs, "doc_id", kind="png")
     return _sorted_once(image_channel_stats(media, "doc_id"),
@@ -3418,7 +3382,6 @@ FROM px GROUP BY doc_id ORDER BY doc_id
 # compared value-for-value.
 # =====================================================================
 def q77_normalize_text(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.scrub import normalize_text
     docs = _read(spark, sf_dir, "documents")
     # explicit \uXXXX escapes, NOT raw combining characters: the
     # oracle builds the decomposed sequence with chr(769)/chr(776),
@@ -3468,7 +3431,6 @@ FROM steps ORDER BY doc_id
 # regex and RE2).
 # =====================================================================
 def q78_script_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import script_profile
     docs = _read(spark, sf_dir, "documents")
     snip = (F.when(F.col("doc_id") % 4 == 1, F.lit(" привет мир"))
             .when(F.col("doc_id") % 4 == 2, F.lit(" 你好世界"))
@@ -3520,7 +3482,6 @@ ORDER BY doc_id
 # identity); score ROUND 6 on both sides.
 # =====================================================================
 def q79_linear_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.textstats import hashed_linear_score
     docs = _read(spark, sf_dir, "documents")
     out = hashed_linear_score(docs, "doc_id", "text",
                               prefix=3, seed=0)
@@ -3564,7 +3525,6 @@ def q80_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     top = (tokens.groupBy("token").agg(F.count(F.lit(1)).alias("exact_count"))
            .orderBy(F.desc("exact_count"), "token").limit(10))
     rows = top.collect()
-    import pandas as pd
     bound = mg.error_bound
     pdf = pd.DataFrame({
         "token": [r["token"] for r in rows],
@@ -3601,8 +3561,6 @@ LIMIT 10
 # order), and the bound verdict.
 # =====================================================================
 def q81_fd_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-
     emb = _read(spark, sf_dir, "embeddings")
     fd, _ = build_sketch(emb, SketchSpec.make("fd", "embedding", l=16, d=64))
 
@@ -3673,7 +3631,6 @@ FROM embeddings
 # (zero false negatives, deterministic) and est <= exact + FPR slack.
 # =====================================================================
 def q82_containment_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.contamination import token_containment_grid
     docs = _read(spark, sf_dir, "documents")
     grid = token_containment_grid(docs, "lang", "text", error_rate=1e-4)
     return (grid.select("lang_a", "lang_b", "distinct_a", "exact_overlap",
@@ -3728,7 +3685,6 @@ def q83_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
            ).collect()[0]
     est = ams.estimate()
     ok = abs(est - row["exact_f2"]) <= ams.error_bound() * row["exact_f2"]
-    import pandas as pd
     return spark.createDataFrame(
         pd.DataFrame({"exact_f2": [int(row["exact_f2"])],
                       "distinct_tokens": [int(row["distinct_tokens"])],
@@ -3765,7 +3721,6 @@ def _member_orders(spark: SparkSession, orders: DataFrame, filt,
             yield pd.DataFrame({group_col: batch[group_col],
                                 "is_member": probe.contains_batch(keys)})
 
-    from .session import ensure_shipped
     ensure_shipped(spark)
     probed = orders.select("o_custkey", group_col).mapInPandas(
         probe_kernel, schema=f"{group_col} string, is_member boolean")
@@ -3788,7 +3743,6 @@ def _member_orders(spark: SparkSession, orders: DataFrame, filt,
 # output is exact membership-after-revocation.
 # =====================================================================
 def q84_cbf_revoked_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
     cust = _read(spark, sf_dir, "customer")
     orders = _read(spark, sf_dir, "orders")
     allowed = (cust.filter(F.col("c_mktsegment") == "AUTOMOBILE")
@@ -3834,7 +3788,6 @@ def q85_ams_join_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     bound = a.inner_product_bound(b)
     exact = (clicks.select("user_id").join(views.select("user_id"),
                                            "user_id").count())
-    import pandas as pd
     return spark.createDataFrame(
         pd.DataFrame({"exact_join_size": [int(exact)],
                       "within_bound": [bool(abs(est - exact) <= bound)]}),
@@ -3863,7 +3816,6 @@ USING (user_id)
 # window for τ.
 # =====================================================================
 def q86_priority_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sampling import priority_sample
     docs = _read(spark, sf_dir, "documents")
     s = priority_sample(docs.select("doc_id", "lang", "n_chars"),
                         "doc_id", "n_chars", k=64, seed=7)
@@ -3912,7 +3864,6 @@ ORDER BY doc_id
 # replay the identical key set.
 # =====================================================================
 def q87_bloom_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sketch.bloom import BloomFilter
 
     # one cached projection feeds all three jobs (ascii assert, exact
     # verifier, bloom build) — the parquet text decodes once.  The
@@ -3920,7 +3871,6 @@ def q87_bloom_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-footer local scan (1 partition) would serialize all three
     # jobs behind a single task — fan the CACHE out to the core count
     # (at cluster scale the scan already has enough splits: no-op)
-    from .session import ensure_parallelism
     base = ensure_parallelism(
         _read(spark, sf_dir, "documents").select("lang", "text"),
         min_partitions=spark.sparkContext.defaultParallelism).persist()
@@ -3950,7 +3900,6 @@ def q87_bloom_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         grouped = grouped_sketches(base, ["lang"], spec).collect()
     finally:
         base.unpersist()
-    import pandas as pd
     recs = []
     for r in sorted(grouped, key=lambda r: r["lang"]):
         bf = BloomFilter.from_bytes(bytes(r["sketch"]))
@@ -3993,7 +3942,6 @@ ORDER BY lang
 # =====================================================================
 def q88_stream_priority_sample(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
-    from .streaming.stateful import streaming_priority_sample
 
     # documents split into three single-file chunks (doc_id mod 3) →
     # three micro-batches
@@ -4055,8 +4003,6 @@ ORDER BY lang, doc_id
 # exactly — the count identity asserted in tests).
 # =====================================================================
 def q89_theta_difference(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     events = _read(spark, sf_dir, "events")
     clicks = events.filter(F.col("event_type") == "click") \
         .select("user_id")
@@ -4099,8 +4045,6 @@ WHERE a.user_id NOT IN
 # counters — each row is a c-bucket AMS tug-of-war).
 # =====================================================================
 def q90_countsketch_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     docs = _read(spark, sf_dir, "documents")
     cs, _ = build_sketch(docs, SketchSpec.make(
         "cs", "text", prep="tokens", r=7, c=4096, seed=42))
@@ -4145,10 +4089,6 @@ LIMIT 20
 # batch window query, which is what the oracle replays too.
 # =====================================================================
 def q91_dgim_window_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window
-
-    from .streaming.stateful import streaming_window_ones
-
     ev = _read_stream(spark, _q38_src(spark, sf_dir))
     bits = ev.select("event_type", "ts", "event_id",
                      (F.col("value") > 50.0).cast("long").alias("bit"))
@@ -4209,7 +4149,6 @@ ORDER BY event_type
 # =====================================================================
 def q92_cuckoo_revoked_filter(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
-    import numpy as np
     cust = _read(spark, sf_dir, "customer")
     orders = _read(spark, sf_dir, "orders")
     allowed = (cust.filter(F.col("c_mktsegment") == "BUILDING")
@@ -4250,8 +4189,6 @@ ORDER BY o_orderstatus
 # top-20 deltas by |Δ|, each estimate gated by the published bound.
 # =====================================================================
 def q93_countsketch_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
     docs = _read(spark, sf_dir, "documents")
     spec = dict(prep="tokens", r=7, c=4096, seed=42)
     cs_a, _ = build_sketch(docs.filter(F.col("doc_id") % 2 == 0),
@@ -4305,7 +4242,6 @@ LIMIT 20
 # WAV/BMP/PNG byte-exact, JPEG bound-gated.
 # =====================================================================
 def q94_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.multimodal import synth_media
     docs = _read(spark, sf_dir, "documents").select("doc_id")
     media = synth_media(docs, "doc_id", kind="jpeg")
 
@@ -4373,7 +4309,6 @@ _DD_QS = (0.25, 0.5, 0.75, 0.9, 0.99)
 
 
 def q95_ddsketch_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sketch.ddsketch import DDSketch
     docs = (_read(spark, sf_dir, "documents")
             .select("lang", F.length("text").alias("tlen"))
             .filter(F.col("tlen") > 0))
@@ -4450,7 +4385,6 @@ ORDER BY lang
 # splitmix64-hashed production near-dup path (q10).
 # =====================================================================
 def q96_bbit_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.dedup import bbit_minhash_corpus
     docs = _read(spark, sf_dir, "documents")
     return bbit_minhash_corpus(docs, "lang", "text", k=64, b=8)
 
@@ -4539,7 +4473,6 @@ def _sliding_hll_result(spark: SparkSession, sf_dir: str,
     frame.  ONE implementation keeps Q99_SQL = Q97_SQL a valid
     oracle — the two queries must stay in lockstep by construction,
     not by parallel editing."""
-    from .ops.sliding_hll import windows_from_frontier
 
     ev = _read(spark, sf_dir, "events")
     ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -4553,7 +4486,6 @@ def _sliding_hll_result(spark: SparkSession, sf_dir: str,
         F.countDistinct(
             F.when(ts_us >= F.lit(t), F.col("user_id")))
          .alias(f"e{i}") for i, t in enumerate(thrs)]).collect()[0]
-    import pandas as pd
     pdf = pd.DataFrame({
         "window": [w for w, _ in wins],
         "thr_us": thrs,
@@ -4569,7 +4501,6 @@ def _sliding_hll_result(spark: SparkSession, sf_dir: str,
 
 
 def q97_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sliding_hll import sliding_hll_frontier
     ev = _read(spark, sf_dir, "events")
     frontier = sliding_hll_frontier(ev, "user_id", "ts").collect()
     return _sliding_hll_result(spark, sf_dir, frontier)
@@ -4638,7 +4569,6 @@ ORDER BY x.win
 # measured exact rank error (<= 0.08), the q07/q08 discipline.
 # =====================================================================
 def q98_moments_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .sketch.moments import MomentsSketch
     docs = _read(spark, sf_dir, "documents").select("lang", "n_chars")
     g = grouped_sketches(docs, ["lang"],
                          SketchSpec.make("moments", "n_chars"))
@@ -4713,8 +4643,6 @@ ORDER BY lang
 # discipline).
 # =====================================================================
 def q99_stream_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .ops.sliding_hll import sliding_hll_raw_points
-    from .streaming.stateful import streaming_sliding_hll
 
     # events split into three single-file chunks (event_id mod 3) →
     # three micro-batches
@@ -4766,7 +4694,6 @@ def q100_decayed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         agg[r["event_type"]] = (agg.get(r["event_type"], 0)
                                 + int(r["cnt"]) * (1 << (60 - int(r["b"]))))
         tot[r["event_type"]] = tot.get(r["event_type"], 0) + int(r["cnt"])
-    import pandas as pd
     pdf = pd.DataFrame(
         [{"event_type": k,
           "decayed": agg[k] / float(1 << 60),
@@ -4829,7 +4756,6 @@ def q101_kmv_distinct_sample(spark: SparkSession,
     # VERDICT item #1).  Ranks, n_distinct and the (k-1)/u_k estimate
     # now derive from the per-group bottom-k array; results are
     # identical (same value-level oracle).
-    from .ops.sampling import kmv_bottom_k
     ev = _read(spark, sf_dir, "events")
     per = ev.select("event_type", "user_id").distinct()
     allg = (ev.select(F.lit("__all__").alias("event_type"), "user_id")
@@ -4891,236 +4817,34 @@ ORDER BY r.event_type, r.rk
 # =====================================================================
 # registry
 # =====================================================================
+_QUERY_NAME = re.compile(r"q(\d+)_\w+")
+
+
 def queries():
-    # Literal registry in ascending order (readability); the RETURN
-    # order is newest-first — the driver's CORRECTNESS artifact caps
-    # at 50 entries (round 5 recorded exactly q01-q50 of 74), so the
-    # newest, least-proven operators must sit inside the gate.  The
+    """Every module-level ``qNN_*`` function, keyed by its name: the
+    name is a query's only registration (its oracle is ``QNN_SQL`` or,
+    when built at call time, ``_qNN_sql()``)."""
+    # RETURN order is newest-first — the driver's CORRECTNESS artifact
+    # caps at 50 entries (round 5 recorded exactly q01-q50 of 74), so
+    # the newest, least-proven operators must sit inside the gate.  The
     # queries left past the cap each round are the longest-green ones
     # (q01-q35 here: driver-green since rounds 1-3), and the full
     # registry stays strict-checked at sf0.001/0.01/0.1 via
     # tools/check_correctness.py regardless of driver order.
-    ordered = {
-        "q01_pricing_summary": q01_pricing_summary,
-        "q02_bloom_semijoin": q02_bloom_semijoin,
-        "q03_contamination_report": q03_contamination_report,
-        "q04_classify_pages": q04_classify_pages,
-        "q05_hll_distinct": q05_hll_distinct,
-        "q06_cms_heavy_hitters": q06_cms_heavy_hitters,
-        "q07_tdigest_quantiles": q07_tdigest_quantiles,
-        "q08_kll_quantiles": q08_kll_quantiles,
-        "q09_exact_dedup": q09_exact_dedup,
-        "q10_minhash_neardup": q10_minhash_neardup,
-        "q11_simhash_pairs": q11_simhash_pairs,
-        "q12_ngram_jaccard": q12_ngram_jaccard,
-        "q13_embedding_topk": q13_embedding_topk,
-        "q14_lang_id": q14_lang_id,
-        "q15_quality": q15_quality,
-        "q16_token_counts": q16_token_counts,
-        "q17_doc_digests": q17_doc_digests,
-        "q18_media_metadata": q18_media_metadata,
-        "q19_frame_plan": q19_frame_plan,
-        "q20_window_topk": q20_window_topk,
-        "q21_ann_lsh": q21_ann_lsh,
-        "q22_grouped_quantiles": q22_grouped_quantiles,
-        "q23_salted_join": q23_salted_join,
-        "q24_json_props": q24_json_props,
-        "q25_rollup": q25_rollup,
-        "q26_set_ops": q26_set_ops,
-        "q27_dedup_clusters": q27_dedup_clusters,
-        "q28_stream_windowed_counts": q28_stream_windowed_counts,
-        "q29_classify_shuffle": q29_classify_shuffle,
-        "q30_revenue_by_nation": q30_revenue_by_nation,
-        "q31_priority_semijoin": q31_priority_semijoin,
-        "q32_cosine_neardup": q32_cosine_neardup,
-        "q33_ann_ivf": q33_ann_ivf,
-        "q34_bloom_prejoin": q34_bloom_prejoin,
-        "q35_cap_per_group": q35_cap_per_group,
-        "q36_deterministic_shuffle": q36_deterministic_shuffle,
-        "q37_theta_overlap": q37_theta_overlap,
-        "q38_stream_watermarked_counts": q38_stream_watermarked_counts,
-        "q39_asof_join": q39_asof_join,
-        "q40_sessionize": q40_sessionize,
-        "q41_range_join": q41_range_join,
-        "q42_stratified_sample": q42_stratified_sample,
-        "q43_hash_split": q43_hash_split,
-        "q44_repetition": q44_repetition,
-        "q45_weighted_sample": q45_weighted_sample,
-        "q46_sharded_overlap_grid": q46_sharded_overlap_grid,
-        "q47_stream_sessions": q47_stream_sessions,
-        "q48_snaptable_pruned_scan": q48_snaptable_pruned_scan,
-        "q49_bucketed_join": q49_bucketed_join,
-        "q50_bm25_topk": q50_bm25_topk,
-        "q51_stream_dedup": q51_stream_dedup,
-        "q52_incremental_sketch": q52_incremental_sketch,
-        "q53_substring_dedup": q53_substring_dedup,
-        "q54_url_canonical_dedup": q54_url_canonical_dedup,
-        "q55_line_dedup": q55_line_dedup,
-        "q56_decontaminate": q56_decontaminate,
-        "q57_warc_ingest": q57_warc_ingest,
-        "q58_semantic_dedup": q58_semantic_dedup,
-        "q59_rebalance_mixture": q59_rebalance_mixture,
-        "q60_scrub_pii": q60_scrub_pii,
-        "q61_gopher_rules": q61_gopher_rules,
-        "q62_lm_score": q62_lm_score,
-        "q63_domain_filter": q63_domain_filter,
-        "q64_perplexity_buckets": q64_perplexity_buckets,
-        "q65_chunk_windows": q65_chunk_windows,
-        "q66_pack_sequences": q66_pack_sequences,
-        "q67_dsir_weights": q67_dsir_weights,
-        "q68_dsir_select": q68_dsir_select,
-        "q69_temperature_mixture": q69_temperature_mixture,
-        "q70_incremental_dedup": q70_incremental_dedup,
-        "q71_bigram_lm_score": q71_bigram_lm_score,
-        "q72_kmeans_invariants": q72_kmeans_invariants,
-        "q73_token_entropy": q73_token_entropy,
-        "q74_snapshot_diff": q74_snapshot_diff,
-        "q75_kmeans_counts": q75_kmeans_counts,
-        "q76_png_decode": q76_png_decode,
-        "q77_normalize_text": q77_normalize_text,
-        "q78_script_profile": q78_script_profile,
-        "q79_linear_quality": q79_linear_quality,
-        "q80_mg_heavy_hitters": q80_mg_heavy_hitters,
-        "q81_fd_covariance": q81_fd_covariance,
-        "q82_containment_grid": q82_containment_grid,
-        "q83_ams_f2": q83_ams_f2,
-        "q84_cbf_revoked_filter": q84_cbf_revoked_filter,
-        "q85_ams_join_size": q85_ams_join_size,
-        "q86_priority_sample": q86_priority_sample,
-        "q87_bloom_cardinality": q87_bloom_cardinality,
-        "q88_stream_priority_sample": q88_stream_priority_sample,
-        "q89_theta_difference": q89_theta_difference,
-        "q90_countsketch_tokens": q90_countsketch_tokens,
-        "q91_dgim_window_count": q91_dgim_window_count,
-        "q92_cuckoo_revoked_filter": q92_cuckoo_revoked_filter,
-        "q93_countsketch_delta": q93_countsketch_delta,
-        "q94_jpeg_decode": q94_jpeg_decode,
-        "q95_ddsketch_quantiles": q95_ddsketch_quantiles,
-        "q96_bbit_minhash": q96_bbit_minhash,
-        "q97_sliding_hll": q97_sliding_hll,
-        "q98_moments_sketch": q98_moments_sketch,
-        "q99_stream_sliding_hll": q99_stream_sliding_hll,
-        "q100_decayed_counts": q100_decayed_counts,
-        "q101_kmv_distinct_sample": q101_kmv_distinct_sample,
-    }
-    return dict(reversed(list(ordered.items())))
+    found = [(int(m.group(1)), name, fn) for name, fn in globals().items()
+             if (m := _QUERY_NAME.fullmatch(name)) and callable(fn)]
+    return {name: fn for _n, name, fn in sorted(found, reverse=True)}
 
 
 def oracle_sql():
-    return {
-        "q01_pricing_summary": Q01_SQL,
-        "q02_bloom_semijoin": Q02_SQL,
-        "q03_contamination_report": Q03_SQL,
-        "q04_classify_pages": Q04_SQL,
-        "q05_hll_distinct": Q05_SQL,
-        "q06_cms_heavy_hitters": Q06_SQL,
-        "q07_tdigest_quantiles": Q07_SQL,
-        "q08_kll_quantiles": Q08_SQL,
-        "q09_exact_dedup": Q09_SQL,
-        "q10_minhash_neardup": Q10_SQL,
-        # q11: the query materializes its fingerprints to parquet at
-        # call time; the oracle recomputes exact all-pairs Hamming
-        # from that parquet with bit_count(xor())
-        "q11_simhash_pairs": _q11_sql(),
-        "q12_ngram_jaccard": Q12_SQL,
-        "q13_embedding_topk": Q13_SQL,
-        "q14_lang_id": Q14_SQL.format(markers=",\n         ".join(
-            _marker_sql(c, m) for c, m in
-            __import__("facs_spark.ops.textstats",
-                       fromlist=["LANG_MARKERS"]).LANG_MARKERS.items())),
-        "q15_quality": Q15_SQL,
-        "q16_token_counts": Q16_SQL,
-        "q17_doc_digests": Q17_SQL,
-        "q18_media_metadata": Q18_SQL,
-        "q19_frame_plan": Q19_SQL,
-        "q20_window_topk": Q20_SQL,
-        # q21: per-query recall-vs-exact booleans, oracle asserts TRUE
-        "q21_ann_lsh": Q21_SQL,
-        "q22_grouped_quantiles": Q22_SQL,
-        "q23_salted_join": Q23_SQL,
-        "q24_json_props": Q24_SQL,
-        "q25_rollup": Q25_SQL,
-        "q26_set_ops": Q26_SQL,
-        "q27_dedup_clusters": Q27_SQL,
-        "q28_stream_windowed_counts": Q28_SQL,
-        # same semantics as q04 by construction → same oracle
-        "q29_classify_shuffle": Q04_SQL,
-        "q30_revenue_by_nation": Q30_SQL,
-        "q31_priority_semijoin": Q31_SQL,
-        "q32_cosine_neardup": Q32_SQL,
-        "q33_ann_ivf": Q33_SQL,
-        "q34_bloom_prejoin": Q34_SQL,
-        "q35_cap_per_group": Q35_SQL,
-        "q36_deterministic_shuffle": Q36_SQL,
-        "q37_theta_overlap": Q37_SQL,
-        "q38_stream_watermarked_counts": Q38_SQL,
-        "q39_asof_join": Q39_SQL,
-        "q40_sessionize": Q40_SQL,
-        "q41_range_join": Q41_SQL,
-        "q42_stratified_sample": _q42_sql(),
-        "q43_hash_split": _q43_sql(),
-        "q44_repetition": Q44_SQL,
-        "q45_weighted_sample": Q45_SQL,
-        "q46_sharded_overlap_grid": Q46_SQL,
-        "q47_stream_sessions": Q47_SQL,
-        "q48_snaptable_pruned_scan": Q48_SQL,
-        "q49_bucketed_join": Q49_SQL,
-        "q50_bm25_topk": Q50_SQL,
-        "q51_stream_dedup": Q51_SQL,
-        "q52_incremental_sketch": Q52_SQL,
-        "q53_substring_dedup": Q53_SQL,
-        "q54_url_canonical_dedup": Q54_SQL,
-        "q55_line_dedup": Q55_SQL,
-        "q56_decontaminate": Q56_SQL,
-        "q57_warc_ingest": Q57_SQL,
-        "q58_semantic_dedup": Q58_SQL,
-        "q59_rebalance_mixture": Q59_SQL,
-        "q60_scrub_pii": _q60_sql(),
-        "q61_gopher_rules": _q61_sql(),
-        "q62_lm_score": Q62_SQL,
-        "q63_domain_filter": Q63_SQL,
-        "q64_perplexity_buckets": Q64_SQL,
-        "q65_chunk_windows": Q65_SQL,
-        "q66_pack_sequences": Q66_SQL,
-        "q67_dsir_weights": Q67_SQL,
-        "q68_dsir_select": Q68_SQL,
-        "q69_temperature_mixture": Q69_SQL,
-        "q70_incremental_dedup": Q70_SQL,
-        "q71_bigram_lm_score": Q71_SQL,
-        "q72_kmeans_invariants": Q72_SQL,
-        "q73_token_entropy": Q73_SQL,
-        "q74_snapshot_diff": Q74_SQL,
-        # q75: the query materializes its fitted centroids to parquet
-        # at call time; the oracle replays nearest-centroid assignment
-        # from those exact doubles (q11's handoff pattern)
-        "q75_kmeans_counts": _q75_sql(),
-        "q76_png_decode": Q76_SQL,
-        "q77_normalize_text": Q77_SQL,
-        "q78_script_profile": Q78_SQL,
-        "q79_linear_quality": Q79_SQL,
-        "q80_mg_heavy_hitters": Q80_SQL,
-        "q81_fd_covariance": Q81_SQL,
-        "q82_containment_grid": Q82_SQL,
-        "q83_ams_f2": Q83_SQL,
-        "q84_cbf_revoked_filter": Q84_SQL,
-        "q85_ams_join_size": Q85_SQL,
-        "q86_priority_sample": Q86_SQL,
-        "q87_bloom_cardinality": Q87_SQL,
-        "q88_stream_priority_sample": Q88_SQL,
-        "q89_theta_difference": Q89_SQL,
-        "q90_countsketch_tokens": Q90_SQL,
-        "q91_dgim_window_count": Q91_SQL,
-        "q92_cuckoo_revoked_filter": Q92_SQL,
-        "q93_countsketch_delta": Q93_SQL,
-        "q94_jpeg_decode": Q94_SQL,
-        "q95_ddsketch_quantiles": Q95_SQL,
-        "q96_bbit_minhash": Q96_SQL,
-        "q97_sliding_hll": Q97_SQL,
-        "q98_moments_sketch": Q98_SQL,
-        "q99_stream_sliding_hll": Q99_SQL,
-        "q100_decayed_counts": Q100_SQL,
-        "q101_kmv_distinct_sample": Q101_SQL,
-    }
+    """Each query's DuckDB oracle, oldest first: ``_qNN_sql()`` when
+    the text is built at call time, else ``QNN_SQL``."""
+    out = {}
+    for name in reversed(queries()):
+        nn = _QUERY_NAME.fullmatch(name).group(1)
+        build = globals().get(f"_q{nn}_sql")
+        out[name] = build() if build else globals()[f"Q{nn}_SQL"]
+    return out
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -36,6 +36,9 @@ from .sizing import BloomStat, bloom_fpr, facs_sizing, standard_sizing
 _MAGIC = b"FSBL"
 _VERSION = 1
 _STAT = struct.Struct("<QIQdIQ")  # m, k, capacity, e, k_mer, inserts
+# largest single broadcast blob: JVM byte arrays cap at 2 GB, so a
+# filter above 1 GiB ships as banks (SURVEY §4 physical notes)
+_BANK_BYTES = 1 << 30
 
 # byte-wise popcount LUT: GiB-scale vectors popcount in one fancy-index
 # + sum, no 8× unpackbits blow-up
@@ -310,7 +313,7 @@ class BloomFilter:
         return cls.from_facs_bytes(blob)
 
     # -- banked serialization ------------------------------------------
-    def split_banks(self, max_bank_bytes: int = 1 << 30) -> list[bytes]:
+    def split_banks(self, max_bank_bytes: int = _BANK_BYTES) -> list[bytes]:
         """Serialize as N blobs whose payloads each fit a broadcast cap.
 
         Oversized filters (the reference handles >4 GB files via
@@ -339,6 +342,23 @@ class BloomFilter:
         vec = np.frombuffer(b"".join(banks[1:]), dtype=np.uint8).copy()
         return cls(stat=BloomStat(m, k, cap, e), k_mer=k_mer,
                    inserts=inserts, vector=vec)
+
+    def to_payload(self, max_bank_bytes: int | None = None
+                   ) -> bytes | list[bytes]:
+        """The broadcast form: the ``to_bytes`` blob, or ``split_banks``
+        when that blob tops 1 GiB or ``max_bank_bytes`` is given (to
+        force banks in tests).  ``from_payload`` reads either form."""
+        if not max_bank_bytes:
+            blob = self.to_bytes()
+            if len(blob) <= _BANK_BYTES:
+                return blob
+        return self.split_banks(max_bank_bytes or _BANK_BYTES)
+
+    @classmethod
+    def from_payload(cls, payload: bytes | list) -> "BloomFilter":
+        if isinstance(payload, list):
+            return cls.from_banks([bytes(b) for b in payload])
+        return cls.from_bytes(bytes(payload))
 
     # -- stats -------------------------------------------------------
     @property

@@ -5,15 +5,22 @@ sf0.001 so `python -m pytest -x -q` alone verifies the contract
 (BASELINE.json input_hint).  The external harness
 (tools/check_correctness.py) runs the same comparison at sf0.01."""
 
+import inspect
 import math
+import os
+import re
+import subprocess
+import sys
 
 import duckdb
 import pandas as pd
 import pytest
 
 import __spark_entry__ as entry_mod
+from facs_spark import queries as queries_mod
 from facs_spark.session import get_spark
 
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SF = "/root/testdata/sf0.001"
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
@@ -62,6 +69,42 @@ def test_query_matches_oracle(spark, oracle_con, name):
             assert _equal(got[c].iloc[i], want[c].iloc[i]), (
                 f"{name}: column {c} row {i}: "
                 f"{got[c].iloc[i]!r} != {want[c].iloc[i]!r}")
+
+
+def test_registry_is_the_query_functions():
+    """A query is registered by its name alone: ``queries()`` holds
+    every module-level ``qNN_*`` function of ``facs_spark.queries``,
+    newest first, and each has exactly one oracle definition — a
+    ``QNN_SQL`` constant or a ``_qNN_sql()`` function (a leftover
+    template next to such a function fails here)."""
+    reg = entry_mod.queries()
+    assert len(reg) == 101
+    nums = [re.fullmatch(r"q(\d+)_\w+", name).group(1) for name in reg]
+    assert [int(n) for n in nums] == sorted(map(int, set(nums)),
+                                            reverse=True)
+    assert set(reg) == {
+        name for name, fn in inspect.getmembers(queries_mod,
+                                                inspect.isfunction)
+        if fn.__module__ == queries_mod.__name__
+        and re.fullmatch(r"q\d+_\w+", name)}
+    assert set(entry_mod.oracle_sql()) == set(reg)
+    for n in nums:
+        defs = [d for d in (f"Q{n}_SQL", f"_q{n}_sql")
+                if hasattr(queries_mod, d)]
+        assert len(defs) == 1, (n, defs)
+
+
+def test_check_correctness_runs_from_any_directory(tmp_path):
+    """tools/check_correctness.py finds the repo from its own path,
+    not from the working directory it is started in."""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "check_correctness.py"),
+         "--strict", SF, "q01_pricing_summary"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
+    assert "PASS q01_pricing_summary" in r.stdout
+    assert "failures: 0" in r.stdout
 
 
 def test_rows_only_queries_run(spark):

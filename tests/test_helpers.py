@@ -114,6 +114,26 @@ def test_split_banks_counts():
         BloomFilter.from_banks(banks[:-1])
 
 
+def test_bloom_payload_banks_above_threshold(monkeypatch):
+    """The broadcast payload is the plain blob up to the bank threshold
+    and banks strictly above it or when a bank size is given; either
+    form decodes to the same filter."""
+    from facs_spark.sketch import bloom as bloom_mod
+    bf = BloomFilter.create(capacity=10_000, error_rate=0.01, k_mer=8)
+    bf.add_batch(np.arange(640, dtype=np.uint8).reshape(-1, 8))
+    blob = bf.to_bytes()
+    assert bf.to_payload() == blob
+    assert bf.to_payload(1024) == bf.split_banks(1024)
+    monkeypatch.setattr(bloom_mod, "_BANK_BYTES", len(blob))
+    assert bf.to_payload() == blob
+    monkeypatch.setattr(bloom_mod, "_BANK_BYTES", len(blob) - 1)
+    assert bf.to_payload() == bf.split_banks(len(blob) - 1)
+    for payload in (blob, bytearray(blob), bf.to_payload(1024)):
+        rt = BloomFilter.from_payload(payload)
+        assert (rt.vector == bf.vector).all()
+        assert rt.to_bytes() == blob
+
+
 def test_sketch_roundtrip_empty_states():
     """Serialization of never-updated sketches round-trips."""
     for sk in (HyperLogLog(p=10), CountMinSketch(epsilon=0.01, delta=0.1),

@@ -100,11 +100,12 @@ def test_bloom_prejoin_string_keys(spark):
 
 
 def test_bloom_key_filter_banked(spark):
-    """The pre-join filter accepts banked blobs (the >1 GiB broadcast
-    path) and prunes identically to the single-blob form."""
+    """The pre-join filter and the flag column accept banked payloads
+    (the >1 GiB broadcast path, forced small here) and give the same
+    rows as the single-blob form."""
     import pandas as pd
 
-    from facs_spark.ops.joins import bloom_key_filter
+    from facs_spark.ops.joins import bloom_key_filter, bloom_key_flag
     from facs_spark.ops.sketch_agg import SketchSpec, build_sketch
     probe = spark.createDataFrame(pd.DataFrame({
         "k": [i % 64 for i in range(3000)], "v": list(range(3000))}))
@@ -113,11 +114,19 @@ def test_bloom_key_filter_banked(spark):
         "bloom", "k", prep="raw", capacity=3, error_rate=1e-6))
     whole = {r["v"] for r in
              bloom_key_filter(probe, "k", bloom.to_bytes()).collect()}
-    banks = bloom.split_banks(max(64, len(bloom.to_bytes()) // 3))
-    assert len(banks) >= 2, "fixture must actually bank"
+    banks = bloom.to_payload(max(1, bloom.vector.nbytes // 3))
+    assert isinstance(banks, list) and len(banks) >= 3, \
+        "fixture must split the bits over several banks"
     banked = {r["v"] for r in
               bloom_key_filter(probe, "k", banks).collect()}
     assert banked == whole and whole
+
+    def flags(payload):
+        return sorted((r["v"], r["maybe"]) for r in bloom_key_flag(
+            probe, "k", payload, flag_col="maybe").collect())
+    flagged = flags(banks)
+    assert flagged == flags(bloom.to_bytes())
+    assert {v for v, maybe in flagged if maybe} == whole
 
 
 def test_bloom_anti_join_equals_plain_anti(spark):

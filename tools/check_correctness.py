@@ -21,13 +21,15 @@ Usage: python tools/check_correctness.py [--strict] [--json PATH]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
 
 TABLES = ("region nation customer supplier part orders lineitem events "
           "documents embeddings").split()
