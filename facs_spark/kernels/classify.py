@@ -108,7 +108,7 @@ def _classify_once(texts, bloom: BloomFilter, k: int, tole_rate: float,
     q_doc, q_pos = quick_probe_positions_batch(lengths, k)
     q_hits = bloom.contains_batch(
         windows_at(buf, offsets[:-1][q_doc] + q_pos, k))
-    np.logical_or.at(escalated, q_doc, q_hits)
+    escalated = np.bincount(q_doc[q_hits], minlength=n_docs) > 0
 
     if escalated.any():
         # Phase 2: full stride-1 check, only for escalated pages.
@@ -119,15 +119,14 @@ def _classify_once(texts, bloom: BloomFilter, k: int, tole_rate: float,
         f_hits = bloom.contains_batch(
             windows_at(buf, offsets[:-1][f_doc] + f_pos, k))
         # match_time per doc
-        np.add.at(match_time, f_doc, f_hits.astype(np.int64))
+        match_time = np.bincount(f_doc[f_hits], minlength=n_docs)
         # run starts: hit with no hit at previous window of same doc
         prev_hit = np.zeros(f_hits.size, dtype=bool)
         prev_hit[1:] = f_hits[:-1]
         same_doc = np.zeros(f_hits.size, dtype=bool)
         same_doc[1:] = f_doc[1:] == f_doc[:-1]
         run_start = f_hits & ~(prev_hit & same_doc)
-        run_starts = np.zeros(n_docs, dtype=np.int64)
-        np.add.at(run_starts, f_doc, run_start.astype(np.int64))
+        run_starts = np.bincount(f_doc[run_start], minlength=n_docs)
         # conse = match_time + (k-1)·run_starts  (k at start, 1 inside)
         conse = match_time + (k - 1) * run_starts
         L = lengths

@@ -222,6 +222,15 @@ def get_spark(app_name: str = "facs_spark", cpus: int | None = None,
         # spill the window matrices to DRAM and collapse multi-core
         # scaling (measured: 32-core throughput 3.7× worse at 30k rows)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2500")
+        # Spark cuts file splits of max(openCost, (bytes + openCost ·
+        # files) / cores) bytes (capped at maxPartitionBytes), and a
+        # row group goes to the split holding its midpoint.  At the
+        # 4 MiB default a 28 MB file of eight 3.5 MB row groups splits
+        # 2/3/2/1 over 4 cores; at 1 MiB a file's last split falls
+        # short by only (cores - 1) · openCost / cores, under half such
+        # a row group, so it splits 2/2/2/2.  Files under 1 MiB still
+        # scan as one split.
+        .config("spark.sql.files.openCostInBytes", str(1 << 20))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )

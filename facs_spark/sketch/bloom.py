@@ -30,7 +30,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, unframe
-from .hashing import FACS_SEEDS, hash5_matrix
+from .hashing import FACS_SEEDS, _MASK36, hash3_lanes, pack_lanes, splitmix64
 from .sizing import BloomStat, bloom_fpr, facs_sizing, standard_sizing
 
 _MAGIC = b"FSBL"
@@ -44,6 +44,17 @@ _BANK_BYTES = 1 << 30
 # + sum, no 8× unpackbits blow-up
 _POPCOUNT = np.array([bin(i).count("1") for i in range(256)],
                      dtype=np.uint16)
+
+
+def _runs(lanes: np.ndarray, order: np.ndarray):
+    """The keys of ``lanes`` in ``order``, and where each new run of
+    equal keys starts."""
+    s = lanes.take(order, axis=1)
+    new = np.ones(s.shape[1], dtype=bool)
+    np.not_equal(s[0, 1:], s[0, :-1], out=new[1:])
+    for lane in s[1:]:
+        new[1:] |= lane[1:] != lane[:-1]
+    return s, new
 
 
 @dataclass
@@ -79,60 +90,55 @@ class BloomFilter:
         return cls(stat=fn(capacity, error_rate), k_mer=k_mer)
 
     # -- hashing -----------------------------------------------------
-    def _indices(self, keys: np.ndarray, i: int) -> np.ndarray:
+    def _bits(self, lanes: np.ndarray, width: int, i: int):
+        """Byte index and bit mask of every key's seed-``i`` bit."""
+        h = hash3_lanes(lanes, width, FACS_SEEDS[i])
+        # the reference's 36-bit hash5 mask cannot address filters
+        # beyond 2^36 bits (its own scale ceiling); huge filters use
+        # the full 64-bit hash3 so every bit stays reachable
+        if self.stat.elements <= (1 << 36):
+            h &= _MASK36
         m = np.uint64(self.stat.elements)
-        if self.stat.elements > (1 << 36):
-            # the reference's 36-bit hash5 mask cannot address filters
-            # beyond 2^36 bits (its own scale ceiling); huge filters
-            # use the full 64-bit hash3 so every bit stays reachable
-            from .hashing import hash3_matrix
-            return hash3_matrix(keys, FACS_SEEDS[i]) % m
-        return hash5_matrix(keys, FACS_SEEDS[i]) % m
+        idx = h - h // m * m  # == h % m; numpy divides by a scalar ~2x faster
+        return ((idx >> np.uint64(3)).astype(np.int64),
+                np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
+
+    @staticmethod
+    def _unique_lanes(lanes: np.ndarray):
+        """Distinct keys of a ``pack_lanes`` matrix + inverse map.
+
+        k-gram windows repeat heavily, so hashing only distinct keys
+        cuts the hash passes with identical bits.  One value sort (~2x
+        faster than an argsort) clusters the keys by the top bits of a
+        splitmix-mixed key, each key's position in the low bits; runs
+        split where the lanes differ.  A batch in which distinct keys
+        share those top bits (they could interleave and miscount
+        ``add_batch``'s novel keys) regroups by all 64 bits.
+        """
+        n_lanes, n = lanes.shape
+        if n <= 1 or n_lanes == 0:
+            return lanes, None
+        mixed = lanes[0].copy()
+        with np.errstate(over="ignore"):
+            for j in range(1, n_lanes):
+                mixed ^= lanes[j] * np.uint64(0xC2B2AE3D27D4EB4F + 2 * j - 2)
+        ck = splitmix64(mixed)
+        shift = np.uint64(n.bit_length())
+        packed = ck >> shift << shift
+        packed |= np.arange(n, dtype=np.uint64)
+        packed.sort()
+        top = packed >> shift
+        order = (packed & ((np.uint64(1) << shift) - np.uint64(1))).view(np.intp)
+        s, new = _runs(lanes, order)
+        if (new[1:] & (top[1:] == top[:-1])).any():
+            order = np.argsort(ck)
+            s, new = _runs(lanes, order)
+        inv = np.empty(n, dtype=np.int64)
+        inv[order] = np.cumsum(new) - 1
+        # flatnonzero + take: a boolean mask index is ~3x slower
+        return s.take(np.flatnonzero(new), axis=1), inv
 
     # -- update ------------------------------------------------------
-    @staticmethod
-    def _unique_rows(keys: np.ndarray):
-        """Distinct keys + inverse map.
-
-        Hashing cost scales with *distinct* windows per batch, not raw
-        windows — natural-language k-grams repeat heavily, so this cuts
-        the memory-bound hash passes by the duplication factor while
-        producing identical bits.
-        """
-        n, width = keys.shape
-        if n <= 1 or width == 0:
-            return keys, None
-        if width <= 16:
-            # fast path: pad to 16 bytes → two uint64 lanes, SORT BY A
-            # SINGLE mixed 64-bit key (grouping needs clustering, not
-            # lexicographic order), then split groups by comparing the
-            # actual lanes — a 64-bit collision can only *fragment* a
-            # duplicate group (same bits either way), never merge two
-            # distinct keys.  ~2.3× faster than lexsort, ~5× than
-            # np.unique's void-memcmp argsort on the hot k=15 case.
-            from .hashing import splitmix64
-            padded = np.zeros((n, 16), dtype=np.uint8)
-            padded[:, :width] = keys
-            u = padded.view("<u8")
-            hi, lo = u[:, 0], u[:, 1]
-            with np.errstate(over="ignore"):
-                ck = splitmix64(hi ^ (lo * np.uint64(0xC2B2AE3D27D4EB4F)))
-            order = np.argsort(ck)
-            hs, ls = hi[order], lo[order]
-            new = np.empty(n, dtype=bool)
-            new[0] = True
-            new[1:] = (hs[1:] != hs[:-1]) | (ls[1:] != ls[:-1])
-            group = np.cumsum(new) - 1
-            inv = np.empty(n, dtype=np.int64)
-            inv[order] = group
-            uniq = keys[order[new]]
-            return uniq, inv
-        void = np.ascontiguousarray(keys).view(
-            np.dtype((np.void, width))).ravel()
-        uniq_v, inv = np.unique(void, return_inverse=True)
-        uniq = uniq_v.view(np.uint8).reshape(-1, width)
-        return uniq, inv
-
     def add_batch(self, keys: np.ndarray) -> int:
         """Insert an (n, L) uint8 key matrix; returns # novel keys.
 
@@ -148,18 +154,13 @@ class BloomFilter:
         """
         if keys.shape[0] == 0:
             return 0
-        keys, _inv = self._unique_rows(keys)
-        novel = np.zeros(keys.shape[0], dtype=bool)
-        byte_idx_all = []
-        spot_all = []
-        for i in range(self.stat.ideal_hashes):
-            idx = self._indices(keys, i)
-            byte_idx = (idx >> np.uint64(3)).astype(np.int64)
-            spot = (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
+        lanes, _inv = self._unique_lanes(pack_lanes(keys))
+        bits = [self._bits(lanes, keys.shape[1], i)
+                for i in range(self.stat.ideal_hashes)]
+        novel = np.zeros(lanes.shape[1], dtype=bool)
+        for byte_idx, spot in bits:
             novel |= (self.vector[byte_idx] & spot) == 0
-            byte_idx_all.append(byte_idx)
-            spot_all.append(spot)
-        for byte_idx, spot in zip(byte_idx_all, spot_all):
+        for byte_idx, spot in bits:
             np.bitwise_or.at(self.vector, byte_idx, spot)
         n_novel = int(novel.sum())
         self.inserts += n_novel
@@ -170,56 +171,45 @@ class BloomFilter:
                        cache: dict | None = None) -> np.ndarray:
         """Boolean membership for an (n, L) uint8 key matrix.
 
-        Early-exits per seed: after each hash round only surviving
-        candidates are re-probed (the vectorized analogue of
-        ``bloom_test``'s first-unset-bit return, facs/bloom.c:146-157).
+        Each key is packed into lanes once and deduplicated; then every
+        hash round probes only the surviving candidates (the vectorized
+        analogue of ``bloom_test``'s first-unset-bit return,
+        facs/bloom.c:146-157).
 
-        ``cache``: optional cross-batch memo {key bytes: bool}.
+        ``cache``: optional cross-batch memo {(L, key lanes): bool}.
         Membership of an immutable filter is deterministic, so
         memoizing is semantics-free; web corpora repeat shingles
         (boilerplate) heavily enough that this removes most hash work.
         """
-        if cache is not None:
-            uniq, inv = self._unique_rows(keys)
-            key_bytes = [r.tobytes() for r in uniq]
-            out = np.empty(len(key_bytes), dtype=bool)
-            missing = []
-            for i, b in enumerate(key_bytes):
-                v = cache.get(b)
-                if v is None:
-                    missing.append(i)
-                else:
-                    out[i] = v
+        width = keys.shape[1]
+        uniq, inv = self._unique_lanes(pack_lanes(keys))
+        if cache is None:
+            out = self._probe(uniq, width)
+        else:
+            memo = [(width, r.tobytes()) for r in uniq.T]
+            known = [cache.get(key) for key in memo]
+            out = np.array(known, dtype=bool)  # None (unknown) -> False
+            missing = [i for i, v in enumerate(known) if v is None]
             if missing:
-                fresh = self._contains_unique(uniq[np.asarray(missing)])
-                out[np.asarray(missing)] = fresh
+                out[missing] = self._probe(uniq[:, missing], width)
             # evict AFTER this batch's answers are assembled, then
             # repopulate with the current working set
             if len(cache) > 4_000_000:  # bound worker memory
                 cache.clear()
-            for i, b in enumerate(key_bytes):
-                cache[b] = bool(out[i])
-            return out if inv is None else out[inv]
-        uniq, inv = self._unique_rows(keys)
-        out = self._contains_unique(uniq)
+            cache.update(zip(memo, out.tolist()))
         return out if inv is None else out[inv]
 
-    def _contains_unique(self, uniq: np.ndarray) -> np.ndarray:
-        n = uniq.shape[0]
-        alive = np.arange(n)
-        out = np.zeros(n, dtype=bool)
-        sub = uniq
+    def _probe(self, lanes: np.ndarray, width: int) -> np.ndarray:
+        out = np.zeros(lanes.shape[1], dtype=bool)
+        alive = np.arange(lanes.shape[1])
         for i in range(self.stat.ideal_hashes):
-            idx = self._indices(sub, i)
-            byte_idx = (idx >> np.uint64(3)).astype(np.int64)
-            spot = (np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
-            hit = (self.vector[byte_idx] & spot) != 0
+            byte_idx, spot = self._bits(lanes, width, i)
+            hit = np.flatnonzero(self.vector[byte_idx] & spot)
             alive = alive[hit]
             if alive.size == 0:
-                break
-            sub = uniq[alive]
-        else:
-            out[alive] = True
+                return out
+            lanes = lanes.take(hit, axis=1)
+        out[alive] = True
         return out
 
     # -- merge -------------------------------------------------------

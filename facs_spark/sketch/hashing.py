@@ -25,6 +25,7 @@ import numpy as np
 U64 = np.uint64
 _MASK36 = np.uint64(0xFFFFFFFFF)  # hash5 36-bit mask (facs/lookup8.c:552)
 _GOLDEN = np.uint64(0x9E3779B97F4A7C13)  # golden ratio init for c
+_BLOCK = 1 << 15  # keys per hash block: ~256 KiB per uint64 temporary
 
 # The reference's 20 salt seeds (facs/bloom.c:25); index i = hash i.
 FACS_SEEDS: tuple[int, ...] = (
@@ -53,66 +54,73 @@ def _mix64(a: np.ndarray, b: np.ndarray, c: np.ndarray):
     return a, b, c
 
 
-def _le64(block: np.ndarray) -> np.ndarray:
-    """Little-endian pack of an (n, 8) uint8 block into uint64 lanes."""
-    return np.ascontiguousarray(block).view("<u8").ravel().astype(U64, copy=False)
+def pack_lanes(keys: np.ndarray) -> np.ndarray:
+    """Pack an (n, L) uint8 key matrix once into little-endian uint64
+    lanes: row j of the ``(ceil(L/8), n)`` result holds key bytes
+    8j..8j+7, zero-padded past L (the lookup8 tail's zero fill).
+
+    Each lane is one strided unaligned 8-byte read per key.  A partial
+    last lane reads the key's final 8 bytes and shifts the overlap out,
+    so no read leaves its key's row (nor a buffer that ends at the last
+    key); only keys under 8 bytes are copied into a zero pad.
+    """
+    n, length = keys.shape
+    if length < 8:  # no 8-byte read fits inside a key: pad a copy
+        pad = np.zeros((n, 8), dtype=np.uint8)
+        pad[:, :length] = keys
+        return np.ascontiguousarray(pad.view("<u8").T[:-(-length // 8)])
+    lanes = np.empty((-(-length // 8), n), dtype=U64)
+    if keys.strides[1] != 1:
+        keys = np.ascontiguousarray(keys)
+    for j in range(lanes.shape[0]):
+        lo = min(8 * j, length - 8)
+        np.right_shift(keys[:, lo:lo + 8].view("<u8")[:, 0],
+                       U64(8 * (8 * j - lo)), out=lanes[j])
+    return lanes
 
 
-def _le64_pad(block: np.ndarray) -> np.ndarray:
-    """Little-endian pack of an (n, <8) uint8 block, zero-padded."""
-    n, w = block.shape
-    padded = np.zeros((n, 8), dtype=np.uint8)
-    padded[:, :w] = block
-    return padded.view("<u8").ravel()
+def hash3_lanes(lanes: np.ndarray, length: int,
+                level: int | np.ndarray) -> np.ndarray:
+    """lookup8 ``hash3`` over ``pack_lanes`` output for keys of
+    ``length`` bytes; ``level`` is the salt seed (scalar, or per-key
+    uint64 array).  Hashing the same keys under k seeds packs them
+    once, not k times.  Keys go through in blocks of ``_BLOCK`` so the
+    mix's ~50 temporaries stay cache-resident."""
+    n = lanes.shape[1]
+    level = np.broadcast_to(np.asarray(level, dtype=U64), (n,))
+    out = np.empty(n, dtype=U64)
+    full, rem = length // 24 * 3, length % 24  # 24-byte blocks, tail
+    with np.errstate(over="ignore"):
+        for s in range(0, n, _BLOCK):
+            blk = lanes[:, s:s + _BLOCK]
+            a = level[s:s + _BLOCK].astype(U64)  # a copy: mixed in place
+            b = a.copy()
+            c = np.full(blk.shape[1], _GOLDEN, dtype=U64)
+            for j in range(0, full, 3):
+                a += blk[j]
+                b += blk[j + 1]
+                c += blk[j + 2]
+                a, b, c = _mix64(a, b, c)
+            c += U64(length)
+            # The 23-case tail switch adds tail bytes 0..7 to a, 8..15
+            # to b and 16..22 to c<<8 (c's low byte holds the length):
+            # exactly the zero-padded tail lanes.
+            if rem:
+                a += blk[full]
+            if rem > 8:
+                b += blk[full + 1]
+            if rem > 16:
+                c += blk[full + 2] << U64(8)
+            out[s:s + _BLOCK] = _mix64(a, b, c)[2]
+    return out
 
 
 def hash3_matrix(keys: np.ndarray, level: int | np.ndarray) -> np.ndarray:
-    """Vectorized lookup8 ``hash3`` over an (n, L) uint8 key matrix.
-
-    Every row is one fixed-length key (e.g. one k-gram window); the
-    whole batch is hashed in ~L/8 vector ops.  ``level`` is the salt
-    seed (scalar, or per-row uint64 array).
-    """
+    """Vectorized lookup8 ``hash3`` over an (n, L) uint8 key matrix:
+    every row is one fixed-length key (e.g. one k-gram window)."""
     if keys.ndim != 2:
         raise ValueError("keys must be (n, L) uint8")
-    n, length = keys.shape
-    with np.errstate(over="ignore"):
-        a = np.full(n, level, dtype=U64) if np.isscalar(level) else level.astype(U64).copy()
-        b = a.copy()
-        c = np.full(n, _GOLDEN, dtype=U64)
-        pos, rem = 0, length
-        while rem >= 24:
-            a += _le64(keys[:, pos : pos + 8])
-            b += _le64(keys[:, pos + 8 : pos + 16])
-            c += _le64(keys[:, pos + 16 : pos + 24])
-            a, b, c = _mix64(a, b, c)
-            pos += 24
-            rem -= 24
-        c += U64(length)
-        # Tail switch fall-through, vectorized: the 23-case switch adds
-        # tail bytes 0..7 to a, 8..15 to b, 16..22 to c<<8 — i.e. one
-        # little-endian pack per lane (c's low byte reserved for the
-        # length).  Zero-pad each lane to 8 bytes and pack once.
-        if rem:
-            tail = keys[:, pos:]
-            if rem >= 8:
-                a += _le64(tail[:, 0:8])
-            else:
-                a += _le64_pad(tail[:, 0:rem])
-            if rem > 8:
-                if rem >= 16:
-                    b += _le64(tail[:, 8:16])
-                else:
-                    b += _le64_pad(tail[:, 8:rem])
-            if rem > 16:
-                c += _le64_pad(tail[:, 16:rem]) << U64(8)
-        a, b, c = _mix64(a, b, c)
-    return c
-
-
-def hash5_matrix(keys: np.ndarray, seed: int) -> np.ndarray:
-    """facs ``hash5``: hash3 masked to 36 bits (facs/lookup8.c:548-554)."""
-    return hash3_matrix(keys, seed) & _MASK36
+    return hash3_lanes(pack_lanes(keys), keys.shape[1], level)
 
 
 def splitmix64(x: np.ndarray) -> np.ndarray:

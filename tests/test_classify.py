@@ -129,6 +129,44 @@ def test_classify_matches_sequential_oracle():
         assert abs(float(res.score[i]) - want_score) < 1e-12, f"doc {i}"
 
 
+def test_classify_edge_pages_match_sequential_oracle():
+    """NULL, empty, shorter-than-k, exactly-k and k+1 pages, windows
+    that straddle astral-plane and combining characters, and a last
+    window that ends at the end of the batch's byte buffer."""
+    k, tole = 8, 0.3
+    ref = ("the quick brown fox \U0001F600 jumps; cafe\u0301 na\u00efve "
+           "\U0001D11E\U0001D11E over the lazy dog \u1100\u1161 "
+           "\U0001F600\u0301\U0001F600 end of the reference text")
+    member = exact_member_set([ref], k)
+    bf = BloomFilter.create(capacity=len(member) + 1, error_rate=1e-9,
+                            k_mer=k)
+    bf.add_batch(shingle_batch([ref], k).windows)
+    pages = [
+        None, "", "the qui", "quick br", "quick bro",
+        "QUICK BROWN FOX \U0001F600 JUMPS",                # case + astral
+        ref[18:60], ref[40:] + " zulu yankee",          # straddling starts
+        "\U0001F600" * 9 + "e\u0301" * 7,                 # multi-byte clean
+        "zulu \U0001D11E\U0001D11E over the lazy",        # k+1-ish overlap
+        "xray " * 5 + ref[-30:],                        # ends on a member
+    ]
+    # Python's unicode lower() equals the kernel's byte-wise ASCII
+    # lowering on every text here, so the oracle's member set applies
+    for t in [ref] + pages:
+        t = t or ""
+        assert t.lower().encode() == bytes(
+            c + 32 if 65 <= c <= 90 else c for c in t.encode())
+    res = classify_batch(pages, bf, k, tole)
+    assert res.lengths.tolist() == [len((t or "").encode()) for t in pages]
+    for i, t in enumerate(pages):
+        want_c, want_mt, want_score = sequential_oracle(t or "", member, k,
+                                                        tole)
+        assert bool(res.contaminated[i]) == want_c, f"page {i}"
+        assert int(res.match_time[i]) == want_mt, f"page {i}"
+        assert abs(float(res.score[i]) - want_score) < 1e-12, f"page {i}"
+    assert res.contaminated[-1] and res.contaminated[3]
+    assert not res.escalated[:3].any()
+
+
 def test_classify_case_insensitive():
     """Case variants classify identically (facs/utils/helpers.py:28-33
     lowercase/mixedcase fixtures; normalization facs/bloom.c:111-135)."""

@@ -3,10 +3,13 @@
 import numpy as np
 import pytest
 
-from facs_spark.sketch.hashing import (FACS_SEEDS, hash3_matrix,
-                                       hash5_matrix, hash_bytes_batch,
+from numpy.lib.stride_tricks import sliding_window_view
+
+from facs_spark.sketch import BloomFilter
+from facs_spark.sketch.hashing import (FACS_SEEDS, hash3_lanes, hash3_matrix,
+                                       hash_bytes_batch,
                                        hash_strings_batch, int64_key_matrix,
-                                       splitmix64)
+                                       pack_lanes, splitmix64)
 
 rng = np.random.default_rng(42)
 
@@ -65,6 +68,38 @@ def test_hash3_matrix_matches_scalar(length):
                 f"mismatch at row {i}, len {length}, seed {seed}")
 
 
+@pytest.mark.parametrize("length", range(41))
+def test_hash3_lanes_matches_scalar(length):
+    """The lane hash over ``pack_lanes`` equals the scalar port for
+    every key length 0..40: full 24-byte blocks, every tail case, and
+    partial last lanes.  The keys are a view of a buffer that ends
+    exactly at the last key, so a lane read past a key's end would
+    either fail or fold foreign bytes into the hash."""
+    n = 9
+    buf = rng.integers(0, 256, size=n * length, dtype=np.uint8).tobytes()
+    keys = np.frombuffer(buf, dtype=np.uint8).reshape(n, length)
+    lanes = pack_lanes(keys)
+    assert lanes.shape == (-(-length // 8), n)
+    for seed in (0, FACS_SEEDS[7]):
+        vec = hash3_lanes(lanes, length, seed)
+        for i in range(n):
+            assert int(vec[i]) == hash3_scalar(buf[i * length:(i + 1) * length],
+                                               seed), (length, i, seed)
+
+
+def test_hash3_matrix_on_overlapping_windows_and_per_key_seeds():
+    """A sliding-window view (row stride 1, every lane read unaligned
+    and overlapping the next key) and a per-key seed array hash like
+    the scalar port."""
+    buf = rng.integers(0, 256, size=60, dtype=np.uint8)
+    wins = sliding_window_view(buf, 15)
+    seeds = np.arange(wins.shape[0], dtype=np.uint64) * np.uint64(977)
+    vec = hash3_matrix(wins, seeds)
+    for i in range(wins.shape[0]):
+        assert int(vec[i]) == hash3_scalar(buf[i:i + 15].tobytes(),
+                                           int(seeds[i]))
+
+
 def test_hash3_empty_key():
     out = hash3_matrix(np.empty((3, 0), dtype=np.uint8), 7)
     assert int(out[0]) == hash3_scalar(b"", 7)
@@ -72,10 +107,18 @@ def test_hash3_empty_key():
 
 
 def test_hash5_mask_36_bits():
+    """facs ``hash5`` is ``hash3`` masked to 36 bits
+    (facs/lookup8.c:548-554); a Bloom filter of up to 2^36 bits sets
+    bit ``hash5(key, seed_i) % m`` for seed i."""
     keys = rng.integers(0, 256, size=(100, 15), dtype=np.uint8)
-    out = hash5_matrix(keys, FACS_SEEDS[3])
-    assert (out <= 0xFFFFFFFFF).all()
-    assert int(out[0]) == (hash3_scalar(keys[0].tobytes(), FACS_SEEDS[3]) & 0xFFFFFFFFF)
+    bf = BloomFilter.create(capacity=1000, k_mer=15)
+    m = bf.stat.elements
+    byte_idx, spot = bf._bits(pack_lanes(keys), 15, 3)
+    for i in range(len(keys)):
+        h = hash3_scalar(keys[i].tobytes(), FACS_SEEDS[3])
+        assert h >> 36  # the mask changes this hash
+        p = (h & 0xFFFFFFFFF) % m
+        assert (int(byte_idx[i]), int(spot[i])) == (p >> 3, 1 << (p & 7))
 
 
 def test_hash_bytes_batch_groups_by_length():

@@ -12,6 +12,8 @@ from facs_spark.sketch import (AmsF2, BloomFilter, CountingBloom,
                                HyperLogLog, KLL, TDigest, facs_sizing,
                                find_close_prime, is_prime, sketch_from_bytes,
                                standard_sizing)
+from facs_spark.sketch.hashing import FACS_SEEDS, splitmix64
+from test_hashing import hash3_scalar
 
 rng = np.random.default_rng(7)
 
@@ -73,6 +75,116 @@ def test_bloom_inserts_counts_novel_only():
     assert first > 0
     bf.add_batch(keys)  # re-adding: nothing novel
     assert bf.inserts == first
+
+
+class _NaiveBloom:
+    """One key at a time, as facs does: bit i of a key is
+    ``hash5(key, seed_i) % m`` (the full 64-bit hash3 above 2^36 bits);
+    a key is novel iff one of its bits was unset before the batch."""
+
+    def __init__(self, bf: BloomFilter):
+        self.stat = bf.stat
+        self.bits = bytearray(bf.vector.nbytes)
+        self.inserts = 0
+
+    def positions(self, key: bytes) -> list[int]:
+        mask = (1 << 36) - 1 if self.stat.elements <= 1 << 36 else (1 << 64) - 1
+        return [(hash3_scalar(key, FACS_SEEDS[i]) & mask) % self.stat.elements
+                for i in range(self.stat.ideal_hashes)]
+
+    def test(self, bits, key: bytes) -> bool:
+        return all(bits[p >> 3] >> (p & 7) & 1 for p in self.positions(key))
+
+    def add_batch(self, keys: list[bytes]) -> None:
+        before = bytes(self.bits)
+        self.inserts += sum(not self.test(before, k) for k in set(keys))
+        for key in keys:
+            for p in self.positions(key):
+                self.bits[p >> 3] |= 1 << (p & 7)
+
+
+def _exact_matrix(rows: list[bytes], width: int) -> np.ndarray:
+    """An (n, width) key matrix over a buffer that ends at its last key."""
+    return np.frombuffer(b"".join(rows), dtype=np.uint8).reshape(-1, width)
+
+
+@pytest.mark.parametrize("width", [1, 7, 8, 9, 15, 16, 17, 23, 24, 31])
+def test_bloom_add_and_contains_match_naive_per_key(width):
+    r = np.random.default_rng(width)
+    # a 3-letter alphabet at small widths and repeated rows at every
+    # width, so batches hold duplicates, as k-gram windows do
+    pool = [bytes(k) for k in r.integers(97, 100 if width < 9 else 123,
+                                         size=(150, width), dtype=np.uint8)]
+    batch_a = [pool[i] for i in r.integers(0, 100, 160)]
+    batch_b = [pool[i] for i in r.integers(50, 150, 160)]
+    probes = pool + [bytes(k) for k in r.integers(97, 123, size=(150, width),
+                                                  dtype=np.uint8)]
+    bf = BloomFilter.create(capacity=120, error_rate=0.05, k_mer=width)
+    naive = _NaiveBloom(bf)
+    for batch in (batch_a, batch_b, batch_a):
+        novel = bf.add_batch(_exact_matrix(batch, width))
+        before = naive.inserts
+        naive.add_batch(batch)
+        assert novel == naive.inserts - before
+        assert bf.inserts == naive.inserts
+        assert bf.vector.tobytes() == bytes(naive.bits)
+    got = bf.contains_batch(_exact_matrix(probes, width))
+    assert got.tolist() == [naive.test(naive.bits, k) for k in probes]
+    members = set(batch_a) | set(batch_b)
+    assert all(g for g, k in zip(got, probes) if k in members)
+    assert not got.all()
+
+
+def _unsplitmix(z: int) -> int:
+    """Inverse of ``splitmix64`` (each step is a bijection on u64)."""
+    M = (1 << 64) - 1
+
+    def unxorshift(y, s):
+        x = y
+        for _ in range(64 // s):
+            x = y ^ (x >> s)
+        return x
+
+    z = unxorshift(z, 31)
+    z = z * pow(0x94D049BB133111EB, -1, 1 << 64) & M
+    z = unxorshift(z, 27)
+    z = z * pow(0xBF58476D1CE4E5B9, -1, 1 << 64) & M
+    z = unxorshift(z, 30)
+    return (z - 0x9E3779B97F4A7C15) & M
+
+
+def test_bloom_dedup_regroups_keys_sharing_sort_bits():
+    """Two distinct 8-byte keys whose mixed sort keys differ only in
+    the lowest bit share every bit the dedup's value sort keeps, so
+    they interleave by position; the batch must still count 2 novel
+    keys and set the bits a per-key build sets."""
+    z = 0x0123456789ABCDE0
+    x, y = _unsplitmix(z), _unsplitmix(z | 1)
+    assert int(splitmix64(np.array([x], dtype=np.uint64))[0]) == z
+    kx, ky = x.to_bytes(8, "little"), y.to_bytes(8, "little")
+    keys = [kx, ky, kx, ky, kx]
+    bf = BloomFilter.create(capacity=100, error_rate=0.01, k_mer=8)
+    naive = _NaiveBloom(bf)
+    assert bf.add_batch(_exact_matrix(keys, 8)) == 2
+    naive.add_batch(keys)
+    assert bf.vector.tobytes() == bytes(naive.bits)
+    assert bf.contains_batch(_exact_matrix(keys, 8)).all()
+
+
+def test_bloom_contains_cache_matches_uncached():
+    """The cross-batch memo keys on width too: b"abcdefghi" and
+    b"abcdefghi\x00" pack to the same lanes but are different keys."""
+    bf = BloomFilter.create(capacity=200, error_rate=0.05)
+    a, b = _keys(300, 9, seed=11), _keys(300, 10, seed=12)
+    bf.add_batch(a[:100])
+    bf.add_batch(b[:100])
+    bf.add_batch(_exact_matrix([b"abcdefghi"], 9))
+    cache = {}
+    for keys in (a, b, a, _exact_matrix([b"abcdefghi"], 9),
+                 _exact_matrix([b"abcdefghi\x00"], 10), b):
+        assert (bf.contains_batch(keys, cache=cache)
+                == bf.contains_batch(keys)).all()
+    assert not bf.contains_batch(_exact_matrix([b"abcdefghi\x00"], 10))[0]
 
 
 def test_bloom_merge_equals_single_build():
