@@ -62,7 +62,6 @@ class ClassifyResult:
 
 
 def classify_batch(texts, bloom: BloomFilter, k: int, tole_rate: float,
-                   lowercase: bool = True,
                    canonicalize=None) -> ClassifyResult:
     """Classify a batch of page texts against a broadcast Bloom filter.
 
@@ -70,13 +69,13 @@ def classify_batch(texts, bloom: BloomFilter, k: int, tole_rate: float,
     (the reverse-complement analogue); pages still clean after the
     forward pass are re-checked in canonicalized space.
     """
-    res = _classify_once(texts, bloom, k, tole_rate, lowercase)
+    res = _classify_once(texts, bloom, k, tole_rate)
     if canonicalize is not None:
         clean = ~res.contaminated
         if clean.any():
             texts_arr = np.asarray(texts, dtype=object)
             res2 = _classify_once(canonicalize(texts_arr[clean]), bloom, k,
-                                  tole_rate, lowercase)
+                                  tole_rate)
             # merge: a clean page flips if its canonical form scores;
             # per-page score is the best of the two passes (the
             # reference returns the passing check's result), match_time
@@ -89,12 +88,12 @@ def classify_batch(texts, bloom: BloomFilter, k: int, tole_rate: float,
     return res
 
 
-def _classify_once(texts, bloom: BloomFilter, k: int, tole_rate: float,
-                   lowercase: bool) -> ClassifyResult:
+def _classify_once(texts, bloom: BloomFilter, k: int,
+                   tole_rate: float) -> ClassifyResult:
     # Lazy materialization, mirroring the reference's two-phase scan:
     # only stride-k probe windows are ever built for clean pages; the
     # full stride-1 window set is built ONLY for escalated pages.
-    buf, offsets, lengths = encode_batch(texts, lowercase=lowercase)
+    buf, offsets, lengths = encode_batch(texts)
     n_docs = lengths.size
     contaminated = np.zeros(n_docs, dtype=bool)
     score = np.zeros(n_docs, dtype=np.float64)

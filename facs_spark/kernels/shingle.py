@@ -36,7 +36,7 @@ class ShingleBatch:
     doc_offsets: np.ndarray  # start offset of each doc in the buffer
 
 
-def encode_batch(texts, lowercase: bool = True) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+def encode_batch(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Normalize + UTF-8 encode a batch into (buffer, offsets, lengths).
 
     Lowercasing is ASCII-only, applied as one vectorized pass over the
@@ -51,20 +51,20 @@ def encode_batch(texts, lowercase: bool = True) -> tuple[np.ndarray, np.ndarray,
     # bytearray join → writable buffer in ONE allocation (np.frombuffer
     # over bytes would be read-only and force a second full copy)
     buf = np.frombuffer(bytearray().join(enc), dtype=np.uint8)
-    if lowercase and buf.size:
+    if buf.size:
         upper = (buf >= 65) & (buf <= 90)  # 'A'..'Z'
         buf[upper] += 32
     return buf, offsets, lengths
 
 
-def shingle_batch(texts, k: int, lowercase: bool = True) -> ShingleBatch:
+def shingle_batch(texts, k: int) -> ShingleBatch:
     """Extract every stride-1 k-gram window from a batch of texts.
 
     Documents shorter than k contribute no windows (the reference
     would read out of bounds there — ``facs/tool.c:70-76``; we define
     short docs as windowless, noted in SURVEY §7).
     """
-    buf, offsets, lengths = encode_batch(texts, lowercase=lowercase)
+    buf, offsets, lengths = encode_batch(texts)
     n_docs = len(lengths)
     n_wins_per_doc = np.maximum(lengths - k + 1, 0)
     total = int(n_wins_per_doc.sum())

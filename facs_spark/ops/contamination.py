@@ -11,10 +11,12 @@
   §2.5): the filter bit-array ships once per executor via
   ``SparkContext.broadcast`` (the small side; no shuffle of pages),
   and the two-phase quick/full kernel runs per Arrow batch.
-* ``contamination_report`` — the reference's report row
-  (facs/query.c:468-511): counters via one partial+final aggregation
-  (replacing ``omp atomic`` + MPI gather), derived stats incl. the
-  A&S-erf p_value.
+  ``classify_multi`` runs the same kernel over N filters;
+  ``classify_pages`` is its N=1 case.
+* ``contamination_counters`` — the report's four counters via one
+  partial+final aggregation (replacing ``omp atomic`` + MPI gather);
+  ``api._report_json`` derives the reference's report row from them
+  (facs/query.c:468-511), incl. the A&S-erf p_value.
 * ``remove_split`` — classify once, split clean/contam by the cached
   predicate (facs/remove.c semantics, minus the omp-critical append
   bottleneck).
@@ -22,13 +24,15 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.classify import CANONICALIZERS, classify_batch
+from ..kernels.shingle import shingle_batch
 from ..session import ensure_parallelism, ensure_shipped
-from ..sketch import BloomFilter, mco_suggestion, prob_suggestion
-from ..sketch.prob import cdf, get_mu, get_sigma
+from ..sketch import BloomFilter, mco_suggestion
+from ..sketch.hashing import hash3_matrix
 from .sketch_agg import SketchSpec, build_sketch
 
 CLASSIFY_COLS = ("contaminated boolean, match_score double, match_time long, "
@@ -65,27 +69,60 @@ def build_reference_bloom(ref_df: DataFrame, text_col: str = "text",
 _KERNEL_BATCH = 2500  # cache-resident slice; see session.py batch note
 
 
-def _classify_kernel(bc_blob, passthrough: tuple[str, ...], text_col: str,
-                     k: int, tole_rate: float,
-                     canonicalize: str | None = None):
+def _classify_kernel(bc_blobs, tags: tuple[dict, ...],
+                     toles: tuple[float, ...],
+                     passthrough: tuple[str, ...], text_col: str,
+                     canonicalize: str | None):
+    """Each cache-resident slice is probed against every broadcast
+    filter in turn — facs's multi-filter screen runs ``query()`` once
+    per filter (facs/file_dir.c:104-129).  Filter i uses its own k_mer
+    and ``toles[i]``; its rows carry ``tags[i]`` as constant columns."""
     canon_fn = CANONICALIZERS[canonicalize] if canonicalize else None
 
     def run(iterator):
-        bloom = BloomFilter.from_payload(bc_blob.value)
+        blooms = [BloomFilter.from_payload(b) for b in bc_blobs.value]
         for batch in iterator:
             for lo in range(0, len(batch), _KERNEL_BATCH):
                 sub = batch.iloc[lo:lo + _KERNEL_BATCH]
-                res = classify_batch(sub[text_col].tolist(), bloom, k,
-                                     tole_rate, canonicalize=canon_fn)
-                out = {c: sub[c] for c in passthrough}
-                out["contaminated"] = res.contaminated
-                out["match_score"] = res.score
-                out["match_time"] = res.match_time
-                out["text_len"] = res.lengths
-                out["escalated"] = res.escalated
-                yield pd.DataFrame(out)
+                texts = sub[text_col].tolist()
+                for bloom, tole, tag in zip(blooms, toles, tags):
+                    res = classify_batch(texts, bloom, bloom.k_mer or 15,
+                                         tole, canonicalize=canon_fn)
+                    out = {c: sub[c] for c in passthrough}
+                    out.update(tag)
+                    out["contaminated"] = res.contaminated
+                    out["match_score"] = res.score
+                    out["match_time"] = res.match_time
+                    out["text_len"] = res.lengths
+                    out["escalated"] = res.escalated
+                    yield pd.DataFrame(out)
 
     return run
+
+
+def _classify_plan(df: DataFrame, blooms: list[BloomFilter],
+                   tags: tuple[dict, ...], tag_fields: tuple[str, ...],
+                   text_col: str, passthrough: tuple[str, ...],
+                   tole_rate: float | None, canonicalize: str | None,
+                   max_bank_bytes: int | None) -> DataFrame:
+    """One mapInPandas over ``df`` probing every filter in ``blooms``;
+    ``tag_fields`` are the schema fields of the ``tags`` columns."""
+    spark = df.sparkSession
+    ensure_shipped(spark)
+    toles = tuple((mco_suggestion(b.k_mer or 15)
+                   if tole_rate is None else tole_rate) for b in blooms)
+    # any filter whose blob tops 1 GiB ships as bank slices (JVM byte
+    # arrays cap at 2 GB); the list broadcasts once per executor
+    bc = spark.sparkContext.broadcast(
+        [b.to_payload(max_bank_bytes) for b in blooms])
+    cols = tuple(passthrough)
+    sel = ensure_parallelism(df.select(*dict.fromkeys(cols + (text_col,))))
+    dtypes = {f.name: f.dataType.simpleString() for f in sel.schema.fields}
+    schema = ", ".join([f"{c} {dtypes[c]}" for c in cols]
+                       + list(tag_fields) + [CLASSIFY_COLS])
+    return sel.mapInPandas(
+        _classify_kernel(bc, tags, toles, cols, text_col, canonicalize),
+        schema=schema)
 
 
 def classify_pages(df: DataFrame, bloom: BloomFilter,
@@ -96,30 +133,18 @@ def classify_pages(df: DataFrame, bloom: BloomFilter,
                    seed: int = 42,
                    canonicalize: str | None = None,
                    max_bank_bytes: int | None = None) -> DataFrame:
-    """Classify pages against a broadcast Bloom filter.
+    """Classify pages against a broadcast Bloom filter: the one-filter
+    case of ``classify_multi``, with no ``filter_name`` column.
 
     ``sample_fraction`` is the reference's ``-s`` Bernoulli sampling
     (facs/tool.c:273-297), expressed as seeded ``df.sample`` so it is
     pushed below the kernel (exact-fraction, an upgrade over the
     reference's 0.1-granularity ``rand()%10``).
     """
-    spark = df.sparkSession
-    ensure_shipped(spark)
-    k = bloom.k_mer or 15
-    tole = mco_suggestion(k) if tole_rate is None else tole_rate
     if sample_fraction is not None and sample_fraction < 1.0:
         df = df.sample(fraction=sample_fraction, seed=seed)
-    bc = spark.sparkContext.broadcast(bloom.to_payload(max_bank_bytes))
-    cols = tuple(passthrough)
-    select_cols = list(dict.fromkeys(cols + (text_col,)))
-    sel = ensure_parallelism(df.select(*select_cols))
-    dtypes = {f.name: f.dataType.simpleString() for f in sel.schema.fields}
-    pass_schema = ", ".join(f"{c} {dtypes[c]}" for c in cols)
-    schema = (pass_schema + ", " if pass_schema else "") + CLASSIFY_COLS
-    return sel.mapInPandas(
-        _classify_kernel(bc, cols, text_col, k, tole,
-                         canonicalize=canonicalize),
-        schema=schema)
+    return _classify_plan(df, [bloom], ({},), (), text_col, passthrough,
+                          tole_rate, canonicalize, max_bank_bytes)
 
 
 def contamination_counters(classified: DataFrame) -> DataFrame:
@@ -131,32 +156,6 @@ def contamination_counters(classified: DataFrame) -> DataFrame:
         F.sum("match_time").alias("total_hits"),
         F.sum("text_len").alias("all_k"),
     )
-
-
-def contamination_report(classified: DataFrame, k: int,
-                         sample_name: str = "sample",
-                         filter_name: str = "reference") -> DataFrame:
-    """One-row report matching facs/query.c:468-511 fields."""
-    spark = classified.sparkSession
-    row = contamination_counters(classified).collect()[0]
-    total = int(row["total_read_count"] or 0)
-    contam = int(row["contaminated_reads"] or 0)
-    hits = int(row["total_hits"] or 0)
-    all_k = int(row["all_k"] or 0)
-    p = prob_suggestion(k)
-    rate = contam / total if total else 0.0
-    p_value = float(cdf(hits, get_mu(all_k, p), get_sigma(all_k, p))) if all_k else 0.0
-    pdf_row = pd.DataFrame([{
-        "sample": sample_name,
-        "bloom_filter": filter_name,
-        "total_read_count": total,
-        "contaminated_reads": contam,
-        "total_hits": hits,
-        "contamination_rate": rate,
-        "p_value": p_value,
-        "k_mer": k,
-    }])
-    return spark.createDataFrame(pdf_row)
 
 
 def remove_split(df: DataFrame, bloom: BloomFilter, text_col: str = "text",
@@ -175,6 +174,15 @@ def remove_split(df: DataFrame, bloom: BloomFilter, text_col: str = "text",
     clean = classified.filter(~F.col("contaminated"))
     contam = classified.filter(F.col("contaminated"))
     return clean, contam
+
+
+def _gram_keys(texts, k: int):
+    """(shingles, int64 key per stride-1 k-gram window) — hash lane 0
+    shifted right once so every key fits a signed Spark long."""
+    sb = shingle_batch(texts, k)
+    if not sb.windows.shape[0]:
+        return sb, np.zeros(0, dtype=np.int64)
+    return sb, (hash3_matrix(sb.windows, 0) >> np.uint64(1)).astype(np.int64)
 
 
 def classify_pages_shuffle(df: DataFrame, ref_df: DataFrame,
@@ -204,35 +212,17 @@ def classify_pages_shuffle(df: DataFrame, ref_df: DataFrame,
     ensure_shipped(spark)
 
     def ref_kernel(iterator):
-        import numpy as np
-
-        from ..kernels.shingle import shingle_batch
-        from ..sketch.hashing import hash3_matrix
         for batch in iterator:
-            sb = shingle_batch(batch[text_col].tolist(), k)
-            if sb.windows.shape[0]:
-                h = (np.unique(hash3_matrix(sb.windows, 0))
-                     >> np.uint64(1)).astype(np.int64)
-            else:
-                h = np.zeros(0, dtype=np.int64)
-            yield pd.DataFrame({"gram": h})
+            _sb, grams = _gram_keys(batch[text_col].tolist(), k)
+            yield pd.DataFrame({"gram": np.unique(grams)})
 
     ref_grams = (ensure_parallelism(ref_df.select(text_col))
                  .mapInPandas(ref_kernel, "gram long").distinct())
 
     def win_kernel(iterator):
-        import numpy as np
-
-        from ..kernels.shingle import shingle_batch
-        from ..sketch.hashing import hash3_matrix
         for batch in iterator:
-            sb = shingle_batch(batch[text_col].tolist(), k)
+            sb, grams = _gram_keys(batch[text_col].tolist(), k)
             ids = batch[id_col].to_numpy()
-            if sb.windows.shape[0]:
-                grams = (hash3_matrix(sb.windows, 0)
-                         >> np.uint64(1)).astype(np.int64)
-            else:
-                grams = np.zeros(0, dtype=np.int64)
             yield pd.DataFrame({
                 id_col: ids[sb.doc_idx],
                 "pos": sb.win_pos.astype(np.int64),
@@ -280,33 +270,6 @@ def classify_pages_shuffle(df: DataFrame, ref_df: DataFrame,
 
 
 # --------------------------------------------------------------- multi
-def _multi_kernel(bc_blobs, names: tuple[str, ...],
-                  passthrough: tuple[str, ...], text_col: str,
-                  toles: tuple[float, ...], canonicalize: str | None = None):
-    canon_fn = CANONICALIZERS[canonicalize] if canonicalize else None
-
-    def run(iterator):
-        blooms = [BloomFilter.from_payload(b) for b in bc_blobs.value]
-        for batch in iterator:
-            for lo in range(0, len(batch), _KERNEL_BATCH):
-                sub = batch.iloc[lo:lo + _KERNEL_BATCH]
-                texts = sub[text_col].tolist()
-                for name, bloom, tole in zip(names, blooms, toles):
-                    res = classify_batch(texts, bloom,
-                                         bloom.k_mer or 15, tole,
-                                         canonicalize=canon_fn)
-                    out = {c: sub[c] for c in passthrough}
-                    out["filter_name"] = name
-                    out["contaminated"] = res.contaminated
-                    out["match_score"] = res.score
-                    out["match_time"] = res.match_time
-                    out["text_len"] = res.lengths
-                    out["escalated"] = res.escalated
-                    yield pd.DataFrame(out)
-
-    return run
-
-
 def classify_multi(df: DataFrame, blooms: dict[str, BloomFilter],
                    text_col: str = "text",
                    passthrough: tuple[str, ...] = (),
@@ -321,26 +284,10 @@ def classify_multi(df: DataFrame, blooms: dict[str, BloomFilter],
     of them without rescanning the input (SURVEY §2.5).  Output: one
     row per (page, filter_name).
     """
-    spark = df.sparkSession
-    ensure_shipped(spark)
-    names = tuple(blooms)
-    toles = tuple((mco_suggestion(blooms[n].k_mer or 15)
-                   if tole_rate is None else tole_rate) for n in names)
-    # same banked path as classify_pages: any filter whose blob tops
-    # 1 GiB ships as bank slices (JVM byte arrays cap at 2 GB), so a
-    # wide filter that works single-filter also works in a screen
-    bc = spark.sparkContext.broadcast(
-        [blooms[n].to_payload(max_bank_bytes) for n in names])
-    cols = tuple(passthrough)
-    select_cols = list(dict.fromkeys(cols + (text_col,)))
-    sel = ensure_parallelism(df.select(*select_cols))
-    dtypes = {f.name: f.dataType.simpleString() for f in sel.schema.fields}
-    pass_schema = ", ".join(f"{c} {dtypes[c]}" for c in cols)
-    schema = ((pass_schema + ", " if pass_schema else "")
-              + "filter_name string, " + CLASSIFY_COLS)
-    return sel.mapInPandas(
-        _multi_kernel(bc, names, cols, text_col, toles,
-                      canonicalize=canonicalize), schema=schema)
+    return _classify_plan(df, list(blooms.values()),
+                          tuple({"filter_name": n} for n in blooms),
+                          ("filter_name string",), text_col, passthrough,
+                          tole_rate, canonicalize, max_bank_bytes)
 
 
 def screen_report(classified_multi: DataFrame) -> DataFrame:
@@ -384,8 +331,6 @@ def token_containment_grid(docs: DataFrame, lang_col: str = "lang",
     published Bloom guarantees: zero false negatives (est >= exact)
     and FPR ≤ error_rate with a generous binomial-tail slack.
     """
-    import numpy as np
-
     spark = docs.sparkSession
     ensure_shipped(spark)
     toks = (docs.select(F.col(lang_col).alias("lang"),

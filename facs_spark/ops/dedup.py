@@ -317,6 +317,25 @@ def minhash_signatures(df: DataFrame, id_col: str, text_col: str,
     return sig.select(id_col, F.explode("buckets").alias("bucket"))
 
 
+def _cell_pairs(xs, max_bucket: int | None, pair_of):
+    """In-cell pair expansion of the sorted array column ``xs`` as one
+    JVM higher-order-function cascade (``transform``/``slice``/
+    ``flatten``): ``pair_of(x, y)`` for every unordered pair x before y
+    when the cell has ≤ ``max_bucket`` members (or ``max_bucket`` is
+    None), else for the first (min-id) member against each other one."""
+    n = F.size(xs)
+    all_pairs = F.flatten(F.transform(
+        F.sequence(F.lit(1), n - 1),
+        lambda i: F.transform(
+            F.slice(xs, i + 1, n - i),
+            lambda y: pair_of(F.element_at(xs, i), y))))
+    if max_bucket is None:
+        return all_pairs
+    rep_pairs = F.transform(F.slice(xs, 2, n - 1),
+                            lambda y: pair_of(F.element_at(xs, 1), y))
+    return F.when(n <= max_bucket, all_pairs).otherwise(rep_pairs)
+
+
 def minhash_candidates(sig: DataFrame, id_col: str,
                        max_bucket: int = 200) -> DataFrame:
     """Distinct candidate pairs from shared LSH-cell buckets.
@@ -344,20 +363,10 @@ def minhash_candidates(sig: DataFrame, id_col: str,
     cells = (sig.groupBy("bucket")
              .agg(F.array_sort(F.collect_list(id_col)).alias("ids"))
              .filter(F.size("ids") >= 2))
-    n = F.size("ids")
     # n ≤ cap: all unordered pairs (i < j); else: min-id rep × rest
-    all_pairs = F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.slice(F.col("ids"), i + 1, n - i),
-            lambda y: F.struct(
-                F.element_at(F.col("ids"), i).alias("id_a"),
-                y.alias("id_b")))))
-    rep_pairs = F.transform(
-        F.slice(F.col("ids"), 2, n - 1),
-        lambda y: F.struct(F.element_at(F.col("ids"), 1).alias("id_a"),
-                           y.alias("id_b")))
-    pairs = F.when(n <= max_bucket, all_pairs).otherwise(rep_pairs)
+    pairs = _cell_pairs(F.col("ids"), max_bucket,
+                        lambda x, y: F.struct(x.alias("id_a"),
+                                              y.alias("id_b")))
     return (cells.select(F.explode(pairs).alias("p"))
             .select(F.col("p.id_a").alias("id_a"),
                     F.col("p.id_b").alias("id_b"))
@@ -576,34 +585,21 @@ def simhash_near_pairs(fp: DataFrame, id_col: str, max_hamming: int = 6,
     semantics (what an exact brute-force oracle expects).
     """
     blocks = _simhash_block_tables(fp, id_col, max_hamming)
-    # same one-exchange groupBy + in-JVM pair cascade as
+    # same one-exchange groupBy + ``_cell_pairs`` cascade as
     # minhash_candidates (see there): the cell's sorted (id, print)
-    # structs expand to pairs via transform/slice/flatten — no window
-    # sort, no self-join, no union branch
+    # structs expand to pairs in the JVM — no window sort, no
+    # self-join, no union branch
     cells = (blocks.groupBy("blk", "val")
              .agg(F.array_sort(F.collect_list(F.struct(
                  F.col(id_col).alias("i"),
                  F.col("simhash").alias("s")))).alias("xs"))
              .filter(F.size("xs") >= 2))
-    n = F.size("xs")
 
     def pair_of(x, y):
         return F.struct(x["i"].alias("id_a"), x["s"].alias("sim_a"),
                         y["i"].alias("id_b"), y["s"].alias("sim_b"))
 
-    all_pairs = F.flatten(F.transform(
-        F.sequence(F.lit(1), n - 1),
-        lambda i: F.transform(
-            F.slice(F.col("xs"), i + 1, n - i),
-            lambda y: pair_of(F.element_at(F.col("xs"), i), y))))
-    if max_bucket is None:
-        pairs_col = all_pairs
-    else:
-        rep_pairs = F.transform(
-            F.slice(F.col("xs"), 2, n - 1),
-            lambda y: pair_of(F.element_at(F.col("xs"), 1), y))
-        pairs_col = F.when(n <= max_bucket, all_pairs) \
-            .otherwise(rep_pairs)
+    pairs_col = _cell_pairs(F.col("xs"), max_bucket, pair_of)
     pairs = (cells.select(F.explode(pairs_col).alias("p"))
              .select("p.id_a", "p.id_b", "p.sim_a", "p.sim_b")
              .distinct())

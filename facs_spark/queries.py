@@ -2616,14 +2616,10 @@ def q59_rebalance_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang").orderBy("doc_id")
 
 
-Q59_SQL = f"""
-WITH tgt(lang, t) AS (VALUES ('en', 0.5), ('de', 0.25), ('zh', 0.25)),
-cnt AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
-nn AS (SELECT MIN(n / t) AS nout FROM tgt JOIN cnt USING (lang)),
-fr AS (SELECT lang,
-              LEAST(1.0, t * (SELECT nout FROM nn) / n) AS frac
-       FROM tgt JOIN cnt USING (lang)),
-thr AS (SELECT lang,
+def _threshold_sql(seed: int) -> str:
+    """The md5-threshold replay shared by q59 and q69: per-group
+    fraction ``fr(lang, frac)`` → 13-hex threshold → keep-test."""
+    return f"""thr AS (SELECT lang,
                CASE WHEN frac >= 1.0 THEN 'g'
                     ELSE lpad(lower(hex(CAST(FLOOR(
                          frac * 4503599627370496.0) AS BIGINT))),
@@ -2631,10 +2627,20 @@ thr AS (SELECT lang,
         FROM fr)
 SELECT d.doc_id, d.lang
 FROM documents d JOIN thr USING (lang)
-WHERE substr(md5('{REBAL_SEED}:' || CAST(d.doc_id AS VARCHAR)), 1, 13)
+WHERE substr(md5('{seed}:' || CAST(d.doc_id AS VARCHAR)), 1, 13)
       < thr.h
 ORDER BY d.doc_id
 """
+
+
+Q59_SQL = """
+WITH tgt(lang, t) AS (VALUES ('en', 0.5), ('de', 0.25), ('zh', 0.25)),
+cnt AS (SELECT lang, COUNT(*) AS n FROM documents GROUP BY lang),
+nn AS (SELECT MIN(n / t) AS nout FROM tgt JOIN cnt USING (lang)),
+fr AS (SELECT lang,
+              LEAST(1.0, t * (SELECT nout FROM nn) / n) AS frac
+       FROM tgt JOIN cnt USING (lang)),
+""" + _threshold_sql(REBAL_SEED)
 
 
 # =====================================================================
@@ -2993,7 +2999,8 @@ def q67_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
                    (w > 0).alias("keep")), "doc_id")
 
 
-Q67_SQL = """
+# per-token-bucket DSIR log-ratio weights, shared by q67 and q68
+_DSIR_SQL = """
 WITH toks AS (
   SELECT doc_id, (lang = 'en') AS is_target,
          substr(md5(tok), 1, 3) AS bucket
@@ -3010,7 +3017,9 @@ ratio AS (
   SELECT bucket,
          LN((ct + 0.5) / (nt + 0.5 * 4096))
            - LN((cs + 0.5) / (ns + 0.5 * 4096)) AS log_ratio
-  FROM stats CROSS JOIN tot)
+  FROM stats CROSS JOIN tot)"""
+
+Q67_SQL = _DSIR_SQL + """
 SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_tokens,
        ROUND(SUM(log_ratio), 6) AS weight,
        (ROUND(SUM(log_ratio), 6) > 0) AS keep
@@ -3038,24 +3047,7 @@ def q68_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.round("score", 6).alias("score")), "doc_id")
 
 
-Q68_SQL = """
-WITH toks AS (
-  SELECT doc_id, (lang = 'en') AS is_target,
-         substr(md5(tok), 1, 3) AS bucket
-  FROM (SELECT doc_id, lang,
-               unnest(string_split(text, ' ')) AS tok FROM documents)
-  WHERE tok <> ''),
-stats AS (
-  SELECT bucket,
-         SUM(CASE WHEN is_target THEN 1 ELSE 0 END) AS ct,
-         SUM(CASE WHEN is_target THEN 0 ELSE 1 END) AS cs
-  FROM toks GROUP BY bucket),
-tot AS (SELECT SUM(ct) AS nt, SUM(cs) AS ns FROM stats),
-ratio AS (
-  SELECT bucket,
-         LN((ct + 0.5) / (nt + 0.5 * 4096))
-           - LN((cs + 0.5) / (ns + 0.5 * 4096)) AS log_ratio
-  FROM stats CROSS JOIN tot),
+Q68_SQL = _DSIR_SQL + """,
 w AS (
   SELECT doc_id, SUM(log_ratio) AS weight
   FROM toks JOIN ratio USING (bucket) GROUP BY doc_id),
@@ -3092,25 +3084,14 @@ def q69_temperature_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("doc_id", "lang").orderBy("doc_id")
 
 
-Q69_SQL = f"""
+Q69_SQL = """
 WITH cnt AS (SELECT lang, CAST(COUNT(*) AS DOUBLE) AS n
              FROM documents GROUP BY lang),
 tgt AS (SELECT lang, SQRT(n) AS t, n FROM cnt),
 nn AS (SELECT MIN(n / t) AS nout FROM tgt),
 fr AS (SELECT lang, LEAST(1.0, t * (SELECT nout FROM nn) / n) AS frac
        FROM tgt),
-thr AS (SELECT lang,
-               CASE WHEN frac >= 1.0 THEN 'g'
-                    ELSE lpad(lower(hex(CAST(FLOOR(
-                         frac * 4503599627370496.0) AS BIGINT))),
-                         13, '0') END AS h
-        FROM fr)
-SELECT d.doc_id, d.lang
-FROM documents d JOIN thr USING (lang)
-WHERE substr(md5('{Q69_SEED}:' || CAST(d.doc_id AS VARCHAR)), 1, 13)
-      < thr.h
-ORDER BY d.doc_id
-"""
+""" + _threshold_sql(Q69_SEED)
 
 
 # =====================================================================
@@ -3537,14 +3518,8 @@ def q80_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.createDataFrame(pdf)  # rows come in top's order
 
 
-Q80_SQL = """
-SELECT token, COUNT(*) AS exact_count, TRUE AS within_bound
-FROM (SELECT unnest(string_split(text, ' ')) AS token FROM documents)
-WHERE token <> ''
-GROUP BY token
-ORDER BY exact_count DESC, token
-LIMIT 10
-"""
+# same exact top-10 as q06 → same oracle
+Q80_SQL = Q06_SQL
 
 
 # =====================================================================

@@ -202,6 +202,42 @@ def test_query_multi_screen(spark, fixtures, tmp_path):
     assert rep["ecoli.bloom"]["total_read_count"] == fixtures["n_total"]
 
 
+def test_classify_multi_per_filter_k(spark, fixtures, tmp_path):
+    """Filters of different k_mer share one kernel pass: each filter's
+    rows of classify_multi equal classify_pages with that filter alone
+    (own k, own default tole), and classify_pages carries no
+    filter_name column."""
+    from facs_spark.ops.contamination import (CLASSIFY_COLS, classify_multi,
+                                              classify_pages)
+    from facs_spark.sketch import BloomFilter
+    blooms = {}
+    for k in (16, 12):
+        path = str(tmp_path / f"ecoli{k}.bloom")
+        facs.build(fixtures["ref"], path, k_mer=k, error_rate=0.0005,
+                   spark=spark)
+        with open(path, "rb") as fh:
+            blooms[f"k{k}"] = BloomFilter.from_bytes(fh.read())
+        assert blooms[f"k{k}"].k_mer == k
+    reads = read_fastx(spark, fixtures["fq"])
+    kw = dict(text_col="seq", passthrough=("read_id",),
+              canonicalize="dna_revcomp")
+    result_cols = [f.split()[0] for f in CLASSIFY_COLS.split(", ")]
+    multi = classify_multi(reads, blooms, **kw).collect()
+    per_filter = {}
+    for name, bloom in blooms.items():
+        single = classify_pages(reads, bloom, **kw)
+        assert single.columns == ["read_id"] + result_cols
+        want = {r["read_id"]: tuple(r[c] for c in result_cols)
+                for r in single.collect()}
+        got = {r["read_id"]: tuple(r[c] for c in result_cols)
+               for r in multi if r["filter_name"] == name}
+        assert got == want, name
+        per_filter[name] = got
+    assert len(multi) == 2 * fixtures["n_total"]
+    # the two k's must actually score differently, or this shows nothing
+    assert per_filter["k16"] != per_filter["k12"]
+
+
 def test_info(spark, fixtures):
     meta = facs.info(os.path.join(fixtures["dir"], "ecoli.bloom"))
     assert meta["k_mer"] == 16
