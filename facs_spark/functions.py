@@ -141,18 +141,11 @@ def sketch_agg_udfs() -> dict:
 
 
 def _agg_specs() -> dict:
-    """SQL name -> the default ``SketchSpec`` its builder uses."""
+    """SQL name -> the ``SketchSpec`` its builder uses: the sketch
+    class's defaults, except a tighter CBF and 32-bit cuckoo
+    fingerprints."""
     from .ops.sketch_agg import SketchSpec
-    return {
-        "hll_agg": SketchSpec.make("hll", "_", p=14),
-        "kll_agg": SketchSpec.make("kll", "_", k=200),
-        "tdigest_agg": SketchSpec.make("tdigest", "_", delta=200.0),
-        "theta_agg": SketchSpec.make("theta", "_", k=4096),
-        "mg_agg": SketchSpec.make("mg", "_", k=1024),
-        "ams_agg": SketchSpec.make("ams", "_", r=5, c=256, seed=0),
-        "cs_agg": SketchSpec.make("cs", "_", r=5, c=2048, seed=0),
-        "cbf_agg": SketchSpec.make("cbf", "_", capacity=1_000_000,
-                                   error_rate=1e-6),
-        "cuckoo_agg": SketchSpec.make("cuckoo", "_", capacity=1_000_000,
-                                      fbits=32),
-    }
+    params = {"cbf": {"error_rate": 1e-6}, "cuckoo": {"fbits": 32}}
+    return {f"{kind}_agg": SketchSpec.make(kind, "_", **params.get(kind, {}))
+            for kind in ("hll", "kll", "tdigest", "theta", "mg", "ams", "cs",
+                         "cbf", "cuckoo")}

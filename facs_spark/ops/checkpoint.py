@@ -35,7 +35,7 @@ MANIFEST = "_sketch_manifest.json"
 
 
 def checkpoint_build(df: DataFrame, spec: SketchSpec, path: str,
-                     split_id: str = "all", fanin: int = 64):
+                     split_id: str = "all"):
     """Build partials for one input split and persist them (idempotent).
 
     Returns the (sketch, rows) merged over ALL splits checkpointed so
@@ -43,24 +43,24 @@ def checkpoint_build(df: DataFrame, spec: SketchSpec, path: str,
     """
     spark = df.sparkSession
     if not _has_split(spark, path, split_id):
-        partials = (partial_sketches(df, spec)
-                    .withColumn("split_id", F.lit(split_id))
-                    .withColumn("created_ts", F.lit(time.time())))
-        (partials.write.mode("append").partitionBy("split_id").parquet(path))
-        _write_manifest(path, spec)
-    return resume(spark, path, fanin=fanin)
+        _write_split(df, spec, path, split_id)
+    return resume(spark, path)
 
 
-def resume(spark: SparkSession, path: str, fanin: int = 64):
-    """Merge every checkpointed partial at ``path`` into one sketch."""
+def resume(spark: SparkSession, path: str):
+    """Merge every checkpointed partial at ``path`` into one sketch,
+    with the merge fan-in of the spec its manifest records."""
+    with open(os.path.join(path, MANIFEST)) as fh:
+        m = json.load(fh)
+    spec = SketchSpec(kind=m["kind"], column=m["column"], prep=m["prep"],
+                      params=tuple(tuple(p) for p in m["params"]))
     partials = spark.read.parquet(path)
     # re-key partition ids uniquely across splits for the tree merge;
     # checkpoint rows are NOT one-per-partition, so pass the true count
     keyed = partials.select(
         F.monotonically_increasing_id().alias("partition_id"),
         "rows_seen", "wall_ms", "sketch")
-    return tree_merge(keyed, fanin=fanin,
-                      n_partials=partials.count())
+    return tree_merge(keyed, spec, n_partials=partials.count())
 
 
 def lineage(spark: SparkSession, path: str) -> DataFrame:
@@ -79,16 +79,22 @@ def _has_split(spark: SparkSession, path: str, split_id: str) -> bool:
     return df.filter(F.col("split_id") == split_id).limit(1).count() > 0
 
 
-def _write_manifest(path: str, spec: SketchSpec) -> None:
+def _write_split(df: DataFrame, spec: SketchSpec, path: str,
+                 split_id: str) -> None:
+    """Append ``df``'s partials as split ``split_id``; the manifest
+    goes first, so every checkpoint with partials has one."""
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, MANIFEST), "w") as fh:
         json.dump({"kind": spec.kind, "column": spec.column,
                    "prep": spec.prep, "params": list(spec.params)}, fh)
+    (partial_sketches(df, spec)
+     .withColumn("split_id", F.lit(split_id))
+     .withColumn("created_ts", F.lit(time.time()))
+     .write.mode("append").partitionBy("split_id").parquet(path))
 
 
 def incremental_snaptable_sketch(spark: SparkSession, table: str,
-                                 spec: SketchSpec, ckpt_path: str,
-                                 fanin: int = 64):
+                                 spec: SketchSpec, ckpt_path: str):
     """Maintain a sketch over a GROWING snaptable: each call ingests
     only the data files added since the last processed commit and
     merges them into the checkpointed state — the streaming-adjacent
@@ -153,12 +159,7 @@ def incremental_snaptable_sketch(spark: SparkSession, table: str,
         if not new or _has_split(spark, ckpt_path, split):
             continue
         df = spark.read.parquet(*[os.path.join(root, f) for f in new])
-        partials = (partial_sketches(df, spec)
-                    .withColumn("split_id", F.lit(split))
-                    .withColumn("created_ts", F.lit(time.time())))
-        partials.write.mode("append").partitionBy("split_id") \
-            .parquet(ckpt_path)
-        _write_manifest(ckpt_path, spec)
+        _write_split(df, spec, ckpt_path, split)
         processed.append(split)
-    sketch, rows = resume(spark, ckpt_path, fanin=fanin)
+    sketch, rows = resume(spark, ckpt_path)
     return sketch, rows, processed

@@ -52,15 +52,14 @@ def estimate_kgram_capacity(df: DataFrame, text_col: str, k: int) -> int:
 def build_reference_bloom(ref_df: DataFrame, text_col: str = "text",
                           k: int = 15, error_rate: float = 0.0005,
                           capacity: int | None = None,
-                          sizing: str = "facs",
-                          fanin: int = 64) -> BloomFilter:
+                          sizing: str = "facs") -> BloomFilter:
     """Distributed Bloom build over a reference-corpus DataFrame."""
     if capacity is None:
         capacity = estimate_kgram_capacity(ref_df, text_col, k)
     spec = SketchSpec.make("bloom", text_col, prep="kgram", k=k,
                            capacity=capacity, error_rate=error_rate,
                            sizing=sizing)
-    sketch, _rows = build_sketch(ref_df, spec, fanin=fanin)
+    sketch, _rows = build_sketch(ref_df, spec)
     if sketch is None:  # empty corpus
         sketch = spec.new_sketch()
     return sketch
@@ -103,8 +102,8 @@ def _classify_kernel(bc_blobs, tags: tuple[dict, ...],
 def _classify_plan(df: DataFrame, blooms: list[BloomFilter],
                    tags: tuple[dict, ...], tag_fields: tuple[str, ...],
                    text_col: str, passthrough: tuple[str, ...],
-                   tole_rate: float | None, canonicalize: str | None,
-                   max_bank_bytes: int | None) -> DataFrame:
+                   tole_rate: float | None,
+                   canonicalize: str | None) -> DataFrame:
     """One mapInPandas over ``df`` probing every filter in ``blooms``;
     ``tag_fields`` are the schema fields of the ``tags`` columns."""
     spark = df.sparkSession
@@ -113,8 +112,7 @@ def _classify_plan(df: DataFrame, blooms: list[BloomFilter],
                    if tole_rate is None else tole_rate) for b in blooms)
     # any filter whose blob tops 1 GiB ships as bank slices (JVM byte
     # arrays cap at 2 GB); the list broadcasts once per executor
-    bc = spark.sparkContext.broadcast(
-        [b.to_payload(max_bank_bytes) for b in blooms])
+    bc = spark.sparkContext.broadcast([b.to_payload() for b in blooms])
     cols = tuple(passthrough)
     sel = ensure_parallelism(df.select(*dict.fromkeys(cols + (text_col,))))
     dtypes = {f.name: f.dataType.simpleString() for f in sel.schema.fields}
@@ -131,8 +129,7 @@ def classify_pages(df: DataFrame, bloom: BloomFilter,
                    tole_rate: float | None = None,
                    sample_fraction: float | None = None,
                    seed: int = 42,
-                   canonicalize: str | None = None,
-                   max_bank_bytes: int | None = None) -> DataFrame:
+                   canonicalize: str | None = None) -> DataFrame:
     """Classify pages against a broadcast Bloom filter: the one-filter
     case of ``classify_multi``, with no ``filter_name`` column.
 
@@ -144,7 +141,7 @@ def classify_pages(df: DataFrame, bloom: BloomFilter,
     if sample_fraction is not None and sample_fraction < 1.0:
         df = df.sample(fraction=sample_fraction, seed=seed)
     return _classify_plan(df, [bloom], ({},), (), text_col, passthrough,
-                          tole_rate, canonicalize, max_bank_bytes)
+                          tole_rate, canonicalize)
 
 
 def contamination_counters(classified: DataFrame) -> DataFrame:
@@ -274,8 +271,7 @@ def classify_multi(df: DataFrame, blooms: dict[str, BloomFilter],
                    text_col: str = "text",
                    passthrough: tuple[str, ...] = (),
                    tole_rate: float | None = None,
-                   canonicalize: str | None = None,
-                   max_bank_bytes: int | None = None) -> DataFrame:
+                   canonicalize: str | None = None) -> DataFrame:
     """Screen pages against MANY filters in one pass (long format).
 
     The reference's fastq_screen-style multi-filter screening loops
@@ -287,7 +283,7 @@ def classify_multi(df: DataFrame, blooms: dict[str, BloomFilter],
     return _classify_plan(df, list(blooms.values()),
                           tuple({"filter_name": n} for n in blooms),
                           ("filter_name string",), text_col, passthrough,
-                          tole_rate, canonicalize, max_bank_bytes)
+                          tole_rate, canonicalize)
 
 
 def screen_report(classified_multi: DataFrame) -> DataFrame:

@@ -28,19 +28,65 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import _parallel, ensure_shipped
-from ..sketch import (BloomFilter, CountMinSketch, HyperLogLog, KLL, TDigest,
-                      sketch_from_bytes)
+from ..sketch import (AmsF2, BloomFilter, CountingBloom, CountMinSketch,
+                      CountSketch, CuckooFilter, DDSketch, FrequentDirections,
+                      HyperLogLog, KLL, MisraGries, MomentsSketch, TDigest,
+                      ThetaSketch, merge_blobs, sketch_from_bytes)
 
 PARTIAL_SCHEMA = ("partition_id long, rows_seen long, wall_ms double, "
                   "sketch binary")
+
+# spec-level adaptors: the capacity-sized filters need a capacity, and
+# a bloom spec's ``k`` is its k-gram length (the filter's ``k_mer``)
+_CAPACITY = 1_000_000
+_KGRAM = 15
+
+
+def _bloom(capacity=_CAPACITY, k=_KGRAM, **kw):
+    return BloomFilter.create(capacity, k_mer=k, **kw)
+
+
+def _sized(create):
+    return lambda capacity=_CAPACITY, **kw: create(capacity, **kw)
+
+
+def _small(_sk):
+    return 64 << 10  # t-digest/KLL/DDSketch/moments: small, bounded
+
+
+# kind -> (constructor taking the spec's params as keywords, blob bytes
+# of the constructed sketch).  Fixed-size kinds measure their arrays;
+# a blob that grows with its input is bounded from the sketch's fields.
+KINDS = {
+    "bloom": (_bloom, lambda sk: sk.vector.nbytes),
+    "hll": (HyperLogLog, lambda sk: sk.registers.nbytes),
+    "cms": (CountMinSketch, lambda sk: sk.table.nbytes),
+    "ams": (AmsF2, lambda sk: sk.z.nbytes),
+    "cs": (CountSketch, lambda sk: sk.z.nbytes),
+    "cbf": (_sized(CountingBloom.create), lambda sk: sk.counters.nbytes),
+    "cuckoo": (_sized(CuckooFilter.create), lambda sk: sk.table.nbytes),
+    "theta": (ThetaSketch, lambda sk: sk.k * 8),
+    # k entries, each tag + (len|8B key) + count; assume short keys
+    "mg": (MisraGries, lambda sk: sk.k * 40),
+    # to_bytes shrinks to l rows of d doubles before shipping
+    "fd": (FrequentDirections, lambda sk: sk.l * sk.d * 8),
+    "tdigest": (TDigest, _small),
+    "kll": (KLL, _small),
+    "ddsketch": (DDSketch, _small),
+    "moments": (MomentsSketch, _small),
+}
 
 
 @dataclass(frozen=True)
 class SketchSpec:
     """Picklable recipe: which sketch, over which column, how to feed it.
 
-    kind: bloom | hll | cms | tdigest | kll | theta | mg | fd | ams | cs
-          | cbf | cuckoo | ddsketch | moments
+    kind: one of ``KINDS`` — bloom | hll | cms | ams | cs | cbf |
+          cuckoo | theta | mg | fd | tdigest | kll | ddsketch | moments
+    params: the sketch constructor's keywords; a param it does not
+          take raises ``TypeError``, an absent one takes the sketch
+          class's default (bloom/cbf/cuckoo add ``capacity`` 1,000,000;
+          bloom's ``k`` is its ``k_mer``, default 15)
     prep: how batch values are fed to ``update_batch``:
       * "kgram"  — shingle text into k-gram windows (bloom only)
       * "tokens" — whitespace-split text into tokens
@@ -61,99 +107,16 @@ class SketchSpec:
                           params=tuple(sorted(params.items())))
 
     def new_sketch(self):
-        p = dict(self.params)
-        if self.kind == "bloom":
-            return BloomFilter.create(
-                capacity=p.get("capacity", 1_000_000),
-                error_rate=p.get("error_rate", 0.0005),
-                k_mer=p.get("k", 15),
-                sizing=p.get("sizing", "facs"))
-        if self.kind == "hll":
-            return HyperLogLog(p=p.get("p", 14))
-        if self.kind == "cms":
-            return CountMinSketch(epsilon=p.get("epsilon", 1e-4),
-                                  delta=p.get("delta", 0.01))
-        if self.kind == "tdigest":
-            return TDigest(delta=p.get("delta", 200.0))
-        if self.kind == "kll":
-            return KLL(k=p.get("k", 200))
-        if self.kind == "theta":
-            from ..sketch.theta import ThetaSketch
-            return ThetaSketch(k=p.get("k", 4096))
-        if self.kind == "mg":
-            from ..sketch.mg import MisraGries
-            return MisraGries(k=p.get("k", 1024))
-        if self.kind == "fd":
-            from ..sketch.fd import FrequentDirections
-            return FrequentDirections(l=p.get("l", 32), d=p.get("d", 64))
-        if self.kind == "ams":
-            from ..sketch.ams import AmsF2
-            return AmsF2(r=p.get("r", 5), c=p.get("c", 256),
-                         seed=p.get("seed", 0))
-        if self.kind == "cs":
-            from ..sketch.countsketch import CountSketch
-            return CountSketch(r=p.get("r", 5), c=p.get("c", 2048),
-                               seed=p.get("seed", 0))
-        if self.kind == "cbf":
-            from ..sketch.cbf import CountingBloom
-            return CountingBloom.create(
-                capacity=p.get("capacity", 1_000_000),
-                error_rate=p.get("error_rate", 0.0005))
-        if self.kind == "cuckoo":
-            from ..sketch.cuckoo import CuckooFilter
-            return CuckooFilter.create(
-                capacity=p.get("capacity", 1_000_000),
-                fbits=p.get("fbits", 16), b=p.get("b", 4),
-                load=p.get("load", 0.84), seed=p.get("seed", 0))
-        if self.kind == "ddsketch":
-            from ..sketch.ddsketch import DDSketch
-            return DDSketch(alpha=p.get("alpha", 0.01))
-        if self.kind == "moments":
-            from ..sketch.moments import MomentsSketch
-            return MomentsSketch()
-        raise ValueError(f"unknown sketch kind {self.kind!r}")
+        if self.kind not in KINDS:
+            raise ValueError(f"unknown sketch kind {self.kind!r}")
+        return KINDS[self.kind][0](**dict(self.params))
 
     def blob_bytes(self) -> int:
-        """Serialized size estimate WITHOUT allocating the sketch
-        (a 10^8-capacity Bloom vector is ~200 MB)."""
-        p = dict(self.params)
-        if self.kind == "bloom":
-            from ..sketch.sizing import facs_sizing, standard_sizing
-            fn = facs_sizing if p.get("sizing", "facs") == "facs" else standard_sizing
-            st = fn(p.get("capacity", 1_000_000), p.get("error_rate", 0.0005))
-            return (st.elements >> 3) + 64
-        if self.kind == "hll":
-            return (1 << p.get("p", 14)) + 64
-        if self.kind == "cms":
-            import math as _m
-            d = max(1, _m.ceil(_m.log(1.0 / p.get("delta", 0.01))))
-            w = max(1, _m.ceil(_m.e / p.get("epsilon", 1e-4)))
-            return d * w * 8 + 64
-        if self.kind == "theta":
-            return p.get("k", 4096) * 8 + 64
-        if self.kind == "mg":
-            # k entries, each tag + (len|8B key) + count; assume short keys
-            return p.get("k", 1024) * 40 + 64
-        if self.kind == "fd":
-            # to_bytes shrinks to l rows of d doubles before shipping
-            return p.get("l", 32) * p.get("d", 64) * 8 + 64
-        if self.kind == "ams":
-            return p.get("r", 5) * p.get("c", 256) * 8 + 64
-        if self.kind == "cs":
-            return p.get("r", 5) * p.get("c", 2048) * 8 + 64
-        if self.kind == "cbf":
-            from ..sketch.cbf import CountingBloom
-            m, _k = CountingBloom.size_for(
-                capacity=p.get("capacity", 1_000_000),
-                error_rate=p.get("error_rate", 0.0005))
-            return m * 2 + 64
-        if self.kind == "cuckoo":
-            from ..sketch.cuckoo import CuckooFilter
-            b = p.get("b", 4)
-            m = CuckooFilter.buckets_for(p.get("capacity", 1_000_000), b,
-                                         p.get("load", 0.84))
-            return m * b * 4 + 64
-        return 64 * 1024  # t-digest/KLL: small, bounded
+        """Serialized size bound of one partial, read off a freshly
+        constructed sketch.  Constructing is free on the driver: the
+        arrays are calloc'd zero pages that are never touched (a
+        10^8-capacity Bloom is 172 MiB of address space, +0 MB RSS)."""
+        return KINDS[self.kind][1](self.new_sketch()) + 64
 
     def update(self, sketch, series: pd.Series) -> int:
         """Feed one Arrow batch column into the sketch; returns rows seen."""
@@ -162,7 +125,7 @@ class SketchSpec:
             return 0
         if self.prep == "kgram":
             from ..kernels.shingle import shingle_batch
-            sb = shingle_batch(series.tolist(), self.param("k", 15))
+            sb = shingle_batch(series.tolist(), self.param("k", _KGRAM))
             sketch.add_batch(sb.windows)
         elif self.prep == "tokens":
             # prep dispatch must precede the kind dispatch: a bloom
@@ -265,29 +228,40 @@ def _partials(df: DataFrame, spec: SketchSpec):
 
 
 # ---------------------------------------------------------------- merge
+_FANIN = 64               # partials per merge group ...
+_GROUP_BYTES = 128 << 20  # ... capped at 128 MiB of blobs
+
+
+def _fanin(spec: SketchSpec) -> int:
+    """Partials per merge group for ``spec``'s blobs.
+
+    An applyInPandas merge group holds all its blobs in memory at
+    once, and the FINAL level is a driver collect over py4j (~25 MB/s
+    measured locally) — so wide sketches cap each group at 128 MiB of
+    blobs.  Measured on 32 × 29 MB partials: fan-in 64 → 46 s (driver
+    collect dominates), fan-in 4 → 8.3 s (executor-side merges,
+    2-blob collect)."""
+    return max(2, min(_FANIN, _GROUP_BYTES // spec.blob_bytes()))
+
+
 def _merge_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    merged = None
-    rows = 0
     t0 = time.perf_counter()
-    for blob, r in zip(pdf["sketch"], pdf["rows_seen"]):
-        s = sketch_from_bytes(bytes(blob))
-        merged = s if merged is None else merged.merge(s)
-        rows += int(r)
+    merged = merge_blobs(pdf["sketch"])
     wall = (time.perf_counter() - t0) * 1e3
     return pd.DataFrame({
         "partition_id": [int(pdf["partition_id"].min())],
-        "rows_seen": [rows], "wall_ms": [wall],
+        "rows_seen": [int(pdf["rows_seen"].sum())], "wall_ms": [wall],
         "sketch": [merged.to_bytes()],
     })
 
 
-def tree_merge(partials: DataFrame, fanin: int = 64,
+def tree_merge(partials: DataFrame, spec: SketchSpec,
                n_partials: int | None = None) -> tuple[object, int]:
-    """Reduce partial rows to one sketch with bounded fan-in.
+    """Reduce ``spec``'s partial rows to one sketch with bounded fan-in.
 
-    While more than ``fanin`` partials remain, group them by
+    While more than ``_fanin(spec)`` partials remain, group them by
     ``partition_id % ngroups`` and merge each group in an executor
-    (``applyInPandas``); the driver only ever merges ≤ fanin blobs.
+    (``applyInPandas``); the driver only ever merges ≤ fan-in blobs.
     This is the banked, driver-OOM-safe reduction for wide sketches
     (SURVEY §4 physical notes).  Returns (sketch, total_rows).
 
@@ -303,6 +277,7 @@ def tree_merge(partials: DataFrame, fanin: int = 64,
     checkpoint parquet); without it the partials' plan is planned
     and converted to an RDD just to count them.
     """
+    fanin = _fanin(spec)
     level = partials
     n = n_partials if n_partials is not None \
         else level.rdd.getNumPartitions()
@@ -313,34 +288,21 @@ def tree_merge(partials: DataFrame, fanin: int = 64,
                  .groupBy("grp")
                  .applyInPandas(_merge_group, schema=PARTIAL_SCHEMA))
         n = ngroups
-    rows = level.collect()
-    merged = None
-    total = 0
-    for r in sorted(rows, key=lambda r: r["partition_id"]):
-        s = sketch_from_bytes(bytes(r["sketch"]))
-        merged = s if merged is None else merged.merge(s)
-        total += r["rows_seen"]
-    return merged, total
+    rows = sorted(level.collect(), key=lambda r: r["partition_id"])
+    return (merge_blobs(r["sketch"] for r in rows),
+            sum(r["rows_seen"] for r in rows))
 
 
-def build_sketch(df: DataFrame, spec: SketchSpec, fanin: int = 64):
+def build_sketch(df: DataFrame, spec: SketchSpec):
     """End-to-end: partials → tree merge → final sketch object.
-
-    Fan-in adapts to blob size: an applyInPandas merge group holds all
-    its blobs in memory at once, and the FINAL level is a driver
-    collect over py4j (~25 MB/s measured locally) — so wide sketches
-    cap each group at ~128 MB of blobs.  Measured on 32 × 29 MB
-    partials: fanin 64 → 46 s (driver collect dominates), fanin 4 →
-    8.3 s (executor-side merges, 2-blob collect).
 
     The plan is converted to an RDD once, to size its partitions; the
     partial count that conversion yields sizes the merge tree, so the
     final collect is the build's only job.  An empty input gives an
     empty sketch and 0 rows.
     """
-    eff_fanin = max(2, min(fanin, (128 << 20) // max(spec.blob_bytes(), 1)))
     partials, n = _partials(df, spec)
-    return tree_merge(partials, fanin=eff_fanin, n_partials=n)
+    return tree_merge(partials, spec, n_partials=n)
 
 
 # ---------------------------------------------------------------- grouped
@@ -372,13 +334,9 @@ def _grouped_partial_builder(spec: SketchSpec, group_cols: tuple[str, ...]):
 
 
 def _grouped_merge(pdf: pd.DataFrame) -> pd.DataFrame:
-    merged = None
-    for blob in pdf["sketch"]:
-        s = sketch_from_bytes(bytes(blob))
-        merged = s if merged is None else merged.merge(s)
     head = pdf.iloc[[0]].copy()
     head["rows_seen"] = pdf["rows_seen"].sum()
-    head["sketch"] = [merged.to_bytes()]
+    head["sketch"] = [merge_blobs(pdf["sketch"]).to_bytes()]
     return head.drop(columns=["partition_id"])
 
 

@@ -9,22 +9,14 @@ Three layers, used in this order:
    absent.  This is the preferred path.
 2. **AQE** (session.py enables ``skewJoin`` + partition coalescing)
    re-splits skewed shuffle partitions at runtime for plain joins.
-3. **Explicit salting** (this module) for the remaining cases: a
-   shuffle whose key is pathologically hot and whose aggregation is
-   not algebraic (e.g. collect-heavy group work in applyInPandas).
+3. **Explicit salting** (this module's ``salted_join``) for a join
+   whose key is hot enough to straggle and whose small side is too
+   big to broadcast.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def with_salt(df: DataFrame, key: str, nsalt: int,
-              salt_col: str = "_salt") -> DataFrame:
-    """Deterministic salt in [0, nsalt) — pmod(hash of the whole row's
-    stable id … here: spark hash of all columns), SURVEY §4 salting row."""
-    return df.withColumn(salt_col,
-                         F.pmod(F.hash(*df.columns), F.lit(nsalt)))
 
 
 def salted_join(big: DataFrame, small: DataFrame, key: str,
@@ -52,35 +44,3 @@ def salted_join(big: DataFrame, small: DataFrame, key: str,
     out = big_s.join(small_r, [key, "_salt"], how)
     return out.drop("_salt")
 
-
-def salted_grouped_agg(df: DataFrame, key: str, agg_exprs: list,
-                       nsalt: int = 16) -> DataFrame:
-    """Two-stage algebraic aggregation with an explicit salt: group by
-    (key, salt) first (spreads the hot key), then re-aggregate by key.
-
-    ``agg_exprs``: list of (col, 'sum'|'count'|'min'|'max', alias).
-    Spark's partial aggregation usually makes this unnecessary; it
-    exists for operators forced through applyInPandas where no partial
-    stage is generated.
-    """
-    stage1_exprs, stage2_exprs = [], []
-    for col, fn, alias in agg_exprs:
-        tmp = f"_{alias}_p"
-        if fn == "count":
-            stage1_exprs.append(F.count(F.lit(1) if col == "*"
-                                        else F.col(col)).alias(tmp))
-            stage2_exprs.append(F.sum(tmp).alias(alias))
-        elif fn == "sum":
-            stage1_exprs.append(F.sum(col).alias(tmp))
-            stage2_exprs.append(F.sum(tmp).alias(alias))
-        elif fn == "min":
-            stage1_exprs.append(F.min(col).alias(tmp))
-            stage2_exprs.append(F.min(tmp).alias(alias))
-        elif fn == "max":
-            stage1_exprs.append(F.max(col).alias(tmp))
-            stage2_exprs.append(F.max(tmp).alias(alias))
-        else:
-            raise ValueError(f"not an algebraic aggregate: {fn}")
-    salted = df.withColumn("_salt", F.pmod(F.hash(*df.columns), F.lit(nsalt)))
-    stage1 = salted.groupBy(key, "_salt").agg(*stage1_exprs)
-    return stage1.groupBy(key).agg(*stage2_exprs)

@@ -77,8 +77,9 @@ def sliding_hll_raw_points(df: DataFrame, value_col: str,
             .drop("frac"))
 
 
-def _frontier_kernel(iterator):
-    """Partition-local LPFM frontier, fully vectorized.
+def lpfm_frontier(reg: np.ndarray, ts: np.ndarray, rank: np.ndarray):
+    """The LPFM frontier of (register, ts, rank) int64 points, sorted
+    (register asc, ts desc).
 
     Sort (register asc, ts desc, rank desc) and keep a row iff its
     key = register*64 + rank strictly exceeds the running max of all
@@ -87,6 +88,17 @@ def _frontier_kernel(iterator):
     rank, so a row survives iff its rank beats every newer entry —
     and a same-ts duplicate loses to its own group's max-rank row,
     which sorts first.  One pass, exact frontier."""
+    order = np.lexsort((-rank, -ts, reg))
+    reg, ts, rank = reg[order], ts[order], rank[order]
+    key = reg * 64 + rank
+    keep = np.ones(key.size, dtype=bool)
+    if key.size:
+        keep[1:] = key[1:] > np.maximum.accumulate(key)[:-1]
+    return reg[keep], ts[keep], rank[keep]
+
+
+def _frontier_kernel(iterator):
+    """Partition-local LPFM frontier (``lpfm_frontier``), vectorized."""
     import pandas as pd
     regs, tss, rks = [], [], []
     for batch in iterator:
@@ -98,21 +110,12 @@ def _frontier_kernel(iterator):
         rks.append(batch["rank"].to_numpy(dtype=np.int64))
     if not regs:
         return
-    r = np.concatenate(regs)
-    t = np.concatenate(tss)
-    k = np.concatenate(rks)
+    r, t, k = lpfm_frontier(np.concatenate(regs), np.concatenate(tss),
+                            np.concatenate(rks))
     if r.size == 0:
         return
-    order = np.lexsort((-k, -t, r))
-    r, t, k = r[order], t[order], k[order]
-    key = r * 64 + k
-    cm = np.maximum.accumulate(key)
-    keep = np.empty(key.size, dtype=bool)
-    keep[0] = True
-    keep[1:] = key[1:] > cm[:-1]
-    yield pd.DataFrame({"register": r[keep].astype("int32"),
-                        "ts_us": t[keep],
-                        "rank": k[keep].astype("int32")})
+    yield pd.DataFrame({"register": r.astype("int32"), "ts_us": t,
+                        "rank": k.astype("int32")})
 
 
 def sliding_hll_frontier(df: DataFrame, value_col: str,

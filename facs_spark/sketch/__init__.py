@@ -52,6 +52,16 @@ def sketch_from_bytes(blob: bytes):
         raise ValueError(f"unknown sketch magic {magic!r}") from None
 
 
+def merge_blobs(blobs):
+    """Deserialize each blob and fold them with ``merge``, in order;
+    ``None`` when there are none."""
+    merged = None
+    for blob in blobs:
+        sk = sketch_from_bytes(bytes(blob))
+        merged = sk if merged is None else merged.merge(sk)
+    return merged
+
+
 __all__ = [
     "BloomFilter", "HyperLogLog", "CountMinSketch", "TDigest", "KLL",
     "ThetaSketch", "MisraGries", "FrequentDirections", "AmsF2",
@@ -59,5 +69,5 @@ __all__ = [
     "MomentsSketch",
     "BloomStat", "bloom_fpr", "facs_sizing", "standard_sizing",
     "find_close_prime", "is_prime", "kmer_suggestion", "mco_suggestion",
-    "prob_suggestion", "sketch_from_bytes", "SKETCH_TYPES",
+    "prob_suggestion", "sketch_from_bytes", "merge_blobs", "SKETCH_TYPES",
 ]

@@ -333,16 +333,14 @@ class BloomFilter:
         return cls(stat=BloomStat(m, k, cap, e), k_mer=k_mer,
                    inserts=inserts, vector=vec)
 
-    def to_payload(self, max_bank_bytes: int | None = None
-                   ) -> bytes | list[bytes]:
+    def to_payload(self) -> bytes | list[bytes]:
         """The broadcast form: the ``to_bytes`` blob, or ``split_banks``
-        when that blob tops 1 GiB or ``max_bank_bytes`` is given (to
-        force banks in tests).  ``from_payload`` reads either form."""
-        if not max_bank_bytes:
-            blob = self.to_bytes()
-            if len(blob) <= _BANK_BYTES:
-                return blob
-        return self.split_banks(max_bank_bytes or _BANK_BYTES)
+        when that blob tops ``_BANK_BYTES`` (1 GiB; read at call time).
+        ``from_payload`` reads either form."""
+        blob = self.to_bytes()
+        if len(blob) <= _BANK_BYTES:
+            return blob
+        return self.split_banks(_BANK_BYTES)
 
     @classmethod
     def from_payload(cls, payload: bytes | list) -> "BloomFilter":

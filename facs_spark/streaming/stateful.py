@@ -236,7 +236,7 @@ def streaming_sliding_hll(points: DataFrame) -> DataFrame:
     import numpy as np
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..ops.sliding_hll import _frontier_kernel
+    from ..ops.sliding_hll import _frontier_kernel, lpfm_frontier
     points = points.mapInPandas(
         _frontier_kernel, schema="register int, ts_us long, rank int")
 
@@ -256,22 +256,8 @@ def streaming_sliding_hll(points: DataFrame) -> DataFrame:
             seen += len(pdf)
             ts = np.concatenate([ts, pdf["ts_us"].to_numpy(np.int64)])
             rk = np.concatenate([rk, pdf["rank"].to_numpy(np.int64)])
-        # per-ts max-rank dedup: sort (ts asc, rank asc), keep the
-        # last row of each ts run
-        order = np.lexsort((rk, ts))
-        ts, rk = ts[order], rk[order]
-        if ts.size:
-            last = np.r_[ts[1:] != ts[:-1], True]
-            ts, rk = ts[last], rk[last]
-        # frontier: scan newest->oldest, keep strict running-max ranks
-        ts_d, rk_d = ts[::-1], rk[::-1]
-        if ts_d.size:
-            runmax = np.maximum.accumulate(rk_d)
-            keep = np.r_[True, rk_d[1:] > runmax[:-1]]
-            ts_f = np.ascontiguousarray(ts_d[keep])
-            rk_f = np.ascontiguousarray(rk_d[keep])
-        else:
-            ts_f, rk_f = ts_d, rk_d
+        # one register: its frontier, newest first
+        _, ts_f, rk_f = lpfm_frontier(np.zeros_like(ts), ts, rk)
         state.update((ts_f.tobytes(), rk_f.tobytes(), seen))
         yield pd.DataFrame({
             "register": np.full(ts_f.size, key[0], np.int32),

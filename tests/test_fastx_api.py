@@ -245,12 +245,14 @@ def test_info(spark, fixtures):
     assert 0 < meta["expected_fpr"] < 0.01
 
 
-def test_banked_broadcast_classify(spark, fixtures):
+def test_banked_broadcast_classify(spark, fixtures, monkeypatch):
     """Forcing tiny banks must not change classification (the >2GB
-    broadcast path, SURVEY §4)."""
+    broadcast path, SURVEY §4).  The payload is built on the driver,
+    so patching the bank size there forces banks."""
     from facs_spark.io.fastx import read_fastx
-    from facs_spark.ops.contamination import classify_pages
+    from facs_spark.ops.contamination import classify_multi, classify_pages
     from facs_spark.sketch import BloomFilter
+    from facs_spark.sketch import bloom as bloom_mod
     bloom_path = os.path.join(fixtures["dir"], "ecoli.bloom")
     with open(bloom_path, "rb") as fh:
         bloom = BloomFilter.from_bytes(fh.read())
@@ -259,26 +261,18 @@ def test_banked_broadcast_classify(spark, fixtures):
     rt = BloomFilter.from_banks(banks)
     assert (rt.vector == bloom.vector).all()
     reads = read_fastx(spark, fixtures["fq"])
-    plain = classify_pages(reads, bloom, text_col="seq",
-                           passthrough=("read_id",), tole_rate=0.3,
-                           canonicalize="dna_revcomp")
-    banked = classify_pages(reads, bloom, text_col="seq",
-                            passthrough=("read_id",), tole_rate=0.3,
-                            canonicalize="dna_revcomp",
-                            max_bank_bytes=1024)
+    kw = dict(text_col="seq", passthrough=("read_id",), tole_rate=0.3,
+              canonicalize="dna_revcomp")
+    plain = classify_pages(reads, bloom, **kw)
+    cm_plain = classify_multi(reads, {"eco": bloom}, **kw)
+    monkeypatch.setattr(bloom_mod, "_BANK_BYTES", 1024)
+    assert isinstance(bloom.to_payload(), list)
+    banked = classify_pages(reads, bloom, **kw)
+    # multi-filter screening takes the same banked path
+    cm_banked = classify_multi(reads, {"eco": bloom}, **kw)
     a = {r["read_id"]: r["contaminated"] for r in plain.collect()}
     b = {r["read_id"]: r["contaminated"] for r in banked.collect()}
     assert a == b
-
-    # multi-filter screening takes the same banked path
-    from facs_spark.ops.contamination import classify_multi
-    cm_plain = classify_multi(reads, {"eco": bloom}, text_col="seq",
-                              passthrough=("read_id",), tole_rate=0.3,
-                              canonicalize="dna_revcomp")
-    cm_banked = classify_multi(reads, {"eco": bloom}, text_col="seq",
-                               passthrough=("read_id",), tole_rate=0.3,
-                               canonicalize="dna_revcomp",
-                               max_bank_bytes=1024)
     ma = {r["read_id"]: r["contaminated"] for r in cm_plain.collect()}
     mb = {r["read_id"]: r["contaminated"] for r in cm_banked.collect()}
     assert ma == mb == a

@@ -51,23 +51,34 @@ def test_blob_bytes_estimates_match_reality():
             assert abs(est - dense) <= dense * 0.1 + 128, spec.kind
 
 
-def test_cbf_blob_bytes_does_not_allocate():
-    """Sizing a counting Bloom's blob reads (m, k) from the sizing
-    formula; it must not build the 57.5 MB counter array of the SQL
-    default (1M keys, p=1e-6)."""
-    import tracemalloc
-
+def test_cbf_blob_bytes_touches_no_pages():
+    """``blob_bytes`` measures a constructed sketch: the SQL-default
+    counting Bloom (1M keys, p=1e-6) is a 57.5 MB counter array of
+    calloc'd zero pages, so constructing it adds no resident memory."""
     from facs_spark.sketch.cbf import CountingBloom
+
+    def rss():
+        with open("/proc/self/statm") as fh:
+            return int(fh.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+
     spec = SketchSpec.make("cbf", "x", capacity=1_000_000, error_rate=1e-6)
-    tracemalloc.start()
-    try:
-        est = spec.blob_bytes()
-        _cur, peak = tracemalloc.get_traced_memory()
-    finally:
-        tracemalloc.stop()
-    assert peak < 1 << 20, peak
+    before = rss()
+    sk = spec.new_sketch()
+    assert rss() - before < 4 * MB
     m, _k = CountingBloom.size_for(1_000_000, 1e-6)
-    assert est == m * 2 + 64
+    assert sk.counters.nbytes == m * 2
+    assert spec.blob_bytes() == m * 2 + 64
+
+
+def test_spec_rejects_unknown_param():
+    """A param the sketch constructor does not take raises instead of
+    silently building the class default (``q=12`` used to give p=14)."""
+    with pytest.raises(TypeError, match="'q'"):
+        SketchSpec.make("hll", "x", q=12).new_sketch()
+    with pytest.raises(TypeError, match="'eps'"):
+        SketchSpec.make("cms", "x", eps=1e-3).blob_bytes()
+    with pytest.raises(ValueError, match="unknown sketch kind"):
+        SketchSpec.make("hyperloglog", "x").new_sketch()
 
 
 def test_suggestion_tables_reference_values():
@@ -116,19 +127,18 @@ def test_split_banks_counts():
 
 def test_bloom_payload_banks_above_threshold(monkeypatch):
     """The broadcast payload is the plain blob up to the bank threshold
-    and banks strictly above it or when a bank size is given; either
-    form decodes to the same filter."""
+    (read at call time) and banks strictly above it; either form
+    decodes to the same filter."""
     from facs_spark.sketch import bloom as bloom_mod
     bf = BloomFilter.create(capacity=10_000, error_rate=0.01, k_mer=8)
     bf.add_batch(np.arange(640, dtype=np.uint8).reshape(-1, 8))
     blob = bf.to_bytes()
     assert bf.to_payload() == blob
-    assert bf.to_payload(1024) == bf.split_banks(1024)
     monkeypatch.setattr(bloom_mod, "_BANK_BYTES", len(blob))
     assert bf.to_payload() == blob
     monkeypatch.setattr(bloom_mod, "_BANK_BYTES", len(blob) - 1)
     assert bf.to_payload() == bf.split_banks(len(blob) - 1)
-    for payload in (blob, bytearray(blob), bf.to_payload(1024)):
+    for payload in (blob, bytearray(blob), bf.split_banks(1024)):
         rt = BloomFilter.from_payload(payload)
         assert (rt.vector == bf.vector).all()
         assert rt.to_bytes() == blob

@@ -514,6 +514,26 @@ def test_checkpoint_build_and_resume(spark, docs):
         assert rows4 == rows1 + 100
 
 
+def test_resume_uses_build_fanin(spark, docs, monkeypatch):
+    """A checkpoint of wide partials resumes with the fan-in
+    ``build_sketch`` uses for the same spec (read from the manifest),
+    not the small-blob constant."""
+    from facs_spark.ops import sketch_agg
+    spec = SketchSpec.make("cms", "doc_id", epsilon=1e-5)
+    fanin = sketch_agg._fanin
+    assert fanin(spec) < sketch_agg._FANIN, "fixture must be a wide sketch"
+    calls = []
+    monkeypatch.setattr(sketch_agg, "_fanin",
+                        lambda s: calls.append(s) or fanin(s))
+    build_sketch(docs, spec)
+    with tempfile.TemporaryDirectory() as td:
+        path = os.path.join(td, "ckpt")
+        checkpoint_build(docs, spec, path, split_id="s1")
+        resume(spark, path)
+    # build_sketch, checkpoint_build's resume, the cold resume
+    assert calls == [spec] * 3
+
+
 # ------------------------------------------------------------ multimodal
 def test_media_plumbing(spark, docs):
     media = synth_media(docs.select("doc_id").limit(50), "doc_id")

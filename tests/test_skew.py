@@ -1,9 +1,8 @@
 """Skew helpers: salted paths must be byte-equivalent to plain plans."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from facs_spark.ops.skew import salted_grouped_agg, salted_join, with_salt
+from facs_spark.ops.skew import salted_join
 from facs_spark.session import get_spark
 
 SF = "/root/testdata/sf0.001"
@@ -25,30 +24,6 @@ def test_salted_join_equals_plain(spark):
     a = {r["p_brand"]: r["count"] for r in plain.collect()}
     b = {r["p_brand"]: r["count"] for r in salted.collect()}
     assert a == b
-
-
-def test_salted_grouped_agg_equals_plain(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plain = {(r["lang"]): (r["n"], r["s"], r["mn"], r["mx"]) for r in
-             docs.groupBy("lang").agg(
-                 F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("s"),
-                 F.min("n_chars").alias("mn"),
-                 F.max("n_chars").alias("mx")).collect()}
-    salted = {(r["lang"]): (r["n"], r["s"], r["mn"], r["mx"]) for r in
-              salted_grouped_agg(docs, "lang",
-                                 [("*", "count", "n"),
-                                  ("n_chars", "sum", "s"),
-                                  ("n_chars", "min", "mn"),
-                                  ("n_chars", "max", "mx")],
-                                 nsalt=8).collect()}
-    assert plain == salted
-
-
-def test_with_salt_range(spark):
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    salts = with_salt(docs, "lang", 8).select("_salt").distinct().collect()
-    vals = {r["_salt"] for r in salts}
-    assert vals <= set(range(8)) and len(vals) > 1
 
 
 def test_bloom_prejoin_equals_plain_join(spark):
@@ -114,7 +89,7 @@ def test_bloom_key_filter_banked(spark):
         "bloom", "k", prep="raw", capacity=3, error_rate=1e-6))
     whole = {r["v"] for r in
              bloom_key_filter(probe, "k", bloom.to_bytes()).collect()}
-    banks = bloom.to_payload(max(1, bloom.vector.nbytes // 3))
+    banks = bloom.split_banks(max(1, bloom.vector.nbytes // 3))
     assert isinstance(banks, list) and len(banks) >= 3, \
         "fixture must split the bits over several banks"
     banked = {r["v"] for r in

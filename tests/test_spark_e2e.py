@@ -9,7 +9,8 @@ import __spark_entry__ as entry_mod
 from facs_spark.kernels.shingle import shingle_batch
 from facs_spark.ops.contamination import (build_reference_bloom,
                                           classify_pages, remove_split)
-from facs_spark.ops.sketch_agg import SketchSpec, build_sketch, grouped_sketches
+from facs_spark.ops.sketch_agg import (KINDS, SketchSpec, build_sketch,
+                                       grouped_sketches)
 from facs_spark.session import get_spark
 from facs_spark.sketch import BloomFilter, sketch_from_bytes
 
@@ -59,16 +60,35 @@ def test_distributed_build_equals_local_build(spark, docs):
     assert dist.inserts <= 2 * local.inserts
 
 
-def test_tree_merge_multi_level(spark, docs):
-    """fanin=2 forces multiple applyInPandas merge levels; result must
-    equal the flat merge."""
+def test_tree_merge_multi_level(spark, docs, monkeypatch):
+    """A fan-in constant of 2 forces multiple applyInPandas merge
+    levels over 8 partials; the result must equal the flat merge."""
+    from facs_spark.ops import sketch_agg
     ref = docs.filter(F.col("source") == "src0").repartition(8)
     spec = SketchSpec.make("bloom", "text", prep="kgram", k=15,
                            capacity=50_000, error_rate=0.001)
-    deep, rows_deep = build_sketch(ref, spec, fanin=2)
-    flat, rows_flat = build_sketch(ref, spec, fanin=1000)
+    flat, rows_flat = build_sketch(ref, spec)
+    monkeypatch.setattr(sketch_agg, "_FANIN", 2)
+    deep, rows_deep = build_sketch(ref, spec)
     assert rows_deep == rows_flat
     assert (deep.vector == flat.vector).all()
+
+
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_every_kind_builds_from_defaults(spark, kind):
+    """Every kind of the kind table builds from a param-less spec —
+    the sketch class's own defaults — through ``build_sketch``, and
+    its blob round-trips through ``sketch_from_bytes``."""
+    import pandas as pd
+    pdf = pd.DataFrame({"x": np.arange(50, dtype=np.int64)})
+    pdf["v"] = [np.full(64, i, dtype=np.float64) for i in range(50)]
+    df = spark.createDataFrame(pdf, "x long, v array<double>").repartition(2)
+    spec = SketchSpec.make(kind, "v" if kind == "fd" else "x")
+    sk, rows = build_sketch(df, spec)
+    assert rows == 50
+    assert type(sk) is type(spec.new_sketch())
+    blob = sk.to_bytes()
+    assert sketch_from_bytes(blob).to_bytes() == blob
 
 
 def test_remove_split_partitions_disjoint(spark, docs):

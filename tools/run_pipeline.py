@@ -30,7 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(
 from pyspark.sql import functions as F  # noqa: E402
 
 from facs_spark.ops.checkpoint import checkpoint_build, lineage  # noqa: E402
-from facs_spark.ops.sketch_agg import SketchSpec  # noqa: E402
+from facs_spark.ops.sketch_agg import KINDS, SketchSpec  # noqa: E402
 from facs_spark.session import get_spark  # noqa: E402
 
 
@@ -39,7 +39,7 @@ def main(argv=None) -> int:
     ap.add_argument("--input", required=True)
     ap.add_argument("--column", required=True)
     ap.add_argument("--sketch", default="bloom",
-                    choices=["bloom", "hll", "cms", "tdigest", "kll", "theta"])
+                    choices=sorted(KINDS))
     ap.add_argument("--prep", default=None,
                     help="kgram|tokens|raw (default: kgram for bloom)")
     ap.add_argument("--k", type=int, default=15)
@@ -54,18 +54,10 @@ def main(argv=None) -> int:
     spark = get_spark("facs_pipeline")
     df = spark.read.parquet(args.input)
     prep = args.prep or ("kgram" if args.sketch == "bloom" else "raw")
-    if args.sketch == "bloom":
-        spec = SketchSpec.make("bloom", args.column, prep=prep, k=args.k,
-                               capacity=args.capacity,
-                               error_rate=args.error_rate)
-    elif args.sketch == "cms":
-        spec = SketchSpec.make("cms", args.column, prep=prep)
-    elif args.sketch == "theta":
-        spec = SketchSpec.make("theta", args.column, prep=prep)
-    elif args.sketch in ("tdigest", "kll"):
-        spec = SketchSpec.make(args.sketch, args.column)
-    else:
-        spec = SketchSpec.make("hll", args.column, prep=prep)
+    bloom = (dict(k=args.k, capacity=args.capacity,
+                  error_rate=args.error_rate)
+             if args.sketch == "bloom" else {})
+    spec = SketchSpec.make(args.sketch, args.column, prep=prep, **bloom)
 
     sketch = None
     for split in range(args.splits):
