@@ -30,9 +30,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
+import pyarrow as pa
 
 from ..sketch.bloom import BloomFilter
-from .shingle import (encode_batch, flat_positions,
+from .shingle import (as_string_array, encode_batch, flat_positions,
                       quick_probe_positions_batch, windows_at)
 
 
@@ -65,17 +66,20 @@ def classify_batch(texts, bloom: BloomFilter, k: int, tole_rate: float,
                    canonicalize=None) -> ClassifyResult:
     """Classify a batch of page texts against a broadcast Bloom filter.
 
+    ``texts``: an Arrow string array, or any sequence of str/None.
     ``canonicalize``: optional ``texts -> texts`` second-pass transform
-    (the reverse-complement analogue); pages still clean after the
-    forward pass are re-checked in canonicalized space.
+    on a list of str/None (the reverse-complement analogue); pages
+    still clean after the forward pass are re-checked in canonicalized
+    space.
     """
+    texts = as_string_array(texts)
     res = _classify_once(texts, bloom, k, tole_rate)
     if canonicalize is not None:
         clean = ~res.contaminated
         if clean.any():
-            texts_arr = np.asarray(texts, dtype=object)
-            res2 = _classify_once(canonicalize(texts_arr[clean]), bloom, k,
-                                  tole_rate)
+            res2 = _classify_once(
+                canonicalize(texts.filter(pa.array(clean)).to_pylist()),
+                bloom, k, tole_rate)
             # merge: a clean page flips if its canonical form scores;
             # per-page score is the best of the two passes (the
             # reference returns the passing check's result), match_time
@@ -115,8 +119,19 @@ def _classify_once(texts, bloom: BloomFilter, k: int,
         n_wins = lengths[esc] - k + 1  # all ≥ 1 (escalated ⇒ L ≥ k)
         sub_idx, f_pos = flat_positions(n_wins)
         f_doc = esc[sub_idx]
-        f_hits = bloom.contains_batch(
-            windows_at(buf, offsets[:-1][f_doc] + f_pos, k))
+        # An escalated page's quick positions are among its full-check
+        # windows (p % k == 0, plus the right-aligned tail): fill those
+        # from the quick answers and probe only the rest.
+        q_esc = np.flatnonzero(escalated[q_doc])
+        first = np.zeros(n_docs, dtype=np.int64)
+        first[esc] = np.cumsum(n_wins) - n_wins
+        known = first[q_doc[q_esc]] + q_pos[q_esc]
+        f_hits = np.zeros(f_pos.size, dtype=bool)
+        f_hits[known] = True
+        rest = np.flatnonzero(~f_hits)
+        f_hits[known] = q_hits[q_esc]
+        f_hits[rest] = bloom.contains_batch(
+            windows_at(buf, (offsets[:-1][f_doc] + f_pos)[rest], k))
         # match_time per doc
         match_time = np.bincount(f_doc[f_hits], minlength=n_docs)
         # run starts: hit with no hit at previous window of same doc

@@ -3,11 +3,12 @@
 The reference walks each read with a C pointer (stride-1 build windows
 ``facs/build.c:199-234``, stride-k probe windows ``facs/tool.c:66-90``).
 Here a whole Arrow batch of pages is shingled at once: all texts are
-lowercased (``normal_lower`` parity, facs/bloom.c:111-119), UTF-8
-encoded into ONE contiguous byte buffer, and
-``np.lib.stride_tricks.sliding_window_view`` exposes every length-k
-window as a zero-copy (N, k) matrix; windows that straddle a document
-boundary are masked out by offset arithmetic.  No per-row Python.
+lowercased (``normal_lower`` parity, facs/bloom.c:111-119) in ONE
+contiguous UTF-8 byte buffer (an Arrow string array's own), and a
+zero-copy view of one k-byte record per buffer offset yields the
+windows at any start positions as one (N, k) gather; windows that
+straddle a document boundary are never asked for (offset arithmetic).
+No per-row Python.
 """
 
 from __future__ import annotations
@@ -15,7 +16,7 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import numpy as np
-from numpy.lib.stride_tricks import sliding_window_view
+import pyarrow as pa
 
 
 @dataclass
@@ -36,21 +37,37 @@ class ShingleBatch:
     doc_offsets: np.ndarray  # start offset of each doc in the buffer
 
 
+def as_string_array(texts) -> pa.Array:
+    """``texts`` as an Arrow string array: an Arrow array as it is, any
+    other sequence through ``pa.array`` (None → NULL)."""
+    if isinstance(texts, pa.Array):
+        return texts
+    return pa.array(texts, pa.string())
+
+
 def encode_batch(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Normalize + UTF-8 encode a batch into (buffer, offsets, lengths).
 
-    Lowercasing is ASCII-only, applied as one vectorized pass over the
-    shared byte buffer — exactly the reference's per-byte C ``tolower``
-    (``normal_lower``, facs/bloom.c:111-119), and cheaper than
-    allocating a lowered copy of every string.
+    The Arrow string array's own offsets and UTF-8 data buffer are
+    read in place (32- or 64-bit offsets, any slice); a NULL page has
+    length 0.  ``offsets[d]`` is page d's start in ``buffer``.  The one
+    copy is the writable buffer that lowercasing needs: ASCII-only, one
+    vectorized pass — exactly the reference's per-byte C ``tolower``
+    (``normal_lower``, facs/bloom.c:111-119).
     """
-    enc = [("" if t is None else t).encode("utf-8") for t in texts]
-    lengths = np.fromiter((len(b) for b in enc), dtype=np.int64, count=len(enc))
-    offsets = np.zeros(len(enc) + 1, dtype=np.int64)
-    np.cumsum(lengths, out=offsets[1:])
-    # bytearray join → writable buffer in ONE allocation (np.frombuffer
-    # over bytes would be read-only and force a second full copy)
-    buf = np.frombuffer(bytearray().join(enc), dtype=np.uint8)
+    arr = as_string_array(texts)
+    n = len(arr)
+    _validity, off_buf, data = arr.buffers()[:3]
+    width = 8 if pa.types.is_large_string(arr.type) else 4
+    offsets = np.frombuffer(off_buf, dtype=f"<i{width}", count=n + 1,
+                            offset=arr.offset * width).astype(np.int64)
+    lengths = np.diff(offsets)
+    if arr.null_count:  # a NULL slot's bytes (if any) are not text
+        lengths[arr.is_null().to_numpy(zero_copy_only=False)] = 0
+    lo, hi = int(offsets[0]), int(offsets[-1])
+    offsets -= lo
+    buf = (np.frombuffer(data, dtype=np.uint8, count=hi - lo, offset=lo).copy()
+           if hi > lo else np.empty(0, dtype=np.uint8))
     if buf.size:
         upper = (buf >= 65) & (buf <= 90)  # 'A'..'Z'
         buf[upper] += 32
@@ -80,8 +97,7 @@ def shingle_batch(texts, k: int) -> ShingleBatch:
     np.cumsum(n_wins_per_doc, out=starts[1:])
     win_pos = np.arange(total, dtype=np.int64) - starts[:-1][doc_idx]
     abs_pos = offsets[:-1][doc_idx] + win_pos
-    all_windows = sliding_window_view(buf, k)  # zero-copy (len(buf)-k+1, k)
-    return ShingleBatch(windows=all_windows[abs_pos], doc_idx=doc_idx,
+    return ShingleBatch(windows=windows_at(buf, abs_pos, k), doc_idx=doc_idx,
                         win_pos=win_pos, doc_lengths=lengths,
                         doc_offsets=offsets[:-1])
 
@@ -114,7 +130,11 @@ def quick_probe_positions_batch(lengths: np.ndarray, k: int):
 
 
 def windows_at(buf: np.ndarray, abs_pos: np.ndarray, k: int) -> np.ndarray:
-    """Materialize only the requested windows from the shared buffer."""
+    """Materialize only the requested windows from the shared buffer:
+    one k-byte record per window start (a gather of void records is ~2x
+    faster than fancy-indexing a 2-D sliding-window view)."""
     if abs_pos.size == 0 or buf.size < k:
         return np.empty((0, k), dtype=np.uint8)
-    return sliding_window_view(buf, k)[abs_pos]
+    records = np.ndarray(buffer=buf, dtype=np.dtype((np.void, k)),
+                         shape=(buf.size - k + 1,), strides=(1,))
+    return records[abs_pos].view(np.uint8).reshape(-1, k)

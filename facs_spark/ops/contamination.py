@@ -26,6 +26,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from ..kernels.classify import CANONICALIZERS, classify_batch
@@ -75,26 +76,29 @@ def _classify_kernel(bc_blobs, tags: tuple[dict, ...],
     """Each cache-resident slice is probed against every broadcast
     filter in turn — facs's multi-filter screen runs ``query()`` once
     per filter (facs/file_dir.c:104-129).  Filter i uses its own k_mer
-    and ``toles[i]``; its rows carry ``tags[i]`` as constant columns."""
+    and ``toles[i]``; its rows carry ``tags[i]`` as constant columns.
+    Arrow in and out: the text column is read in place, passthrough
+    columns go back as they came."""
     canon_fn = CANONICALIZERS[canonicalize] if canonicalize else None
 
     def run(iterator):
         blooms = [BloomFilter.from_payload(b) for b in bc_blobs.value]
         for batch in iterator:
-            for lo in range(0, len(batch), _KERNEL_BATCH):
-                sub = batch.iloc[lo:lo + _KERNEL_BATCH]
-                texts = sub[text_col].tolist()
+            for lo in range(0, batch.num_rows, _KERNEL_BATCH):
+                sub = batch.slice(lo, _KERNEL_BATCH)
+                texts = sub.column(text_col)
                 for bloom, tole, tag in zip(blooms, toles, tags):
                     res = classify_batch(texts, bloom, bloom.k_mer or 15,
                                          tole, canonicalize=canon_fn)
-                    out = {c: sub[c] for c in passthrough}
-                    out.update(tag)
+                    out = {c: sub.column(c) for c in passthrough}
+                    out.update((c, pa.array([v] * sub.num_rows, pa.string()))
+                               for c, v in tag.items())
                     out["contaminated"] = res.contaminated
                     out["match_score"] = res.score
                     out["match_time"] = res.match_time
                     out["text_len"] = res.lengths
                     out["escalated"] = res.escalated
-                    yield pd.DataFrame(out)
+                    yield pa.RecordBatch.from_pydict(out)
 
     return run
 
@@ -104,7 +108,7 @@ def _classify_plan(df: DataFrame, blooms: list[BloomFilter],
                    text_col: str, passthrough: tuple[str, ...],
                    tole_rate: float | None,
                    canonicalize: str | None) -> DataFrame:
-    """One mapInPandas over ``df`` probing every filter in ``blooms``;
+    """One mapInArrow over ``df`` probing every filter in ``blooms``;
     ``tag_fields`` are the schema fields of the ``tags`` columns."""
     spark = df.sparkSession
     ensure_shipped(spark)
@@ -118,7 +122,7 @@ def _classify_plan(df: DataFrame, blooms: list[BloomFilter],
     dtypes = {f.name: f.dataType.simpleString() for f in sel.schema.fields}
     schema = ", ".join([f"{c} {dtypes[c]}" for c in cols]
                        + list(tag_fields) + [CLASSIFY_COLS])
-    return sel.mapInPandas(
+    return sel.mapInArrow(
         _classify_kernel(bc, tags, toles, cols, text_col, canonicalize),
         schema=schema)
 

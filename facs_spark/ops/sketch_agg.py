@@ -20,6 +20,7 @@ Map-side partial aggregation is total.
 from __future__ import annotations
 
 import math
+import sys
 import time
 from dataclasses import dataclass, field
 
@@ -51,7 +52,16 @@ def _sized(create):
 
 
 def _small(_sk):
-    return 64 << 10  # t-digest/KLL/DDSketch/moments: small, bounded
+    return 64 << 10  # t-digest/KLL/moments: small, bounded
+
+
+# every positive double's DDSketch key ceil(ln x / ln gamma) lies in
+# this span of ln x; ``to_bytes`` writes 16 B (key, count) per bucket
+_LN_DOUBLES = math.log(sys.float_info.max) - math.log(math.ulp(0.0))
+
+
+def _dd_bytes(sk):
+    return 16 * (math.ceil(_LN_DOUBLES / math.log(sk.gamma)) + 1)
 
 
 # kind -> (constructor taking the spec's params as keywords, blob bytes
@@ -72,7 +82,7 @@ KINDS = {
     "fd": (FrequentDirections, lambda sk: sk.l * sk.d * 8),
     "tdigest": (TDigest, _small),
     "kll": (KLL, _small),
-    "ddsketch": (DDSketch, _small),
+    "ddsketch": (DDSketch, _dd_bytes),
     "moments": (MomentsSketch, _small),
 }
 

@@ -40,6 +40,12 @@ _STAT = struct.Struct("<QIQdIQ")  # m, k, capacity, e, k_mer, inserts
 # filter above 1 GiB ships as banks (SURVEY §4 physical notes)
 _BANK_BYTES = 1 << 30
 
+# member memo: a direct-mapped table per key width, indexed by the top
+# 16 bits of a key's splitmix tag; (lanes + 1) * 8 bytes per slot, so
+# ~1.5 MB at k=15 however many keys a task probes
+_MEMO_SLOTS = 1 << 16
+_MEMO_SHIFT = np.uint64(64 - 16)
+
 # byte-wise popcount LUT: GiB-scale vectors popcount in one fancy-index
 # + sum, no 8× unpackbits blow-up
 _POPCOUNT = np.array([bin(i).count("1") for i in range(256)],
@@ -57,6 +63,18 @@ def _runs(lanes: np.ndarray, order: np.ndarray):
     return s, new
 
 
+def _tags(lanes: np.ndarray) -> np.ndarray:
+    """Splitmix tag of every key of a ``pack_lanes`` matrix: its lanes
+    folded into one word, then mixed (the dedup's sort key and the
+    member memo's slot + tag)."""
+    n_lanes, n = lanes.shape
+    mixed = lanes[0].copy() if n_lanes else np.zeros(n, dtype=np.uint64)
+    with np.errstate(over="ignore"):
+        for j in range(1, n_lanes):
+            mixed ^= lanes[j] * np.uint64(0xC2B2AE3D27D4EB4F + 2 * j - 2)
+    return splitmix64(mixed)
+
+
 @dataclass
 class BloomFilter:
     """Mergeable Bloom sketch over fixed-length byte keys."""
@@ -65,6 +83,9 @@ class BloomFilter:
     k_mer: int = 0  # key length this filter was built for (0 = any)
     inserts: int = 0
     vector: np.ndarray = field(default=None, repr=False)  # uint8 bit array
+    # key width -> member memo table (``_memo_probe``); not serialized
+    _memo: dict = field(default_factory=dict, init=False, repr=False,
+                        compare=False)
 
     MAGIC = _MAGIC
 
@@ -104,13 +125,14 @@ class BloomFilter:
                 np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8))
 
     @staticmethod
-    def _unique_lanes(lanes: np.ndarray):
-        """Distinct keys of a ``pack_lanes`` matrix + inverse map.
+    def _unique_lanes(lanes: np.ndarray, ck: np.ndarray | None = None):
+        """Distinct keys of a ``pack_lanes`` matrix + inverse map
+        (``ck``: the keys' ``_tags``, when already computed).
 
         k-gram windows repeat heavily, so hashing only distinct keys
         cuts the hash passes with identical bits.  One value sort (~2x
-        faster than an argsort) clusters the keys by the top bits of a
-        splitmix-mixed key, each key's position in the low bits; runs
+        faster than an argsort) clusters the keys by the top bits of
+        their splitmix tags, each key's position in the low bits; runs
         split where the lanes differ.  A batch in which distinct keys
         share those top bits (they could interleave and miscount
         ``add_batch``'s novel keys) regroups by all 64 bits.
@@ -118,11 +140,8 @@ class BloomFilter:
         n_lanes, n = lanes.shape
         if n <= 1 or n_lanes == 0:
             return lanes, None
-        mixed = lanes[0].copy()
-        with np.errstate(over="ignore"):
-            for j in range(1, n_lanes):
-                mixed ^= lanes[j] * np.uint64(0xC2B2AE3D27D4EB4F + 2 * j - 2)
-        ck = splitmix64(mixed)
+        if ck is None:
+            ck = _tags(lanes)
         shift = np.uint64(n.bit_length())
         packed = ck >> shift << shift
         packed |= np.arange(n, dtype=np.uint64)
@@ -171,9 +190,10 @@ class BloomFilter:
                        cache: dict | None = None) -> np.ndarray:
         """Boolean membership for an (n, L) uint8 key matrix.
 
-        Each key is packed into lanes once and deduplicated; then every
-        hash round probes only the surviving candidates (the vectorized
-        analogue of ``bloom_test``'s first-unset-bit return,
+        Each key is packed into lanes once; keys the member memo does
+        not hold are deduplicated and go through ``_probe``, where
+        every hash round probes only the surviving candidates (the
+        vectorized analogue of ``bloom_test``'s first-unset-bit return,
         facs/bloom.c:146-157).
 
         ``cache``: optional cross-batch memo {(L, key lanes): bool}.
@@ -182,22 +202,64 @@ class BloomFilter:
         (boilerplate) heavily enough that this removes most hash work.
         """
         width = keys.shape[1]
-        uniq, inv = self._unique_lanes(pack_lanes(keys))
         if cache is None:
-            out = self._probe(uniq, width)
-        else:
-            memo = [(width, r.tobytes()) for r in uniq.T]
-            known = [cache.get(key) for key in memo]
-            out = np.array(known, dtype=bool)  # None (unknown) -> False
-            missing = [i for i, v in enumerate(known) if v is None]
-            if missing:
-                out[missing] = self._probe(uniq[:, missing], width)
-            # evict AFTER this batch's answers are assembled, then
-            # repopulate with the current working set
-            if len(cache) > 4_000_000:  # bound worker memory
-                cache.clear()
-            cache.update(zip(memo, out.tolist()))
+            return self._memo_probe(pack_lanes(keys), width)
+        uniq, inv = self._unique_lanes(pack_lanes(keys))
+        memo = [(width, r.tobytes()) for r in uniq.T]
+        known = [cache.get(key) for key in memo]
+        out = np.array(known, dtype=bool)  # None (unknown) -> False
+        missing = [i for i, v in enumerate(known) if v is None]
+        if missing:
+            out[missing] = self._probe(uniq[:, missing], width)
+        # evict AFTER this batch's answers are assembled, then
+        # repopulate with the current working set
+        if len(cache) > 4_000_000:  # bound worker memory
+            cache.clear()
+        cache.update(zip(memo, out.tolist()))
         return out if inv is None else out[inv]
+
+    def _memo_probe(self, lanes: np.ndarray, width: int) -> np.ndarray:
+        """Membership of packed keys: a fixed-size table of keys already
+        answered "member" first, then dedup + ``_probe`` for the rest.
+
+        A member takes all k hash rounds, and a task meets the same
+        reference k-grams in every slice; the memo answers them with
+        one gather per lane, before the dedup sorts them.  Slot = top
+        16 bits of the key's splitmix tag; an entry is the tag (``| 1``,
+        so an empty slot never matches) and the key's lanes, and a hit
+        must equal it on every lane.  Only ``_probe``'s True answers are
+        written, one key per slot, the newest winning, so answers are
+        exact, and they stay exact under ``add_batch``, which only ever
+        sets bits.
+        """
+        table = self._memo.get(width)
+        if table is None:
+            table = self._memo[width] = np.zeros(
+                (lanes.shape[0] + 1, _MEMO_SLOTS), dtype=np.uint64)
+        ck = _tags(lanes)
+        slot = (ck >> _MEMO_SHIFT).astype(np.intp)
+        out = table[0].take(slot) == (ck | np.uint64(1))
+        for j, lane in enumerate(lanes, 1):
+            out &= table[j].take(slot) == lane
+        miss = np.flatnonzero(~out)
+        if miss.size:
+            uniq, inv = self._unique_lanes(lanes.take(miss, axis=1),
+                                           ck.take(miss))
+            found = self._probe(uniq, width)
+            if inv is None:
+                out[miss], first = found, miss
+            else:
+                out[miss] = found[inv]
+                first = np.empty(found.size, dtype=np.intp)
+                first[inv] = miss  # a position of each distinct key
+            new = first[found]
+            # one write per slot (the last key that maps to it), so an
+            # entry never mixes two keys' tag and lanes
+            put, last = np.unique(slot[new[::-1]], return_index=True)
+            new = new[new.size - 1 - last]
+            table[0, put] = ck[new] | np.uint64(1)
+            table[1:, put] = lanes[:, new]
+        return out
 
     def _probe(self, lanes: np.ndarray, width: int) -> np.ndarray:
         out = np.zeros(lanes.shape[1], dtype=bool)

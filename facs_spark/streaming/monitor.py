@@ -51,7 +51,7 @@ def classify_stream(pages: DataFrame, bloom: BloomFilter,
                     passthrough: tuple[str, ...] = ("url", "warc_ts",
                                                     "lang")) -> DataFrame:
     """Streaming classification — the batch kernel applied to a
-    streaming DataFrame (mapInPandas is streaming-safe; the filter
+    streaming DataFrame (mapInArrow is streaming-safe; the filter
     broadcasts once per executor exactly as in batch)."""
     return classify_pages(pages, bloom, text_col=text_col,
                           passthrough=passthrough, tole_rate=tole_rate)

@@ -129,6 +129,41 @@ def test_classify_matches_sequential_oracle():
         assert abs(float(res.score[i]) - want_score) < 1e-12, f"doc {i}"
 
 
+def test_full_check_probes_only_windows_the_quick_pass_left():
+    """An escalated page's quick-pass answers are reused by its full
+    check: the full check sends sum(L - k + 1) minus those pages' quick
+    windows to the filter, and the result still equals the oracle."""
+    k, tole = 8, 0.3
+    ref_texts = [make_text(VOCAB_REF, 40, s) for s in range(5)]
+    member = exact_member_set(ref_texts, k)
+    bf = BloomFilter.create(capacity=len(member) + 1, error_rate=1e-9,
+                            k_mer=k)
+    bf.add_batch(shingle_batch(ref_texts, k).windows)
+    # lengths with L % k == 0, L % k != 0 and L == k among the hits
+    pages = ([ref_texts[0][:n] for n in (8, 16, 23, 40, 57, 64)]
+             + [make_text(VOCAB_REF, 30, 400 + s) for s in range(6)]
+             + [make_text(VOCAB_CLEAN, 30, 500 + s) for s in range(6)]
+             + [make_text(VOCAB_CLEAN, 6, 600) + ref_texts[1][:20], None])
+    sent = []
+    inner = bf.contains_batch
+    bf.contains_batch = lambda keys: (sent.append(keys.shape[0]),
+                                      inner(keys))[1]
+    res = classify_batch(pages, bf, k, tole)
+    lengths = [len((t or "").encode()) for t in pages]
+    esc = [i for i, t in enumerate(pages)
+           if sequential_oracle(t or "", member, k, 0.0)[0]]
+    assert esc == np.flatnonzero(res.escalated).tolist() and len(esc) > 10
+    assert len(sent) == 2
+    assert sent[1] == sum(lengths[i] - k + 1 - quick_probe_positions(
+        lengths[i], k).size for i in esc)
+    for i, t in enumerate(pages):
+        want_c, want_mt, want_score = sequential_oracle(t or "", member, k,
+                                                        tole)
+        assert bool(res.contaminated[i]) == want_c, f"page {i}"
+        assert int(res.match_time[i]) == want_mt, f"page {i}"
+        assert abs(float(res.score[i]) - want_score) < 1e-12, f"page {i}"
+
+
 def test_classify_edge_pages_match_sequential_oracle():
     """NULL, empty, shorter-than-k, exactly-k and k+1 pages, windows
     that straddle astral-plane and combining characters, and a last

@@ -51,6 +51,25 @@ def test_blob_bytes_estimates_match_reality():
             assert abs(est - dense) <= dense * 0.1 + 128, spec.kind
 
 
+def test_ddsketch_blob_bytes_bounds_a_wide_input():
+    """DDSketch's bound covers every bucket a positive double can reach:
+    10^6 values spanning e^±20 at alpha=0.001 serialize 320,050 B, over
+    the flat 64 KiB the bound used to be.  At alpha=0.5 a sketch holding
+    both extreme doubles fills the whole key span and meets it."""
+    from facs_spark.sketch import DDSketch
+    dd = DDSketch(alpha=0.001)
+    rng = np.random.default_rng(0)
+    dd.update_batch(np.exp(rng.uniform(-20.0, 20.0, 1_000_000)))
+    blob = len(dd.to_bytes())
+    assert blob > 64 << 10
+    assert blob <= SketchSpec.make("ddsketch", "x", alpha=0.001).blob_bytes()
+    full = DDSketch(alpha=0.5)
+    full.update_batch([np.nextafter(0.0, 1.0), np.finfo(np.float64).max])
+    span = max(full._store) - min(full._store) + 1
+    est = SketchSpec.make("ddsketch", "x", alpha=0.5).blob_bytes()
+    assert len(full.to_bytes()) + 16 * (span - 2) <= est <= 16 * span + 128
+
+
 def test_cbf_blob_bytes_touches_no_pages():
     """``blob_bytes`` measures a constructed sketch: the SQL-default
     counting Bloom (1M keys, p=1e-6) is a 57.5 MB counter array of

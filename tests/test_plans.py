@@ -68,7 +68,7 @@ def test_classification_is_shuffle_free(spark):
     assert "hashpartitioning" not in plan.lower()
     assert "rangepartitioning" not in plan.lower()
     # the classify stage itself is a map: scan → (repartition) → kernel
-    assert _n_nodes(plan, "MapInPandas") == 1
+    assert _n_nodes(plan, "MapInArrow") == 1
     counters = contamination_counters(classified)
     cplan = _formatted(counters)
     # the only additional exchange is the 1-row final-agg gather

@@ -12,7 +12,8 @@ from facs_spark.sketch import (AmsF2, BloomFilter, CountingBloom,
                                HyperLogLog, KLL, TDigest, facs_sizing,
                                find_close_prime, is_prime, sketch_from_bytes,
                                standard_sizing)
-from facs_spark.sketch.hashing import FACS_SEEDS, splitmix64
+from facs_spark.sketch.bloom import _tags
+from facs_spark.sketch.hashing import FACS_SEEDS, pack_lanes, splitmix64
 from test_hashing import hash3_scalar
 
 rng = np.random.default_rng(7)
@@ -185,6 +186,82 @@ def test_bloom_contains_cache_matches_uncached():
         assert (bf.contains_batch(keys, cache=cache)
                 == bf.contains_batch(keys)).all()
     assert not bf.contains_batch(_exact_matrix([b"abcdefghi\x00"], 10))[0]
+
+
+def _memo_free(bf, keys):
+    """Per-key answers of ``_probe`` alone: no dedup, no member memo."""
+    return BloomFilter._probe(bf, pack_lanes(keys), keys.shape[1])
+
+
+def _probed_keys(bf):
+    """Wrap ``bf._probe`` to record how many keys reach it per call."""
+    sent, inner = [], bf._probe
+    bf._probe = lambda lanes, width: (sent.append(lanes.shape[1]),
+                                      inner(lanes, width))[1]
+    return sent
+
+
+def test_bloom_member_memo_answers_exactly():
+    """Members repeated across calls come from the memo; non-members,
+    keys under 8 bytes, widths 8 and 15 on one filter and single-key
+    calls all equal a memo-free probe, before and after more adds."""
+    bf = BloomFilter.create(capacity=2_000, error_rate=0.01, k_mer=15)
+    k15, k8 = _keys(3_000, 15, seed=21), _keys(600, 8, seed=22)
+    k3 = _keys(40, 3, seed=23)
+    for keys in (k15[:1_000], k8[:200], k3[:10]):
+        bf.add_batch(keys)
+    sent = _probed_keys(bf)
+    for keys in (k15[:1_000], k8, k3, k15[500:2_500], k8[::-1], k3):
+        assert (bf.contains_batch(keys) == _memo_free(bf, keys)).all()
+    # second sight of members 500..999: bar the few that lost a slot to
+    # a later member, only the 1,500 new keys reach the probe
+    assert sent[0] == 1_000
+    assert 1_500 <= sent[3] <= 1_520
+    assert set(bf._memo) == {15, 8, 3}
+    for row in np.concatenate([k15[995:1_005], k15[2_990:]]):
+        one = row[None, :]
+        assert bf.contains_batch(one)[0] == _memo_free(bf, one)[0]
+    bf.add_batch(k15[1_000:1_500])  # bits only ever get set
+    for keys in (k15, k8, k3):
+        got = bf.contains_batch(keys)
+        assert (got == _memo_free(bf, keys)).all()
+        assert got[:10].all()  # every key set holds 10+ members first
+
+
+def test_bloom_member_memo_needs_every_lane():
+    """A key with a member's exact splitmix tag (so the member's slot
+    and tag) but other lanes is not answered from the memo."""
+    bf = BloomFilter.create(capacity=100, error_rate=0.01, k_mer=15)
+    x = _keys(1, 15, seed=31)
+    lane0, lane1 = (int(v) for v in pack_lanes(x)[:, 0])
+    mul, top = 0xC2B2AE3D27D4EB4F, (1 << 64) - 1
+    lane1_y = lane1 ^ 1
+    lane0_y = lane0 ^ (lane1 * mul & top) ^ (lane1_y * mul & top)
+    y = np.frombuffer(lane0_y.to_bytes(8, "little")
+                      + lane1_y.to_bytes(8, "little")[:7],
+                      dtype=np.uint8)[None, :]
+    assert _tags(pack_lanes(x))[0] == _tags(pack_lanes(y))[0]
+    assert not (x == y).all()
+    bf.add_batch(x)
+    assert bf.contains_batch(x)[0]
+    assert bf.contains_batch(y)[0] == _memo_free(bf, y)[0]
+    assert not bf.contains_batch(y)[0]
+
+
+def test_bloom_member_memo_is_fixed_size():
+    """500k distinct members later, the memo is the same table of the
+    same bytes, and colliding slots still answer exactly."""
+    keys = np.unique(_keys(520_000, 15, seed=41), axis=0)[:500_000]
+    bf = BloomFilter.create(capacity=500_000, error_rate=0.01, k_mer=15)
+    bf.add_batch(keys)
+    bf.contains_batch(keys[:10])
+    table = bf._memo[15]
+    nbytes = table.nbytes
+    for lo in range(0, keys.shape[0], 100_000):
+        assert bf.contains_batch(keys[lo:lo + 100_000]).all()
+    assert bf._memo[15] is table and table.nbytes == nbytes == 3 * 8 << 16
+    probe = np.concatenate([keys[::997], _keys(5_000, 15, seed=42)])
+    assert (bf.contains_batch(probe) == _memo_free(bf, probe)).all()
 
 
 def test_bloom_merge_equals_single_build():

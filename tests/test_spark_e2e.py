@@ -103,6 +103,84 @@ def test_remove_split_partitions_disjoint(spark, docs):
     assert not ids & ids_c
 
 
+def test_arrow_classify_kernel_matches_classify_batch(spark):
+    """classify_pages and classify_multi read the text column as Arrow
+    and write Arrow back: NULL, empty, astral and combining-character
+    pages, long/string/timestamp passthrough columns and partitions cut
+    into several 2,500-row kernel slices give exactly classify_batch's
+    five columns over the same Python lists, passthrough unchanged."""
+    import pandas as pd
+
+    from facs_spark.kernels.classify import (classify_batch,
+                                             rev_complement_batch)
+    from facs_spark.ops.contamination import (CLASSIFY_COLS, _KERNEL_BATCH,
+                                              classify_multi)
+    r = np.random.default_rng(5)
+    words = [f"w{i}ord" for i in range(400)] + ["ÉTÉ", "naïve", "😀🦄",
+                                                "e\u0301cole", "ACGTTGCA"]
+    ref = [" ".join(r.choice(words, 60)) for _ in range(40)]
+    special = [None, "", "😀" * 20, "e\u0301" * 30, "ÀB" * 40, ref[0].upper()]
+    texts = [special[i] if i < len(special) else
+             (ref[i % 40][i % 50:] if i % 3 == 0
+              else " ".join(r.choice(words, 80)))
+             for i in range(12_000)]
+    texts[3_000:3_010] = special[:6] + [None] * 4
+    pdf = pd.DataFrame({
+        "id": np.arange(len(texts), dtype=np.int64),
+        "name": [None if i % 7 == 0 else f"n{i}" for i in range(len(texts))],
+        "ts": pd.Timestamp("2024-03-01") + pd.to_timedelta(
+            np.arange(len(texts)), unit="s"),
+        "text": texts})
+    df = spark.createDataFrame(pdf)
+    blooms = {}
+    for k in (15, 12):
+        bf = BloomFilter.create(capacity=50_000, error_rate=0.001, k_mer=k)
+        bf.add_batch(shingle_batch(ref, k).windows)
+        blooms[f"k{k}"] = bf
+    cols = [c.split()[0] for c in CLASSIFY_COLS.split(", ")]
+    passthrough = ("id", "name", "ts")
+    want_rows = {row["id"]: tuple(row[c] for c in passthrough)
+                 for row in df.collect()}
+
+    def expect(bloom, canonicalize=None):
+        res = classify_batch(texts, bloom, bloom.k_mer, 0.4,
+                             canonicalize=canonicalize)
+        return {i: (bool(res.contaminated[i]), float(res.score[i]),
+                    int(res.match_time[i]), int(res.lengths[i]),
+                    bool(res.escalated[i])) for i in range(len(texts))}
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(4 * _KERNEL_BATCH))  # batches of > 1 slice
+    try:
+        out = classify_pages(df, blooms["k15"], passthrough=passthrough,
+                             tole_rate=0.4)
+        got = out.collect()
+        multi = classify_multi(df, blooms, passthrough=passthrough,
+                               tole_rate=0.4,
+                               canonicalize="dna_revcomp").collect()
+    finally:
+        spark.conf.set(key, old)
+    in_types = {f.name: f.dataType for f in df.schema.fields}
+    assert [(f.name, f.dataType) for f in out.schema.fields[:3]] == \
+        [(c, in_types[c]) for c in passthrough]
+    assert out.columns == list(passthrough) + cols
+    want = expect(blooms["k15"])
+    assert len(got) == len(texts)
+    assert sum(w[0] for w in want.values()) > 100  # pages do get flagged
+    for row in got:
+        assert tuple(row[c] for c in passthrough) == want_rows[row["id"]]
+        assert tuple(row[c] for c in cols) == want[row["id"]]
+    assert len(multi) == 2 * len(texts)
+    for name, bloom in blooms.items():
+        want = expect(bloom, rev_complement_batch)
+        rows = [row for row in multi if row["filter_name"] == name]
+        assert len(rows) == len(texts)
+        for row in rows:
+            assert tuple(row[c] for c in passthrough) == want_rows[row["id"]]
+            assert tuple(row[c] for c in cols) == want[row["id"]]
+
+
 def test_classify_sampling_pushdown(spark, docs):
     ref = docs.filter(F.col("source") == "src0")
     bloom = build_reference_bloom(ref, k=15, error_rate=1e-9)
