@@ -8,9 +8,11 @@ tables) without touching Python:
     SELECT kll_quantile(sketch, 0.5)  FROM latency_sketches
     SELECT bloom_contains(sketch, 'needle') ...
 
-All functions are Arrow-vectorized (no per-row Python); blobs are
-deserialized once per distinct blob per batch (tiny LRU inside the
-kernel) since sketch rows are few and wide.
+Every reader is one batch-shaped pandas UDF (``_reader``): it groups
+an Arrow batch's rows by their distinct blob, deserializes each blob
+once, and answers each group in one vectorized sketch call
+(``contains_values``, ``contains_batch``, ``query_batch``, ...), since
+sketch rows are few and wide.  A NULL blob reads NULL.
 """
 
 from __future__ import annotations
@@ -21,61 +23,39 @@ from pyspark.sql import SparkSession
 from pyspark.sql.functions import pandas_udf
 
 from .session import ensure_shipped
-from .sketch.hashing import ascii_lower, length_group_matrices
-
-
-def _sketch_of(blob: bytes, cache: dict):
-    # key on the FULL blob — a prefix key collides for sketches whose
-    # headers + leading registers agree (e.g. low-cardinality HLLs)
-    key = bytes(blob)
-    sk = cache.get(key)
-    if sk is None:
-        from facs_spark.sketch import sketch_from_bytes
-        if len(cache) > 64:
-            cache.clear()
-        sk = cache[key] = sketch_from_bytes(key)
-    return sk
+from .sketch import sketch_from_bytes
 
 
 def _reader(return_type: str, fn, blobs: int = 1):
-    """The one SQL reader body: a pandas UDF returning
-    ``fn(sketch, ..., *args)`` per row, where the first ``blobs``
-    columns are sketch blobs, each distinct one deserialized once per
-    Arrow batch."""
+    """The one SQL reader body: a pandas UDF whose first ``blobs``
+    columns are sketch blobs.  A batch's rows are grouped by their
+    tuple of FULL blobs (a prefix collides for sketches whose headers
+    and leading registers agree); per group it calls
+    ``fn(*sketches, *arg_slices)`` once, each further column sliced to
+    the group's rows, and a scalar result is broadcast to those rows,
+    an array result fills them in order.  Rows with a NULL blob are in
+    no group and stay NULL."""
     @pandas_udf(return_type)
     def read(*cols: pd.Series) -> pd.Series:
-        cache: dict = {}
-        return pd.Series([
-            fn(*(_sketch_of(b, cache) for b in row[:blobs]), *row[blobs:])
-            for row in zip(*cols)])
+        groups: dict[tuple, list[int]] = {}
+        for i, key in enumerate(zip(*cols[:blobs])):
+            if None not in key:
+                groups.setdefault(key, []).append(i)
+        out = np.full(len(cols[0]), None, dtype=object)
+        args = [c.to_numpy() for c in cols[blobs:]]
+        for key, rows in groups.items():
+            out[rows] = fn(*(sketch_from_bytes(bytes(b)) for b in key),
+                           *(a[rows] for a in args))
+        return pd.Series(out)
     return read
-
-
-def _key(k):
-    """Integral keys hash as int64, anything else as its str."""
-    return int(k) if isinstance(k, (int, np.integer)) else str(k)
 
 
 def _estimate(sk):
     return sk.estimate()
 
 
-def _quantile(sk, q):
-    return sk.quantile(float(q))
-
-
-def _contains(sk, k):
-    return bool(sk.contains_batch([_key(k)])[0])
-
-
-def _bloom_contains(sk, k):
-    # SAME normalization as the build side: byte-level ASCII tolower,
-    # never unicode str.lower()
-    enc = [ascii_lower(("" if k is None else str(k)).encode("utf-8"))]
-    hit = False
-    for _idx, mat in length_group_matrices(enc):
-        hit = bool(sk.contains_batch(mat)[0])
-    return hit
+def _quantiles(sk, qs):
+    return sk.quantiles(qs)
 
 
 # SQL name -> (return type, fn[, leading blob columns]) for ``_reader``
@@ -83,22 +63,22 @@ _READERS = {
     "hll_estimate": ("double", _estimate),
     "theta_estimate": ("double", _estimate),
     "ams_f2": ("double", _estimate),
-    "kll_quantile": ("double", _quantile),
-    "tdigest_quantile": ("double", _quantile),
-    "cms_count": ("long", lambda sk, k: int(sk.query_batch([k])[0])),
+    "kll_quantile": ("double", _quantiles),
+    "tdigest_quantile": ("double", _quantiles),
+    "cms_count": ("long", lambda sk, keys: sk.query_batch(keys)),
     "theta_intersect": ("double", lambda a, b: a.intersect_estimate(b), 2),
     "theta_difference": ("double", lambda a, b: a.difference_estimate(b),
                          2),
-    "bloom_contains": ("boolean", _bloom_contains),
-    "mg_estimate": ("long", lambda sk, k: int(sk.estimate(_key(k)))),
+    "bloom_contains": ("boolean", lambda sk, keys: sk.contains_values(keys)),
+    "mg_estimate": ("long", lambda sk, keys: sk.query_batch(keys)),
     # MG's error_bound is a property (N/(k+1)), not a method
     "mg_error_bound": ("long", lambda sk: int(sk.error_bound)),
-    "cs_estimate": ("double", lambda sk, k: float(sk.estimate(_key(k)))),
+    "cs_estimate": ("double", lambda sk, keys: sk.estimate_batch(keys)),
     "cs_error_bound": ("double", lambda sk: float(sk.error_bound())),
     # cuckoo blobs answer through the same probe (dispatch is by magic
     # inside sketch_from_bytes); a distinct name keeps SQL readable
-    "cbf_contains": ("boolean", _contains),
-    "cuckoo_contains": ("boolean", _contains),
+    "cbf_contains": ("boolean", lambda sk, keys: sk.contains_batch(keys)),
+    "cuckoo_contains": ("boolean", lambda sk, keys: sk.contains_batch(keys)),
 }
 
 

@@ -82,20 +82,7 @@ def shingle_batch(texts, k: int) -> ShingleBatch:
     short docs as windowless, noted in SURVEY §7).
     """
     buf, offsets, lengths = encode_batch(texts)
-    n_docs = len(lengths)
-    n_wins_per_doc = np.maximum(lengths - k + 1, 0)
-    total = int(n_wins_per_doc.sum())
-    if buf.size < k or total == 0:
-        return ShingleBatch(
-            windows=np.empty((0, k), dtype=np.uint8),
-            doc_idx=np.empty(0, dtype=np.int64),
-            win_pos=np.empty(0, dtype=np.int64),
-            doc_lengths=lengths, doc_offsets=offsets[:-1])
-    doc_idx = np.repeat(np.arange(n_docs, dtype=np.int64), n_wins_per_doc)
-    # window position within its doc: global arange minus per-doc start
-    starts = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(n_wins_per_doc, out=starts[1:])
-    win_pos = np.arange(total, dtype=np.int64) - starts[:-1][doc_idx]
+    doc_idx, win_pos = flat_positions(np.maximum(lengths - k + 1, 0))
     abs_pos = offsets[:-1][doc_idx] + win_pos
     return ShingleBatch(windows=windows_at(buf, abs_pos, k), doc_idx=doc_idx,
                         win_pos=win_pos, doc_lengths=lengths,

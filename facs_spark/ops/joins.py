@@ -22,12 +22,10 @@ side is itself a computed DataFrame.
 
 from __future__ import annotations
 
-import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from ..session import ensure_parallelism, ensure_shipped
 from ..sketch import BloomFilter
-from ..sketch.hashing import raw_key_matrices
 from .sketch_agg import SketchSpec, build_sketch
 
 _PRUNABLE = ("inner", "left_semi", "leftsemi", "semi")
@@ -35,15 +33,11 @@ _PRUNABLE = ("inner", "left_semi", "leftsemi", "semi")
 
 def _probe_masks(payload, key: str, iterator):
     """(batch, membership mask) per pandas batch, probing ``key``
-    against the Bloom ``payload`` through the SAME encoding as the
-    build side (raw_key_matrices) — a divergent copy here would prune
-    rows with real join partners."""
+    against the Bloom ``payload`` with ``contains_values``, the build
+    side's own encoding."""
     bf = BloomFilter.from_payload(payload)
     for batch in iterator:
-        mask = np.zeros(len(batch), dtype=bool)
-        for idx, mat in raw_key_matrices(batch[key]):
-            mask[idx] = bf.contains_batch(mat)
-        yield batch, mask
+        yield batch, bf.contains_values(batch[key])
 
 
 def bloom_key_filter(df: DataFrame, key: str, blob: bytes | list,
@@ -126,9 +120,10 @@ def bloom_anti_join(probe: DataFrame, build: DataFrame, key: str,
     At 100 TB of daily crawl vs an existing corpus this shuffles
     ~|matches| + FPR·|new| rows instead of the whole day: with most
     input genuinely new (the common crawl case) the anti-join's
-    shuffle collapses to the duplicate slice.  Build/probe share the
-    one raw-key encoding (``raw_key_matrices``), like every Bloom
-    path in the engine.
+    shuffle collapses to the duplicate slice.  The build
+    (``SketchSpec.update`` → ``BloomFilter.update_batch``) and the
+    probe (``bloom_key_flag`` → ``contains_values``) share the
+    filter's one raw-key encoding.
     """
     if n_keys is None:
         n_keys = build.count()

@@ -33,6 +33,7 @@ from ..sketch import (AmsF2, BloomFilter, CountingBloom, CountMinSketch,
                       CountSketch, CuckooFilter, DDSketch, FrequentDirections,
                       HyperLogLog, KLL, MisraGries, MomentsSketch, TDigest,
                       ThetaSketch, merge_blobs, sketch_from_bytes)
+from ..sketch.hashing import key_strings
 
 PARTIAL_SCHEMA = ("partition_id long, rows_seen long, wall_ms double, "
                   "sketch binary")
@@ -138,9 +139,8 @@ class SketchSpec:
             sb = shingle_batch(series.tolist(), self.param("k", _KGRAM))
             sketch.add_batch(sb.windows)
         elif self.prep == "tokens":
-            # prep dispatch must precede the kind dispatch: a bloom
-            # spec with prep="tokens" previously fell into the raw-key
-            # branch and silently hashed whole column values
+            # prep dispatch precedes the kind dispatch, so every kind
+            # (bloom too) sees tokens, never whole column values;
             # single-space split (not str.split()) so the token multiset
             # matches the exact verifiers (F.split(text, ' ') in Spark,
             # string_split in the DuckDB oracle) on any whitespace
@@ -148,20 +148,7 @@ class SketchSpec:
             for t in series:
                 if t:
                     toks.extend(x for x in t.split(" ") if x)
-            if self.kind == "bloom":
-                from ..sketch.hashing import ascii_lower, length_group_matrices
-                enc = [ascii_lower(t.encode("utf-8")) for t in toks]
-                for _idx, mat in length_group_matrices(enc):
-                    sketch.add_batch(mat)
-            else:
-                sketch.update_batch(toks)
-        elif self.kind == "bloom":
-            # raw keys into a Bloom: the ONE shared build/probe
-            # encoding (int64 8-byte keys; lowercased length-grouped
-            # string matrices) — see raw_key_matrices
-            from ..sketch.hashing import raw_key_matrices
-            for _idx, mat in raw_key_matrices(series):
-                sketch.add_batch(mat)
+            sketch.update_batch(toks)
         elif self.kind == "fd":
             # array<float> column: one (m, d) slab per Arrow batch —
             # a single vectorized update (and at most one SVD) per batch
@@ -185,7 +172,7 @@ class SketchSpec:
                 vals = vals[~np.isnan(vals)] if vals.dtype.kind == "f" else vals
                 sketch.update_batch(vals.astype(np.int64))
             else:
-                sketch.update_batch(series.fillna("").astype(str).tolist())
+                sketch.update_batch(key_strings(series))
         return n
 
 

@@ -190,13 +190,11 @@ def q02_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     def probe_kernel(iterator):
         import pandas as pd
         from facs_spark.sketch import sketch_from_bytes as sfb
-        from facs_spark.sketch.hashing import int64_key_matrix as km
         bf = sfb(bc.value)
         for batch in iterator:
-            keys = km(batch["probe_key"].to_numpy())
             yield pd.DataFrame({
                 "l_returnflag": batch["l_returnflag"],
-                "is_member": bf.contains_batch(keys)})
+                "is_member": bf.contains_values(batch["probe_key"])})
 
     ensure_shipped(spark)
     probed = probes.mapInPandas(probe_kernel,

@@ -35,15 +35,10 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import splitmix64
+from .hashing import key_hash_batch, splitmix64
 
 _MAGIC = b"FSAM"
 _HDR = struct.Struct("<IIQQ")  # r, c, seed, total
-
-
-def _key_hash(values) -> np.ndarray:
-    from .hashing import key_hash_batch
-    return key_hash_batch(values, 0)
 
 
 @dataclass
@@ -77,10 +72,9 @@ class AmsF2:
 
     # -- update ------------------------------------------------------
     def update_batch(self, values, weights=None) -> None:
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return
-        h = _key_hash(values).astype(np.uint64)
+        h = key_hash_batch(values)
         if weights is None:
             w = np.ones(h.size, dtype=np.int64)
         else:

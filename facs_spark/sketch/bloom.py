@@ -8,18 +8,21 @@ Semantics reproduced from the reference (studied, not ported):
   lookup8 ``hash3`` masked to 36 bits and m prime
   (``facs/bloom.c:163-168``, ``facs/lookup8.c:548-554``);
 * keys are lowercased before hashing on both build and probe sides
-  (``facs/bloom.c:111-135``, ``facs/tool.c:128``) — normalization is
-  the caller's job here (kernels lowercase whole pages in one
-  vectorized pass);
+  (``facs/bloom.c:111-135``, ``facs/tool.c:128``): column values go
+  through ``update_batch`` / ``contains_values``, which share one
+  encoding (``hashing.raw_key_matrices``); k-gram callers lowercase
+  whole pages in one vectorized pass and use the key-matrix API;
 * ``inserts`` counts only *novel* keys — an add that found every bit
   already set does not bump it (``facs/bloom.c:121-135``);
 * membership may false-positive, never false-negative.
 
 What the reference does one key at a time in C, ``add_batch`` /
 ``contains_batch`` do for a whole Arrow batch of fixed-length k-gram
-windows in a handful of numpy ops.  ``merge`` (bitwise OR) is the
-associative combine the reference lacks — it is what makes the build
-distributable across Spark partitions.
+windows in a handful of numpy ops; ``update_batch`` /
+``contains_values`` do it for a column of raw values (the sketch
+protocol every other sketch implements).  ``merge`` (bitwise OR) is
+the associative combine the reference lacks — it is what makes the
+build distributable across Spark partitions.
 """
 
 from __future__ import annotations
@@ -30,7 +33,8 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, unframe
-from .hashing import FACS_SEEDS, _MASK36, hash3_lanes, pack_lanes, splitmix64
+from .hashing import (FACS_SEEDS, _MASK36, hash3_lanes, pack_lanes,
+                      raw_key_matrices, splitmix64)
 from .sizing import BloomStat, bloom_fpr, facs_sizing, standard_sizing
 
 _MAGIC = b"FSBL"
@@ -185,7 +189,23 @@ class BloomFilter:
         self.inserts += n_novel
         return n_novel
 
+    def update_batch(self, values) -> int:
+        """Insert a column of raw values (ints as 8-byte little-endian
+        keys, strings ASCII-lowercased; ``raw_key_matrices``); returns
+        # novel keys."""
+        return sum(self.add_batch(mat) for _idx, mat in
+                   raw_key_matrices(values))
+
     # -- probe -------------------------------------------------------
+    def contains_values(self, values) -> np.ndarray:
+        """Boolean membership of a column of raw values, through the
+        same encoding as ``update_batch`` (a float NaN is never a
+        member)."""
+        out = np.zeros(len(values), dtype=bool)
+        for idx, mat in raw_key_matrices(values):
+            out[idx] = self.contains_batch(mat)
+        return out
+
     def contains_batch(self, keys: np.ndarray,
                        cache: dict | None = None) -> np.ndarray:
         """Boolean membership for an (n, L) uint8 key matrix.

@@ -34,17 +34,12 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import splitmix64
+from .hashing import key_hash_batch, splitmix64
 
 _MAGIC = b"FSCB"
 _HDR = struct.Struct("<QIQBB")  # m, k, inserts, saturated, underflowed
 
 _MAX = np.uint16(65535)
-
-
-def _key_hash(values) -> np.ndarray:
-    from .hashing import key_hash_batch
-    return key_hash_batch(values, 0)
 
 
 @dataclass
@@ -90,10 +85,9 @@ class CountingBloom:
 
     # -- update ------------------------------------------------------
     def add_batch(self, values) -> None:
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return
-        h = _key_hash(values).astype(np.uint64)
+        h = key_hash_batch(values)
         # dedupe the batch so one key adds each counter once, however
         # many times it repeats in the batch (multiset-insensitive
         # membership, like the plain Bloom)
@@ -108,10 +102,9 @@ class CountingBloom:
         self.inserts += int(h.size)
 
     def remove_batch(self, values) -> None:
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return
-        h = np.unique(_key_hash(values).astype(np.uint64))
+        h = np.unique(key_hash_batch(values))
         wide = self.counters.astype(np.int64)
         for fn in range(self.k):
             np.subtract.at(wide, self._idx(h, fn), 1)
@@ -127,10 +120,9 @@ class CountingBloom:
 
     # -- query -------------------------------------------------------
     def contains_batch(self, values) -> np.ndarray:
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return np.zeros(0, dtype=bool)
-        h = _key_hash(values).astype(np.uint64)
+        h = key_hash_batch(values)
         out = np.ones(h.size, dtype=bool)
         for fn in range(self.k):
             out &= self.counters[self._idx(h, fn)] > 0

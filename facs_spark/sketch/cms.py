@@ -22,15 +22,10 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import splitmix64
+from .hashing import key_hash_batch, splitmix64
 
 _MAGIC = b"FSCM"
 _HDR = struct.Struct("<IIQ")  # d, w, total
-
-
-def _key_hash(values) -> np.ndarray:
-    from .hashing import key_hash_batch
-    return key_hash_batch(values, 0)
 
 
 @dataclass
@@ -61,10 +56,9 @@ class CountMinSketch:
 
     # -- update ------------------------------------------------------
     def update_batch(self, values, weights=None) -> None:
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return
-        h = _key_hash(values)
+        h = key_hash_batch(values)
         if weights is None:
             w = np.ones(h.size, dtype=np.int64)
         else:
@@ -76,10 +70,9 @@ class CountMinSketch:
     # -- query -------------------------------------------------------
     def query_batch(self, values) -> np.ndarray:
         """Point estimates (min over rows) for a batch of keys."""
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return np.zeros(0, dtype=np.int64)
-        h = _key_hash(values)
+        h = key_hash_batch(values)
         est = np.full(h.size, np.iinfo(np.int64).max, dtype=np.int64)
         for row in range(self.d):
             np.minimum(est, self.table[row, self._row_cols(h, row)], out=est)

@@ -38,15 +38,10 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import splitmix64
+from .hashing import key_hash_batch, splitmix64
 
 _MAGIC = b"FSCS"
 _HDR = struct.Struct("<IIQQ")  # r, c, seed, total
-
-
-def _key_hash(values) -> np.ndarray:
-    from .hashing import key_hash_batch
-    return key_hash_batch(values, 0)
 
 
 @dataclass
@@ -89,10 +84,9 @@ class CountSketch:
 
     # -- update ------------------------------------------------------
     def update_batch(self, values, weights=None) -> None:
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return
-        h = _key_hash(values).astype(np.uint64)
+        h = key_hash_batch(values)
         if weights is None:
             w = np.ones(h.size, dtype=np.int64)
         else:
@@ -115,10 +109,9 @@ class CountSketch:
     def estimate_batch(self, values) -> np.ndarray:
         """Unbiased frequency estimates: median over rows of
         sign·counter at each item's bucket."""
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return np.zeros(0, dtype=np.float64)
-        hu = _key_hash(values).astype(np.uint64)
+        hu = key_hash_batch(values)
         mask = np.uint64(self.c - 1)
         per_row = np.empty((self.r, hu.size), dtype=np.float64)
         for j in range(self.r):

@@ -39,16 +39,11 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import splitmix64
+from .hashing import key_hash_batch, splitmix64
 
 _MAGIC = b"FSCK"
 _HDR = struct.Struct("<QIIQQB")  # m, b, fbits, seed, inserts, full
 _MAX_KICKS = 500
-
-
-def _key_hash(values) -> np.ndarray:
-    from .hashing import key_hash_batch
-    return key_hash_batch(values, 0)
 
 
 def _swap_first(row: np.ndarray, want, put) -> bool:
@@ -109,7 +104,7 @@ class CuckooFilter:
 
     # -- hashing -----------------------------------------------------
     def _fp_and_i1(self, values) -> tuple:
-        h = _key_hash(values).astype(np.uint64)
+        h = key_hash_batch(values)
         with np.errstate(over="ignore"):
             fh = splitmix64(h ^ np.uint64(0xC2B2AE3D27D4EB4F))
         # fingerprint from an independent remix; 0 is reserved for
@@ -155,8 +150,7 @@ class CuckooFilter:
         delete removes one copy per call).  Raises if the table is at
         capacity: a membership filter that silently drops keys would
         break the no-false-negative contract."""
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return
         fp, i1 = self._fp_and_i1(values)
         i2 = self._alt(i1, fp)
@@ -174,8 +168,7 @@ class CuckooFilter:
         """Remove one stored copy per key; returns a boolean array of
         which removals found their fingerprint (False == the classic
         caller-contract violation, observable not silent)."""
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return np.zeros(0, dtype=bool)
         fp, i1 = self._fp_and_i1(values)
         i2 = self._alt(i1, fp)
@@ -191,8 +184,7 @@ class CuckooFilter:
     # -- query -------------------------------------------------------
     def contains_batch(self, values) -> np.ndarray:
         """Vectorized membership: two bucket gathers + compare."""
-        arr = np.asarray(values)
-        if arr.size == 0:
+        if len(values) == 0:
             return np.zeros(0, dtype=bool)
         fp, i1 = self._fp_and_i1(values)
         i2 = self._alt(i1, fp)

@@ -192,7 +192,7 @@ def key_hash_batch(values, seed: int = 0) -> np.ndarray:
     One copy, three sketches — divergent per-sketch copies of this
     dispatch are how float inputs crashed ``update_batch``.
     """
-    arr = np.asarray(values)
+    arr = _column(values)
     if arr.dtype.kind in "iu":
         return hash3_matrix(int64_key_matrix(arr), seed)
     if arr.dtype.kind == "f":
@@ -204,27 +204,57 @@ def key_hash_batch(values, seed: int = 0) -> np.ndarray:
         if np.isnan(f).any():
             f = np.where(np.isnan(f), np.float64("nan"), f)
         return hash3_matrix(int64_key_matrix(f.view(np.int64)), seed)
-    return hash_strings_batch(list(values), seed)
+    return hash_strings_batch(arr, seed)
+
+
+def _column(values) -> np.ndarray:
+    """A key column as one numpy array, copying nothing it need not:
+    a Series gives its own array, and a list of strings becomes an
+    object array.  ``np.asarray`` would copy such a list into a
+    fixed-width ``<U{maxlen}`` array of n x maxlen x 4 bytes, so one
+    long value would widen every slot."""
+    if hasattr(values, "to_numpy"):
+        return values.to_numpy()
+    if isinstance(values, np.ndarray):
+        return values
+    if len(values) and isinstance(values[0], str):
+        return np.array(values, dtype=object)
+    return np.asarray(values)
+
+
+def key_strings(values) -> np.ndarray:
+    """THE str form of a non-numeric key column, one value at a time:
+    NULL (None, NaN, NaT) → "", anything else ``str(v)``.  Never
+    pandas' ``astype(str)`` over a datetime column, which formats the
+    column as a whole (an all-midnight batch drops its times, one
+    fractional second pads every value), so one timestamp would read
+    differently batch to batch and a build would miss its probes."""
+    import pandas as pd
+
+    s = pd.Series(values, dtype=object)
+    return s.where(s.notna(), "").astype(str).to_numpy(dtype=object)
 
 
 def raw_key_matrices(values):
     """(indices, (n, L) uint8 matrix) pairs for a raw key column —
-    THE single build/probe encoding for raw Bloom keys, shared by the
-    sketch builder (``SketchSpec.update``) and every prober
-    (``ops/joins.bloom_key_filter``): int64-kind columns become
-    8-byte little-endian keys, strings become ascii-lowercased
+    THE single build/probe encoding for raw Bloom keys, called only by
+    ``BloomFilter.update_batch`` / ``contains_values`` (and by
+    ``token_containment_grid``, which encodes a token group once for
+    several filters): numeric columns become 8-byte little-endian
+    int64 keys (a float NaN gets no key, so no index), anything else
+    becomes its ``key_strings`` form, ascii-lowercased, in
     length-grouped byte matrices.  Build and probe MUST go through
     this one function — independent copies that drift would turn
     Bloom's zero-false-negative guarantee into silent row loss.
     """
-    vals = values.to_numpy() if hasattr(values, "to_numpy") \
-        else np.asarray(values)
-    if vals.dtype.kind in "iuf":
-        yield (np.arange(len(vals)),
-               int64_key_matrix(vals.astype(np.int64)))
+    vals = _column(values)
+    if vals.dtype.kind in "iu":
+        yield np.arange(len(vals)), int64_key_matrix(vals)
+    elif vals.dtype.kind == "f":
+        idx = np.flatnonzero(~np.isnan(vals))
+        yield idx, int64_key_matrix(vals[idx].astype(np.int64))
     else:
-        enc = [ascii_lower(("" if v is None else str(v)).encode("utf-8"))
-               for v in vals]
+        enc = [ascii_lower(v.encode("utf-8")) for v in key_strings(vals)]
         yield from length_group_matrices(enc)
 
 

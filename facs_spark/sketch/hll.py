@@ -19,7 +19,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import splitmix64
+from .hashing import key_hash_batch, splitmix64
 
 _MAGIC = b"FSHL"
 _HDR = struct.Struct("<B")
@@ -89,8 +89,7 @@ class HyperLogLog:
     def update_batch(self, values) -> None:
         """Hash + update a batch of ints, floats, or strings (the
         shared ``key_hash_batch`` dispatch)."""
-        from .hashing import key_hash_batch
-        self.update_hashed(splitmix64(key_hash_batch(values, 0)))
+        self.update_hashed(splitmix64(key_hash_batch(values)))
 
     # -- estimate ----------------------------------------------------
     def estimate(self) -> float:

@@ -34,18 +34,13 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, unframe
-from .hashing import splitmix64
+from .hashing import key_hash_batch, splitmix64
 
 _MAGIC = b"FSTH"
 _VERSION = 1
 _HDR = struct.Struct("<IQQ")  # k, theta_bits (0 ⇒ 2^64 exact), n_retained
 _FULL64 = float(1 << 64)
 _EXACT = 0  # sentinel for theta = 1.0 (2^64 doesn't fit in u64)
-
-
-def _hash_values(values) -> np.ndarray:
-    from .hashing import key_hash_batch
-    return splitmix64(key_hash_batch(values, 0))
 
 
 @dataclass
@@ -96,7 +91,7 @@ class ThetaSketch:
                    self.theta_bits)
 
     def update_batch(self, values) -> None:
-        self.update_hashed(_hash_values(values))
+        self.update_hashed(splitmix64(key_hash_batch(values)))
 
     # -- algebra -----------------------------------------------------
     def _min_theta_bits(self, other: "ThetaSketch") -> int:

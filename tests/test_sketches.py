@@ -13,7 +13,8 @@ from facs_spark.sketch import (AmsF2, BloomFilter, CountingBloom,
                                find_close_prime, is_prime, sketch_from_bytes,
                                standard_sizing)
 from facs_spark.sketch.bloom import _tags
-from facs_spark.sketch.hashing import FACS_SEEDS, pack_lanes, splitmix64
+from facs_spark.sketch.hashing import (FACS_SEEDS, ascii_lower, pack_lanes,
+                                       splitmix64)
 from test_hashing import hash3_scalar
 
 rng = np.random.default_rng(7)
@@ -134,6 +135,121 @@ def test_bloom_add_and_contains_match_naive_per_key(width):
     members = set(batch_a) | set(batch_b)
     assert all(g for g, k in zip(got, probes) if k in members)
     assert not got.all()
+
+
+def _raw_key(v) -> bytes:
+    """Naive raw-value key: an int's 8-byte little-endian form, any
+    other value the ASCII-lowercased UTF-8 of its str (None → "")."""
+    if isinstance(v, (int, np.integer)):
+        return int(v).to_bytes(8, "little", signed=True)
+    return ascii_lower(("" if v is None else str(v)).encode("utf-8"))
+
+
+def _one_key(key: bytes) -> np.ndarray:
+    return np.frombuffer(key, dtype=np.uint8).reshape(1, len(key))
+
+
+@pytest.mark.parametrize("case", ["int64", "int32", "float_nan", "strings",
+                                  "tokens"])
+def test_bloom_values_match_naive_per_value_keys(case):
+    """``update_batch`` (through ``SketchSpec.update``, the build) and
+    ``contains_values`` (the probe) equal a filter fed one naive key
+    per value through ``add_batch``."""
+    import pandas as pd
+
+    from facs_spark.ops.sketch_agg import SketchSpec
+    r = np.random.default_rng(3)
+    prep = "raw"
+    if case == "int64":
+        series = pd.Series(r.integers(-2**62, 2**62, 400))
+        members = series.tolist()
+    elif case == "int32":
+        series = pd.Series(r.integers(-2**31, 2**31 - 1, 400, dtype=np.int32))
+        members = series.tolist()
+    elif case == "float_nan":
+        series = pd.Series([1.0, np.nan, -7.0, 3e9, np.nan])
+        members = [1, -7, 3_000_000_000]
+    elif case == "strings":
+        series = pd.Series(["Alpha", None, "ALPHA", "", "Ünïcode É",
+                            "ab\x00", "mixed Case 42"]
+                           + [f"Key-{i}" for i in range(200)])
+        members = series.tolist()
+    else:
+        prep = "tokens"
+        series = pd.Series(["The quick  Brown", None, "", "fox THE fox",
+                            "naïve Ünicode token\x00"])
+        members = [t for s in series if s for t in s.split(" ") if t]
+    spec = SketchSpec.make("bloom", "c", prep=prep, capacity=500,
+                           error_rate=0.01)
+    bf = spec.new_sketch()
+    spec.update(bf, series)
+    ref = spec.new_sketch()
+    for v in members:
+        ref.add_batch(_one_key(_raw_key(v)))
+    assert bf.vector.tobytes() == ref.vector.tobytes()
+    assert bf.contains_values(members).all()
+    extra = ([7, -8, 2**40] if isinstance(members[0], int)
+             else ["zz-not-a-key", "KEY-1", "key-999"])
+    probes = pd.Series(members + extra)
+    assert bf.contains_values(probes).tolist() == [
+        bool(ref.contains_batch(_one_key(_raw_key(v)))[0]) for v in probes]
+    if case == "float_nan":  # a NaN gets no key: never a member
+        assert bf.contains_values(series).tolist() == [True, False, True,
+                                                       True, False]
+
+
+def test_bloom_timestamp_keys_read_the_same_in_any_batch():
+    """A datetime column encodes one value at a time: pandas formats a
+    whole datetime column by what its batch holds (an all-midnight
+    batch drops the time, a fractional second pads every value), so a
+    timestamp built in one batch must still be found from another, and
+    from the numpy slice the SQL readers pass."""
+    import pandas as pd
+
+    from facs_spark.ops.sketch_agg import SketchSpec
+    midnight = pd.Series(pd.to_datetime(
+        ["2020-01-01", "2020-01-02", "2020-01-03"]))
+    mixed = pd.Series(pd.to_datetime(
+        ["2020-02-01 00:00:01.5", "2020-02-01 00:00:01", "2020-02-02"],
+        format="ISO8601"))
+    spec = SketchSpec.make("bloom", "ts", capacity=100, error_rate=1e-6)
+    bf = spec.new_sketch()
+    spec.update(bf, midnight)
+    spec.update(bf, mixed)
+    ref = spec.new_sketch()
+    for v in [*midnight, *mixed]:
+        ref.add_batch(_one_key(_raw_key(v)))
+    assert bf.vector.tobytes() == ref.vector.tobytes()
+    probe = pd.concat([mixed, midnight, pd.Series([pd.NaT])],
+                      ignore_index=True)
+    want = [True] * 6 + [False]
+    assert bf.contains_values(probe).tolist() == want
+    assert bf.contains_values(probe.to_numpy()).tolist() == want
+    assert not bf.contains_values(pd.Series(pd.to_datetime(
+        ["2020-01-01 00:00:00.5", "2021-01-01"], format="ISO8601"))).any()
+
+
+def test_string_key_lists_make_no_fixed_width_copy():
+    """A list of strings is read as an object array: a fixed-width
+    numpy copy takes n x maxlen x 4 bytes, so one long value widens
+    every slot (here 500 x 20,000 x 4 = 40 MB)."""
+    import tracemalloc
+
+    import pandas  # noqa: F401 -- its first import is not what is measured
+
+    vals = [f"k{i}" for i in range(499)] + ["x" * 20_000]
+    bf = BloomFilter.create(1000, error_rate=0.01)
+    hll, cms = HyperLogLog(p=10), CountMinSketch()
+    tracemalloc.start()
+    try:
+        bf.update_batch(vals)
+        hll.update_batch(vals)
+        cms.update_batch(vals)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert peak < 4_000_000, peak
+    assert bf.contains_values(vals).all()
 
 
 def _unsplitmix(z: int) -> int:

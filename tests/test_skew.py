@@ -74,6 +74,33 @@ def test_bloom_prejoin_string_keys(spark):
         sorted(map(tuple, want.collect()))
 
 
+def test_bloom_joins_timestamp_keys(spark):
+    """Timestamp keys encode one value at a time on both sides, so a
+    build of all-midnight batches (which pandas would format as bare
+    dates) finds its keys in probe batches that mix midnights with
+    whole and fractional seconds (which pandas would pad)."""
+    import pandas as pd
+
+    from facs_spark.ops.joins import bloom_anti_join, bloom_prejoin
+    days = pd.date_range("2020-01-01", periods=20, freq="D")
+    build = spark.createDataFrame(pd.DataFrame({
+        "ts": days[::2], "name": [f"d{i}" for i in range(10)]}))
+    probe_ts = (list(days) + list(days + pd.Timedelta(seconds=1))
+                + list(days + pd.Timedelta(milliseconds=1500)))
+    probe = spark.createDataFrame(pd.DataFrame({
+        "ts": probe_ts, "v": list(range(len(probe_ts)))}))
+    got = bloom_prejoin(probe, build, "ts", error_rate=1e-6)
+    want = probe.join(build, "ts")
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+    assert want.count() == 10
+    anti = bloom_anti_join(probe, build, "ts", error_rate=1e-6)
+    plain = probe.join(build.select("ts"), "ts", "left_anti")
+    assert sorted(r["v"] for r in anti.collect()) == \
+        sorted(r["v"] for r in plain.collect())
+    assert plain.count() == 50
+
+
 def test_bloom_key_filter_banked(spark):
     """The pre-join filter and the flag column accept banked payloads
     (the >1 GiB broadcast path, forced small here) and give the same

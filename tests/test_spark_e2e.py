@@ -247,6 +247,107 @@ def test_sql_registered_sketch_functions(spark, docs):
     assert hit is True and miss is False
 
 
+def _blob_view(spark, name, blobs):
+    rows = [(i, None if b is None else bytearray(b))
+            for i, b in enumerate(blobs)]
+    spark.createDataFrame(rows, "f int, s binary") \
+        .createOrReplaceTempView(name)
+
+
+def test_sql_bloom_contains_uses_the_build_encoding(spark):
+    """SQL ``bloom_contains`` probes a raw Bloom with the build's key
+    encoding: every member of an int-keyed filter over ``spark.range``
+    is found, a disjoint range stays within the FPR, and string keys
+    match whatever their ASCII case."""
+    from facs_spark.functions import register_sql_functions
+    register_sql_functions(spark)
+    ids = spark.range(2000)
+    bf, _ = build_sketch(ids, SketchSpec.make("bloom", "id", capacity=2000,
+                                              error_rate=0.01))
+    _blob_view(spark, "int_bloom", [bf.to_bytes()])
+    spark.range(2000).createOrReplaceTempView("members")
+    spark.range(10**6, 10**6 + 2000).createOrReplaceTempView("aliens")
+    count = ("SELECT count_if(bloom_contains(f.s, k.id)) AS n "
+             "FROM {} k CROSS JOIN int_bloom f")
+    assert spark.sql(count.format("members")).collect()[0]["n"] == 2000
+    fp = spark.sql(count.format("aliens")).collect()[0]["n"]
+    assert fp <= 3 * 0.01 * 2000 + 10
+    words = spark.range(500).select(
+        F.concat(F.lit("Key-"), F.col("id").cast("string")).alias("w"))
+    sbf, _ = build_sketch(words, SketchSpec.make("bloom", "w", capacity=500,
+                                                 error_rate=0.01))
+    _blob_view(spark, "str_bloom", [sbf.to_bytes()])
+    got = spark.sql(
+        "SELECT count_if(bloom_contains(f.s, upper(concat('key-', k.id)))) "
+        "AS n FROM (SELECT id FROM range(500)) k CROSS JOIN str_bloom f"
+    ).collect()[0]["n"]
+    assert got == 500
+
+
+def test_sql_readers_answer_each_row_from_its_own_blob(spark):
+    """One Arrow batch holding rows of two distinct blobs: every row's
+    answer equals the driver-side answer of its own blob, for a keyed
+    reader (2 Blooms × keys) and for ``kll_quantile`` with a different
+    q per row."""
+    from facs_spark.functions import register_sql_functions
+    from facs_spark.sketch import KLL
+    register_sql_functions(spark)
+    filters = []
+    for lo in (0, 300):
+        bf = BloomFilter.create(1000, error_rate=0.01)
+        bf.update_batch(np.arange(lo, lo + 400))
+        filters.append(bf)
+    _blob_view(spark, "two_blooms", [b.to_bytes() for b in filters])
+    # COALESCE(1) below the reader: one partition, so one Arrow batch
+    rows = spark.sql(
+        "SELECT f, id, bloom_contains(s, id) AS hit FROM ("
+        "  SELECT /*+ COALESCE(1) */ f.f, f.s, k.id FROM range(800) k "
+        "  CROSS JOIN two_blooms f)").collect()
+    assert len(rows) == 1600
+    for r in rows:
+        assert r["hit"] == bool(filters[r["f"]].contains_values([r["id"]])[0])
+    assert {r["hit"] for r in rows if r["f"] == 0 and r["id"] < 300} == {True}
+    assert sum(r["hit"] for r in rows if r["f"] == 1 and r["id"] < 300) < 30
+    sketches = []
+    for scale in (1.0, 100.0):
+        kll = KLL(k=200)
+        kll.update_batch(np.arange(1, 1001, dtype=np.float64) * scale)
+        sketches.append(kll)
+    _blob_view(spark, "two_klls", [s.to_bytes() for s in sketches])
+    rows = spark.sql(
+        "SELECT f, q, kll_quantile(s, q) AS v FROM ("
+        "  SELECT /*+ COALESCE(1) */ f.f, f.s, q.id / 20.0 AS q "
+        "  FROM range(21) q CROSS JOIN two_klls f)").collect()
+    assert len(rows) == 42 and len({r["v"] for r in rows}) > 21
+    for r in rows:
+        assert r["v"] == sketches[r["f"]].quantile(float(r["q"]))
+
+
+def test_sql_reader_null_blob_reads_null(spark):
+    """A NULL blob (e.g. an unmatched LEFT JOIN group) reads NULL in a
+    one-blob reader and in ``theta_intersect``; the real blob's row
+    keeps its answer."""
+    from facs_spark.functions import register_sql_functions
+    from facs_spark.sketch import HyperLogLog, ThetaSketch
+    register_sql_functions(spark)
+    hll = HyperLogLog(p=12)
+    hll.update_batch(np.arange(100))
+    _blob_view(spark, "hll_or_null", [None, hll.to_bytes()])
+    got = spark.sql("SELECT f, hll_estimate(s) AS e FROM hll_or_null "
+                    "ORDER BY f").collect()
+    assert [r["e"] for r in got] == [None, hll.estimate()]
+    a, b = ThetaSketch(), ThetaSketch()
+    a.update_batch(np.arange(100))
+    b.update_batch(np.arange(50, 200))
+    spark.createDataFrame(
+        [(0, bytearray(a.to_bytes()), None),
+         (1, bytearray(a.to_bytes()), bytearray(b.to_bytes()))],
+        "f int, x binary, y binary").createOrReplaceTempView("theta_or_null")
+    got = spark.sql("SELECT f, theta_intersect(x, y) AS i FROM theta_or_null "
+                    "ORDER BY f").collect()
+    assert [r["i"] for r in got] == [None, 50.0]
+
+
 def test_run_pipeline_job(spark, tmp_path):
     """The spark-submit job driver: split checkpoints, resume, output."""
     import subprocess, sys, json, os
