@@ -45,15 +45,13 @@ def as_string_array(texts) -> pa.Array:
     return pa.array(texts, pa.string())
 
 
-def encode_batch(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Normalize + UTF-8 encode a batch into (buffer, offsets, lengths).
+def utf8_batch(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """UTF-8 encode a batch into a writable (buffer, offsets, lengths).
 
     The Arrow string array's own offsets and UTF-8 data buffer are
     read in place (32- or 64-bit offsets, any slice); a NULL page has
-    length 0.  ``offsets[d]`` is page d's start in ``buffer``.  The one
-    copy is the writable buffer that lowercasing needs: ASCII-only, one
-    vectorized pass — exactly the reference's per-byte C ``tolower``
-    (``normal_lower``, facs/bloom.c:111-119).
+    length 0.  ``offsets[d]`` is page d's start in ``buffer``, and
+    the buffer is the one copy.
     """
     arr = as_string_array(texts)
     n = len(arr)
@@ -68,6 +66,16 @@ def encode_batch(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     offsets -= lo
     buf = (np.frombuffer(data, dtype=np.uint8, count=hi - lo, offset=lo).copy()
            if hi > lo else np.empty(0, dtype=np.uint8))
+    return buf, offsets, lengths
+
+
+def encode_batch(texts) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Normalize + UTF-8 encode a batch into (buffer, offsets, lengths)
+    (``utf8_batch``), lowercased in place: ASCII-only, one vectorized
+    pass — exactly the reference's per-byte C ``tolower``
+    (``normal_lower``, facs/bloom.c:111-119).
+    """
+    buf, offsets, lengths = utf8_batch(texts)
     if buf.size:
         upper = (buf >= 65) & (buf <= 90)  # 'A'..'Z'
         buf[upper] += 32

@@ -323,7 +323,7 @@ def token_containment_grid(docs: DataFrame, lang_col: str = "lang",
     the exact verifier can lower() identically in Spark and the DuckDB
     oracle (unicode lowercasing differs between engines; the Bloom key
     encoding is byte-level ASCII tolower for reference parity —
-    ``sketch/hashing.ascii_lower``).
+    ``kernels/shingle.encode_batch``).
 
     Output per ordered pair with non-empty exact overlap:
     ``lang_a, lang_b, distinct_a, exact_overlap, est_overlap,

@@ -33,7 +33,6 @@ from ..sketch import (AmsF2, BloomFilter, CountingBloom, CountMinSketch,
                       CountSketch, CuckooFilter, DDSketch, FrequentDirections,
                       HyperLogLog, KLL, MisraGries, MomentsSketch, TDigest,
                       ThetaSketch, merge_blobs, sketch_from_bytes)
-from ..sketch.hashing import key_strings
 
 PARTIAL_SCHEMA = ("partition_id long, rows_seen long, wall_ms double, "
                   "sketch binary")
@@ -166,13 +165,8 @@ class SketchSpec:
                 sketch.update_batch(vals.astype(np.int64))
             else:
                 sketch.update_batch(vals.astype(np.float64))
-        else:
-            vals = series.to_numpy()
-            if vals.dtype.kind in "iuf":
-                vals = vals[~np.isnan(vals)] if vals.dtype.kind == "f" else vals
-                sketch.update_batch(vals.astype(np.int64))
-            else:
-                sketch.update_batch(key_strings(series))
+        else:  # a keyed sketch: ``hashing.key_column`` makes the keys
+            sketch.update_batch(series)
         return n
 
 

@@ -72,13 +72,11 @@ class AmsF2:
 
     # -- update ------------------------------------------------------
     def update_batch(self, values, weights=None) -> None:
-        if len(values) == 0:
-            return
-        h = key_hash_batch(values)
+        idx, h = key_hash_batch(values)
         if weights is None:
             w = np.ones(h.size, dtype=np.int64)
         else:
-            w = np.asarray(weights, dtype=np.int64)
+            w = np.asarray(weights, dtype=np.int64)[idx]
         self.total += int(w.sum())
         # z is linear in the multiset, so collapse the batch to unique
         # hashes with net weights first (tokens repeat heavily), then

@@ -190,20 +190,24 @@ class BloomFilter:
         return n_novel
 
     def update_batch(self, values) -> int:
-        """Insert a column of raw values (ints as 8-byte little-endian
-        keys, strings ASCII-lowercased; ``raw_key_matrices``); returns
-        # novel keys."""
+        """Insert a column of raw values (``hashing.key_column`` keys:
+        ints as 8-byte little-endian keys, strings ASCII-lowercased;
+        ``raw_key_matrices``); returns # novel keys."""
         return sum(self.add_batch(mat) for _idx, mat in
                    raw_key_matrices(values))
 
     # -- probe -------------------------------------------------------
     def contains_values(self, values) -> np.ndarray:
         """Boolean membership of a column of raw values, through the
-        same encoding as ``update_batch`` (a float NaN is never a
-        member)."""
+        same encoding as ``update_batch`` (a row with no key, a float
+        NaN, is never a member).  Distinct keys go straight to
+        ``_probe``, never into the member memo: raw keys come in many
+        widths, and the memo holds a 64K-slot table per width."""
         out = np.zeros(len(values), dtype=bool)
         for idx, mat in raw_key_matrices(values):
-            out[idx] = self.contains_batch(mat)
+            uniq, inv = self._unique_lanes(pack_lanes(mat))
+            found = self._probe(uniq, mat.shape[1])
+            out[idx] = found if inv is None else found[inv]
         return out
 
     def contains_batch(self, keys: np.ndarray,

@@ -34,7 +34,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import key_hash_batch, splitmix64
+from .hashing import key_hash_batch, splitmix64, spread
 
 _MAGIC = b"FSCB"
 _HDR = struct.Struct("<QIQBB")  # m, k, inserts, saturated, underflowed
@@ -85,13 +85,12 @@ class CountingBloom:
 
     # -- update ------------------------------------------------------
     def add_batch(self, values) -> None:
-        if len(values) == 0:
-            return
-        h = key_hash_batch(values)
         # dedupe the batch so one key adds each counter once, however
         # many times it repeats in the batch (multiset-insensitive
         # membership, like the plain Bloom)
-        h = np.unique(h)
+        h = np.unique(key_hash_batch(values)[1])
+        if h.size == 0:
+            return
         wide = self.counters.astype(np.int64)
         for fn in range(self.k):
             np.add.at(wide, self._idx(h, fn), 1)
@@ -102,9 +101,9 @@ class CountingBloom:
         self.inserts += int(h.size)
 
     def remove_batch(self, values) -> None:
-        if len(values) == 0:
+        h = np.unique(key_hash_batch(values)[1])
+        if h.size == 0:
             return
-        h = np.unique(key_hash_batch(values))
         wide = self.counters.astype(np.int64)
         for fn in range(self.k):
             np.subtract.at(wide, self._idx(h, fn), 1)
@@ -120,15 +119,14 @@ class CountingBloom:
 
     # -- query -------------------------------------------------------
     def contains_batch(self, values) -> np.ndarray:
-        if len(values) == 0:
-            return np.zeros(0, dtype=bool)
-        h = key_hash_batch(values)
-        out = np.ones(h.size, dtype=bool)
+        """Membership per row; a row with no key is absent."""
+        idx, h = key_hash_batch(values)
+        hit = np.ones(h.size, dtype=bool)
         for fn in range(self.k):
-            out &= self.counters[self._idx(h, fn)] > 0
-            if not out.any():
+            hit &= self.counters[self._idx(h, fn)] > 0
+            if not hit.any():
                 break
-        return out
+        return spread(len(values), idx, hit)
 
     def fpr(self) -> float:
         """Load-factor FPR estimate (1 − e^(−kn/m))^k, n = net inserts."""

@@ -22,7 +22,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import key_hash_batch, splitmix64
+from .hashing import key_hash_batch, splitmix64, spread
 
 _MAGIC = b"FSCM"
 _HDR = struct.Struct("<IIQ")  # d, w, total
@@ -56,27 +56,24 @@ class CountMinSketch:
 
     # -- update ------------------------------------------------------
     def update_batch(self, values, weights=None) -> None:
-        if len(values) == 0:
-            return
-        h = key_hash_batch(values)
+        idx, h = key_hash_batch(values)
         if weights is None:
             w = np.ones(h.size, dtype=np.int64)
         else:
-            w = np.asarray(weights, dtype=np.int64)
+            w = np.asarray(weights, dtype=np.int64)[idx]
         for row in range(self.d):
             np.add.at(self.table[row], self._row_cols(h, row), w)
         self.total += int(w.sum())
 
     # -- query -------------------------------------------------------
     def query_batch(self, values) -> np.ndarray:
-        """Point estimates (min over rows) for a batch of keys."""
-        if len(values) == 0:
-            return np.zeros(0, dtype=np.int64)
-        h = key_hash_batch(values)
+        """Point estimates (min over rows) for a batch of keys; a row
+        with no key reads 0."""
+        idx, h = key_hash_batch(values)
         est = np.full(h.size, np.iinfo(np.int64).max, dtype=np.int64)
         for row in range(self.d):
             np.minimum(est, self.table[row, self._row_cols(h, row)], out=est)
-        return est
+        return spread(len(values), idx, est)
 
     @property
     def error_bound(self) -> float:

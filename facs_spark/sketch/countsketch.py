@@ -38,7 +38,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import key_hash_batch, splitmix64
+from .hashing import key_hash_batch, splitmix64, spread
 
 _MAGIC = b"FSCS"
 _HDR = struct.Struct("<IIQQ")  # r, c, seed, total
@@ -84,13 +84,11 @@ class CountSketch:
 
     # -- update ------------------------------------------------------
     def update_batch(self, values, weights=None) -> None:
-        if len(values) == 0:
-            return
-        h = key_hash_batch(values)
+        idx, h = key_hash_batch(values)
         if weights is None:
             w = np.ones(h.size, dtype=np.int64)
         else:
-            w = np.asarray(weights, dtype=np.int64)
+            w = np.asarray(weights, dtype=np.int64)[idx]
         self.total += int(w.sum())
         # z is linear in the multiset: collapse the batch to unique
         # hashes with net weights (web tokens repeat heavily), then
@@ -108,10 +106,9 @@ class CountSketch:
     # -- query -------------------------------------------------------
     def estimate_batch(self, values) -> np.ndarray:
         """Unbiased frequency estimates: median over rows of
-        sign·counter at each item's bucket."""
-        if len(values) == 0:
-            return np.zeros(0, dtype=np.float64)
-        hu = key_hash_batch(values)
+        sign·counter at each item's bucket; a row with no key reads
+        0.0."""
+        idx, hu = key_hash_batch(values)
         mask = np.uint64(self.c - 1)
         per_row = np.empty((self.r, hu.size), dtype=np.float64)
         for j in range(self.r):
@@ -119,10 +116,7 @@ class CountSketch:
             b = (hj & mask).astype(np.int64)
             s = ((hj >> np.uint64(63)).astype(np.int64) << 1) - 1
             per_row[j] = s * self.z[j, b]
-        return np.median(per_row, axis=0)
-
-    def estimate(self, value) -> float:
-        return float(self.estimate_batch([value])[0])
+        return spread(len(values), idx, np.median(per_row, axis=0))
 
     def f2_estimate(self) -> float:
         """Median over rows of ``Σ z²`` — each row is a c-bucket AMS

@@ -39,7 +39,7 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, pack_counters, unframe, unpack_counters
-from .hashing import key_hash_batch, splitmix64
+from .hashing import key_hash_batch, splitmix64, spread
 
 _MAGIC = b"FSCK"
 _HDR = struct.Struct("<QIIQQB")  # m, b, fbits, seed, inserts, full
@@ -104,7 +104,8 @@ class CuckooFilter:
 
     # -- hashing -----------------------------------------------------
     def _fp_and_i1(self, values) -> tuple:
-        h = key_hash_batch(values)
+        """(rows with a key, their fingerprints, their first buckets)."""
+        idx, h = key_hash_batch(values)
         with np.errstate(over="ignore"):
             fh = splitmix64(h ^ np.uint64(0xC2B2AE3D27D4EB4F))
         # fingerprint from an independent remix; 0 is reserved for
@@ -112,7 +113,7 @@ class CuckooFilter:
         fp = (fh & np.uint64((1 << self.fbits) - 1)).astype(np.uint32)
         fp = np.where(fp == 0, np.uint32(1), fp)
         i1 = (h & np.uint64(self.m - 1)).astype(np.int64)
-        return fp, i1
+        return idx, fp, i1
 
     def _alt(self, i: np.ndarray, fp: np.ndarray) -> np.ndarray:
         """The partner bucket: i XOR h'(fp) — an involution, so
@@ -150,9 +151,7 @@ class CuckooFilter:
         delete removes one copy per call).  Raises if the table is at
         capacity: a membership filter that silently drops keys would
         break the no-false-negative contract."""
-        if len(values) == 0:
-            return
-        fp, i1 = self._fp_and_i1(values)
+        _idx, fp, i1 = self._fp_and_i1(values)
         i2 = self._alt(i1, fp)
         for j in range(fp.size):
             if not self._insert_fp(int(fp[j]), int(i1[j]), int(i2[j])):
@@ -167,33 +166,29 @@ class CuckooFilter:
     def remove_batch(self, values) -> np.ndarray:
         """Remove one stored copy per key; returns a boolean array of
         which removals found their fingerprint (False == the classic
-        caller-contract violation, observable not silent)."""
-        if len(values) == 0:
-            return np.zeros(0, dtype=bool)
-        fp, i1 = self._fp_and_i1(values)
+        caller-contract violation, observable not silent; a row with no
+        key removes nothing)."""
+        idx, fp, i1 = self._fp_and_i1(values)
         i2 = self._alt(i1, fp)
-        out = np.zeros(fp.size, dtype=bool)
+        out = np.zeros(len(values), dtype=bool)
         for j in range(fp.size):
             for i in (int(i1[j]), int(i2[j])):
                 if _swap_first(self.table[i], fp[j], 0):
                     self.inserts -= 1
-                    out[j] = True
+                    out[idx[j]] = True
                     break
         return out
 
     # -- query -------------------------------------------------------
     def contains_batch(self, values) -> np.ndarray:
-        """Vectorized membership: two bucket gathers + compare."""
-        if len(values) == 0:
-            return np.zeros(0, dtype=bool)
-        fp, i1 = self._fp_and_i1(values)
+        """Vectorized membership: two bucket gathers + compare; a row
+        with no key is absent."""
+        idx, fp, i1 = self._fp_and_i1(values)
         i2 = self._alt(i1, fp)
         fpc = fp[:, None]
-        return ((self.table[i1] == fpc).any(axis=1)
-                | (self.table[i2] == fpc).any(axis=1))
-
-    def contains(self, value) -> bool:
-        return bool(self.contains_batch([value])[0])
+        return spread(len(values), idx,
+                      (self.table[i1] == fpc).any(axis=1)
+                      | (self.table[i2] == fpc).any(axis=1))
 
     def fpp(self) -> float:
         """Upper bound on the false-positive probability: 2b/2^f."""

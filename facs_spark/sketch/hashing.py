@@ -16,11 +16,17 @@ is mod-2^64 (numpy uint64 wraparound == C unsigned overflow).
 "Fast splittable pseudorandom number generators", OOPSLA 2014 —
 public) used by the HLL / CMS / MinHash / SimHash kernels where facs
 parity is not required.
+
+``key_column`` is the one rule that turns a column of values into the
+keys of a keyed sketch; every such sketch builds and probes through it
+(``key_hash_batch`` / ``raw_key_matrices``).
 """
 
 from __future__ import annotations
 
 import numpy as np
+
+from ..kernels.shingle import encode_batch, utf8_batch, windows_at
 
 U64 = np.uint64
 _MASK36 = np.uint64(0xFFFFFFFFF)  # hash5 36-bit mask (facs/lookup8.c:552)
@@ -150,63 +156,6 @@ def int64_key_matrix(values: np.ndarray) -> np.ndarray:
     return v.view(np.uint8).reshape(-1, 8)
 
 
-_ASCII_LOWER = bytes(c + 32 if 65 <= c <= 90 else c for c in range(256))
-
-
-def ascii_lower(b: bytes) -> bytes:
-    """Byte-level ASCII tolower — THE key normalization for Bloom keys
-    (parity with the reference's per-byte C ``tolower``,
-    facs/bloom.c:111-119).  Every code path that builds or probes
-    string Bloom keys must use this, never unicode ``str.lower()``,
-    or non-ASCII uppercase would hash differently on the two sides.
-    """
-    return b.translate(_ASCII_LOWER)
-
-
-def length_group_matrices(values):
-    """Group variable-length byte strings by length → key matrices.
-
-    Yields ``(indices, (n, L) uint8 matrix)`` per distinct length, so
-    downstream kernels stay fully vectorized over ragged inputs.
-    """
-    arr = np.asarray(values, dtype=object)
-    n = len(arr)
-    if n == 0:
-        return
-    lengths = np.fromiter((len(v) for v in arr), dtype=np.int64, count=n)
-    for length in np.unique(lengths):
-        idx = np.nonzero(lengths == length)[0]
-        if length == 0:
-            yield idx, np.empty((len(idx), 0), np.uint8)
-        else:
-            buf = np.frombuffer(b"".join(arr[idx]), dtype=np.uint8)
-            yield idx, buf.reshape(len(idx), int(length))
-
-
-def key_hash_batch(values, seed: int = 0) -> np.ndarray:
-    """THE shared value→uint64 hash dispatch for the distinct/count
-    sketches (HLL, CMS, theta): int/uint columns hash their 8-byte
-    little-endian form, floats hash their IEEE-754 bit pattern (so
-    distinct floats get distinct keys instead of crashing in the
-    string path), everything else utf-8 string-hashes with None → "".
-    One copy, three sketches — divergent per-sketch copies of this
-    dispatch are how float inputs crashed ``update_batch``.
-    """
-    arr = _column(values)
-    if arr.dtype.kind in "iu":
-        return hash3_matrix(int64_key_matrix(arr), seed)
-    if arr.dtype.kind == "f":
-        # normalize before viewing bits: -0.0 + 0.0 → +0.0 (IEEE), so
-        # 0.0/-0.0 hash identically (SQL DISTINCT semantics — the
-        # oracles compare against it); NaNs collapse to one canonical
-        # bit pattern for the same reason
-        f = arr.astype(np.float64) + 0.0
-        if np.isnan(f).any():
-            f = np.where(np.isnan(f), np.float64("nan"), f)
-        return hash3_matrix(int64_key_matrix(f.view(np.int64)), seed)
-    return hash_strings_batch(arr, seed)
-
-
 def _column(values) -> np.ndarray:
     """A key column as one numpy array, copying nothing it need not:
     a Series gives its own array, and a list of strings becomes an
@@ -235,43 +184,76 @@ def key_strings(values) -> np.ndarray:
     return s.where(s.notna(), "").astype(str).to_numpy(dtype=object)
 
 
-def raw_key_matrices(values):
-    """(indices, (n, L) uint8 matrix) pairs for a raw key column —
-    THE single build/probe encoding for raw Bloom keys, called only by
-    ``BloomFilter.update_batch`` / ``contains_values`` (and by
-    ``token_containment_grid``, which encodes a token group once for
-    several filters): numeric columns become 8-byte little-endian
-    int64 keys (a float NaN gets no key, so no index), anything else
-    becomes its ``key_strings`` form, ascii-lowercased, in
-    length-grouped byte matrices.  Build and probe MUST go through
-    this one function — independent copies that drift would turn
-    Bloom's zero-false-negative guarantee into silent row loss.
+def key_column(values) -> tuple[np.ndarray, np.ndarray]:
+    """THE value -> key rule of every keyed sketch (Bloom, HLL, theta,
+    CMS, Count-Sketch, AMS, CBF, cuckoo, Misra-Gries), on the build
+    side and the probe side alike: ``(idx, keys)``, the rows that have
+    a key and their keys.
+
+    * int and uint columns: int64 keys;
+    * float columns: the int64 value, and a NaN row has no key (an int
+      column whose batch holds a NULL reaches a pandas UDF as float64,
+      and must still find the members its int64 build inserted);
+    * anything else: one ``key_strings`` string per row, NULL as "".
+
+    Build and probe MUST both come through here: two rules that drift
+    apart turn a filter's zero-false-negative guarantee into silent
+    row loss, and a counter's estimate into 0.
     """
-    vals = _column(values)
-    if vals.dtype.kind in "iu":
-        yield np.arange(len(vals)), int64_key_matrix(vals)
-    elif vals.dtype.kind == "f":
-        idx = np.flatnonzero(~np.isnan(vals))
-        yield idx, int64_key_matrix(vals[idx].astype(np.int64))
-    else:
-        enc = [ascii_lower(v.encode("utf-8")) for v in key_strings(vals)]
-        yield from length_group_matrices(enc)
+    arr = _column(values)
+    if arr.dtype.kind in "iu":
+        return np.arange(len(arr)), arr.astype(np.int64, copy=False)
+    if arr.dtype.kind == "f":
+        idx = np.flatnonzero(~np.isnan(arr))
+        return idx, arr[idx].astype(np.int64)
+    return np.arange(len(arr)), key_strings(arr)
 
 
-def hash_bytes_batch(values, seed: int) -> np.ndarray:
-    """Vectorized hash of variable-length byte strings.
-
-    Groups the batch by byte length and runs one ``hash3_matrix`` call
-    per distinct length, so there is no per-row Python hashing in the
-    hot path.  ``values``: sequence/array of ``bytes``.
-    """
-    out = np.zeros(len(values), dtype=U64)
-    for idx, mat in length_group_matrices(values):
-        out[idx] = hash3_matrix(mat, seed)
+def spread(n: int, idx: np.ndarray, answers: np.ndarray) -> np.ndarray:
+    """A probe's answers for the keyed rows ``idx`` (``key_column``)
+    spread over all ``n`` rows; a row with no key reads absent (False,
+    0 or 0.0)."""
+    out = np.zeros(n, dtype=answers.dtype)
+    out[idx] = answers
     return out
 
 
-def hash_strings_batch(values, seed: int = 0) -> np.ndarray:
-    """UTF-8 encode + length-grouped hash3 for a batch of strings."""
-    enc = [("" if v is None else v).encode("utf-8") for v in values]
-    return hash_bytes_batch(enc, seed)
+def _key_groups(keys: np.ndarray, lower: bool):
+    """(positions, (n, L) uint8 matrix) groups of a ``key_column`` key
+    array: int64 keys as one matrix of their 8-byte little-endian form;
+    strings as their UTF-8 bytes (ASCII-lowercased when ``lower``),
+    one matrix per byte length, shortest first.  The strings go through
+    one Arrow conversion, with no per-value Python loop."""
+    if keys.dtype != object:
+        yield np.arange(len(keys)), int64_key_matrix(keys)
+        return
+    buf, offsets, lengths = (encode_batch if lower else utf8_batch)(keys)
+    order = np.argsort(lengths, kind="stable")
+    for pos in np.split(order, np.flatnonzero(np.diff(lengths[order])) + 1):
+        if pos.size:
+            width = int(lengths[pos[0]])
+            yield pos, (windows_at(buf, offsets[pos], width) if width
+                        else np.empty((pos.size, 0), dtype=np.uint8))
+
+
+def key_hash_batch(values, seed: int = 0) -> tuple[np.ndarray, np.ndarray]:
+    """``(idx, hashes)``: the lookup8 hash of every ``key_column`` key,
+    the hash all the counting and distinct sketches (HLL, theta, CMS,
+    Count-Sketch, AMS, CBF, cuckoo) take their indices from; ``idx``
+    are the rows that have a key, in order."""
+    idx, keys = key_column(values)
+    out = np.empty(len(keys), dtype=U64)
+    for pos, mat in _key_groups(keys, lower=False):
+        out[pos] = hash3_matrix(mat, seed)
+    return idx, out
+
+
+def raw_key_matrices(values):
+    """(indices, (n, L) uint8 matrix) pairs for a raw key column, the
+    Bloom's build/probe encoding (``BloomFilter.update_batch`` /
+    ``contains_values``, and ``token_containment_grid``, which encodes
+    a token group once for several filters): the ``key_column`` keys,
+    strings ASCII-lowercased like the reference's keys."""
+    idx, keys = key_column(values)
+    for pos, mat in _key_groups(keys, lower=True):
+        yield idx[pos], mat

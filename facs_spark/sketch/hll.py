@@ -87,9 +87,8 @@ class HyperLogLog:
         np.maximum.at(self.registers, idx, rank)
 
     def update_batch(self, values) -> None:
-        """Hash + update a batch of ints, floats, or strings (the
-        shared ``key_hash_batch`` dispatch)."""
-        self.update_hashed(splitmix64(key_hash_batch(values)))
+        """Hash + update a column of keys (``hashing.key_column``)."""
+        self.update_hashed(splitmix64(key_hash_batch(values)[1]))
 
     # -- estimate ----------------------------------------------------
     def estimate(self) -> float:

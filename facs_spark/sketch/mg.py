@@ -36,31 +36,11 @@ from dataclasses import dataclass, field
 import numpy as np
 
 from .base import frame, unframe
+from .hashing import key_column, spread
 
 _MAGIC = b"FSMG"
 _VERSION = 1
 _HDR = struct.Struct("<IQQ")  # k, total, n_entries
-
-
-def _batch_counts(values) -> dict:
-    """Exact (key -> count) aggregation of one batch.
-
-    Keys are normalized to ``str`` (tokens/urls) or ``int`` so that a
-    key hashes identically whichever partition it arrives from.
-    """
-    import pandas as pd
-
-    s = pd.Series(values)
-    if s.empty:
-        return {}
-    vc = s.value_counts()
-    out = {}
-    for key, cnt in vc.items():
-        if isinstance(key, (np.integer, int)):
-            out[int(key)] = int(cnt)
-        else:
-            out[str(key)] = int(cnt)
-    return out
 
 
 @dataclass
@@ -79,13 +59,20 @@ class MisraGries:
 
     # -- update ------------------------------------------------------
     def update_batch(self, values, weights=None) -> None:
+        """Count a column of keys (``hashing.key_column``: an int or a
+        str, so a key reads the same from any partition), exactly per
+        batch, then shrink."""
+        import pandas as pd
+
+        idx, keys = key_column(values)
         if weights is None:
-            add = _batch_counts(values)
+            vc = pd.Series(keys).value_counts()
+            add = dict(zip(vc.index.tolist(), vc.tolist()))
         else:
             add = {}
-            for v, w in zip(values, weights):
-                key = int(v) if isinstance(v, (np.integer, int)) else str(v)
-                add[key] = add.get(key, 0) + int(w)
+            for key, w in zip(keys.tolist(),
+                              np.asarray(weights, dtype=np.int64)[idx].tolist()):
+                add[key] = add.get(key, 0) + w
         if not add:
             return
         c = self.counters
@@ -108,14 +95,14 @@ class MisraGries:
     # -- query -------------------------------------------------------
     def estimate(self, key) -> int:
         """Undercount-only point estimate (0 if untracked)."""
-        if isinstance(key, (np.integer, int)):
-            key = int(key)
-        else:
-            key = str(key)
-        return self.counters.get(key, 0)
+        return int(self.query_batch([key])[0])
 
-    def query_batch(self, keys) -> np.ndarray:
-        return np.array([self.estimate(x) for x in keys], dtype=np.int64)
+    def query_batch(self, values) -> np.ndarray:
+        """``estimate`` per row; a row with no key reads 0."""
+        idx, keys = key_column(values)
+        return spread(len(values), idx, np.array(
+            [self.counters.get(key, 0) for key in keys.tolist()],
+            dtype=np.int64))
 
     def heavy_hitters(self, threshold: int | None = None):
         """(key, est) pairs with est > threshold (default: guarantee

@@ -91,7 +91,7 @@ class ThetaSketch:
                    self.theta_bits)
 
     def update_batch(self, values) -> None:
-        self.update_hashed(splitmix64(key_hash_batch(values)))
+        self.update_hashed(splitmix64(key_hash_batch(values)[1]))
 
     # -- algebra -----------------------------------------------------
     def _min_theta_bits(self, other: "ThetaSketch") -> int:

@@ -265,7 +265,10 @@ def test_nonascii_lower_build_probe_symmetry():
     otherwise 'Ångström' would false-negative, violating the Bloom
     no-false-negative guarantee."""
     from facs_spark.kernels.shingle import encode_batch
-    from facs_spark.sketch.hashing import ascii_lower
+
+    def ascii_lower(b: bytes) -> bytes:
+        return bytes(c + 32 if 65 <= c <= 90 else c for c in b)
+
     text = "Ångström UNITS mixed ÅÄÖ tail"
     k = 6
     bf = BloomFilter.create(capacity=1000, error_rate=1e-6, k_mer=k)

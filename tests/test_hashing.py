@@ -7,8 +7,7 @@ from numpy.lib.stride_tricks import sliding_window_view
 
 from facs_spark.sketch import BloomFilter
 from facs_spark.sketch.hashing import (FACS_SEEDS, hash3_lanes, hash3_matrix,
-                                       hash_bytes_batch,
-                                       hash_strings_batch, int64_key_matrix,
+                                       int64_key_matrix, key_hash_batch,
                                        pack_lanes, splitmix64)
 
 rng = np.random.default_rng(42)
@@ -121,18 +120,20 @@ def test_hash5_mask_36_bits():
         assert (int(byte_idx[i]), int(spot[i])) == (p >> 3, 1 << (p & 7))
 
 
-def test_hash_bytes_batch_groups_by_length():
-    vals = [b"a", b"abc", b"a", b"longer-key-here", b"abc", b""]
-    out = hash_bytes_batch(vals, 5)
+def test_key_hash_batch_groups_by_length():
+    vals = ["a", "abc", "a", "longer-key-here", "abc", ""]
+    idx, out = key_hash_batch(vals, 5)
+    assert idx.tolist() == list(range(len(vals)))
     for v, h in zip(vals, out):
-        assert int(h) == hash3_scalar(v, 5)
+        assert int(h) == hash3_scalar(v.encode(), 5)
     assert out[0] == out[2] and out[1] == out[4]
 
 
-def test_hash_strings_unicode():
+def test_key_hash_batch_unicode():
     vals = ["héllo", "wörld", "héllo", None]
-    out = hash_strings_batch(vals, 0)
+    _idx, out = key_hash_batch(vals, 0)
     assert out[0] == out[2]
+    assert int(out[1]) == hash3_scalar("wörld".encode(), 0)
     assert int(out[3]) == hash3_scalar(b"", 0)
 
 

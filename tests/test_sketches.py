@@ -13,8 +13,7 @@ from facs_spark.sketch import (AmsF2, BloomFilter, CountingBloom,
                                find_close_prime, is_prime, sketch_from_bytes,
                                standard_sizing)
 from facs_spark.sketch.bloom import _tags
-from facs_spark.sketch.hashing import (FACS_SEEDS, ascii_lower, pack_lanes,
-                                       splitmix64)
+from facs_spark.sketch.hashing import FACS_SEEDS, pack_lanes, splitmix64
 from test_hashing import hash3_scalar
 
 rng = np.random.default_rng(7)
@@ -137,12 +136,16 @@ def test_bloom_add_and_contains_match_naive_per_key(width):
     assert not got.all()
 
 
+_ASCII_LOWER = bytes(c + 32 if 65 <= c <= 90 else c for c in range(256))
+
+
 def _raw_key(v) -> bytes:
     """Naive raw-value key: an int's 8-byte little-endian form, any
     other value the ASCII-lowercased UTF-8 of its str (None → "")."""
     if isinstance(v, (int, np.integer)):
         return int(v).to_bytes(8, "little", signed=True)
-    return ascii_lower(("" if v is None else str(v)).encode("utf-8"))
+    return ("" if v is None else str(v)).encode("utf-8").translate(
+        _ASCII_LOWER)
 
 
 def _one_key(key: bytes) -> np.ndarray:
@@ -227,6 +230,82 @@ def test_bloom_timestamp_keys_read_the_same_in_any_batch():
     assert bf.contains_values(probe.to_numpy()).tolist() == want
     assert not bf.contains_values(pd.Series(pd.to_datetime(
         ["2020-01-01 00:00:00.5", "2021-01-01"], format="ISO8601"))).any()
+
+
+# kind -> the per-key probe a SQL reader calls (no entry: no point probe)
+_KEY_PROBES = {"cms": "query_batch", "cs": "estimate_batch",
+               "cbf": "contains_batch", "cuckoo": "contains_batch",
+               "mg": "query_batch", "bloom": "contains_values"}
+
+
+@pytest.mark.parametrize("column", ["int64", "string", "timestamp"])
+@pytest.mark.parametrize("kind", ["hll", "theta", "cms", "cs", "ams", "cbf",
+                                  "cuckoo", "mg", "bloom"])
+def test_keyed_sketches_read_a_key_the_same_beside_a_null(kind, column):
+    """Every keyed sketch reads a key the same on its build side and
+    its probe side, whatever the column's dtype on either side.  The
+    build is ``SketchSpec.update`` over a clean column; the probe gets
+    the same values beside a NULL, as pandas hands them to a UDF: an
+    int column becomes float64 with NaN, strings stay object with
+    None, timestamps stay datetime64 with NaT.  Members answer as in
+    the clean probe; a numeric NULL has no key (absent), and a string
+    or timestamp NULL is the key "" (a member of the string build).
+    Sketches with no point probe
+    (HLL, theta, AMS) fed the NULL-holding column directly equal the
+    spec build."""
+    import pandas as pd
+
+    from facs_spark.ops.sketch_agg import SketchSpec
+    clean = {"int64": pd.Series(np.arange(100, dtype=np.int64)),
+             "string": pd.Series([f"Key-{i}" for i in range(99)] + [""]),
+             "timestamp": pd.Series(pd.date_range("2020-01-01", periods=100,
+                                                  freq="37min"))}[column]
+    beside = pd.Series([*clean, None])
+    assert beside.dtype == {"int64": np.float64, "string": object,
+                            "timestamp": "datetime64[ns]"}[column]
+    params = {"cbf": {"capacity": 1000}, "cuckoo": {"capacity": 1000},
+              "bloom": {"capacity": 1000, "error_rate": 1e-6},
+              "mg": {"k": 256}}.get(kind, {})
+    spec = SketchSpec.make(kind, "c", **params)
+    sk = spec.new_sketch()
+    spec.update(sk, clean)
+    null_key = [] if column == "int64" else [""]
+    if kind not in _KEY_PROBES:
+        fed = spec.new_sketch()
+        fed.update_batch(beside)
+        ref = spec.new_sketch()
+        spec.update(ref, clean)
+        spec.update(ref, pd.Series(null_key, dtype=object))
+        assert fed.to_bytes() == ref.to_bytes()
+        return
+    probe = getattr(sk, _KEY_PROBES[kind])
+    want = probe(clean)
+    assert (want > 0).all()
+    null_reads = probe(pd.Series(null_key, dtype=object))[0] if null_key else 0
+    for got in (probe(beside), probe(beside.to_numpy())):
+        assert got[:100].tolist() == want.tolist()
+        assert got[100] == null_reads
+
+
+def test_bloom_contains_values_memory_stays_bounded_for_wide_keys():
+    """``contains_values`` probes raw keys without the member memo,
+    whose 64K-slot table per key width reserves (ceil(L/8) + 1) x 512 KiB
+    for every width L: here ~80 widths and one 20,000-byte key."""
+    import tracemalloc
+
+    import pandas  # noqa: F401 -- its first import is not what is measured
+
+    vals = [f"{i}-" + "x" * (i % 80) for i in range(500)] + ["y" * 20_000]
+    bf = BloomFilter.create(1000, error_rate=0.01)
+    bf.update_batch(vals)
+    tracemalloc.start()
+    try:
+        found = bf.contains_values(vals)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert found.all()
+    assert peak < 32 << 20, peak
 
 
 def test_string_key_lists_make_no_fixed_width_copy():

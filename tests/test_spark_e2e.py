@@ -284,6 +284,39 @@ def test_sql_bloom_contains_uses_the_build_encoding(spark):
     assert got == 500
 
 
+def test_sql_keyed_readers_find_int_members_beside_a_null_key(spark):
+    """A NULL in an int key column reaches a reader's Arrow batch as
+    float64: every keyed reader over a ``spark.range(100)`` blob still
+    finds all 100 members, and the NULL row reads absent.  A
+    timestamp-keyed ``cms_count`` finds its members too."""
+    from facs_spark.functions import register_sql_functions
+    register_sql_functions(spark)
+    specs = {"cms_count": SketchSpec.make("cms", "id"),
+             "cbf_contains": SketchSpec.make("cbf", "id", capacity=1000),
+             "cuckoo_contains": SketchSpec.make("cuckoo", "id",
+                                                capacity=1000),
+             "cs_estimate": SketchSpec.make("cs", "id"),
+             "mg_estimate": SketchSpec.make("mg", "id", k=256)}
+    # COALESCE(1) below the reader: the NULL row shares the members'
+    # one Arrow batch
+    probe = ("SELECT k, {fn}(s, k) AS v FROM ("
+             "  SELECT /*+ COALESCE(1) */ f.s, k.k FROM "
+             "  (SELECT {key} AS k FROM range(100) "
+             "   UNION ALL SELECT NULL) k CROSS JOIN keyed f)")
+    for fn, spec in specs.items():
+        sk, _ = build_sketch(spark.range(100), spec)
+        _blob_view(spark, "keyed", [sk.to_bytes()])
+        rows = spark.sql(probe.format(fn=fn, key="id")).collect()
+        assert sorted(r["k"] for r in rows if r["v"]) == list(range(100)), fn
+        assert [bool(r["v"]) for r in rows if r["k"] is None] == [False], fn
+    ts = "timestamp_seconds(id * 3600)"
+    sk, _ = build_sketch(spark.range(100).select(F.expr(ts).alias("ts")),
+                         SketchSpec.make("cms", "ts"))
+    _blob_view(spark, "keyed", [sk.to_bytes()])
+    rows = spark.sql(probe.format(fn="cms_count", key=ts)).collect()
+    assert sum(1 for r in rows if r["k"] is not None and r["v"]) == 100
+
+
 def test_sql_readers_answer_each_row_from_its_own_blob(spark):
     """One Arrow batch holding rows of two distinct blobs: every row's
     answer equals the driver-side answer of its own blob, for a keyed
